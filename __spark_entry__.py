@@ -25,15 +25,14 @@ from variant_load_pipeline_spark import queries as Q  # noqa: E402
 
 def entry(spark: SparkSession) -> DataFrame:
     """Flagship: the VariantLoad3 slice — synthesized variants with full
-    zygosity annotation + genic status at sf0.001.  Genic status uses the
-    single-pass bucket-probe (broadcast (chrom, bin) -> interval arrays +
-    `exists`), the same operator the batch and streaming load plans share."""
+    zygosity annotation + genic status at sf0.001.  Genic status comes from
+    `plans.load.attach_genic_status`, the single bucket-probe (broadcast
+    (chrom, bin) -> interval arrays + `exists`) that the load plans, J2 and
+    GenicStatusFixUp all use."""
     sf_dir = "/root/testdata/sf0.001"
     from pyspark.sql import functions as F
 
-    from variant_load_pipeline_spark.streaming.variants import (
-        genic_status_bucketed,
-    )
+    from variant_load_pipeline_spark.plans.load import attach_genic_status
 
     v = Q.zygosity_snv(spark, sf_dir)
     g = Q._gene_cols(Q.load(spark, sf_dir, "part")).select(
@@ -41,9 +40,7 @@ def entry(spark: SparkSession) -> DataFrame:
         F.col("gstart").alias("start_pos"),
         F.col("gstop").alias("stop_pos"),
     )
-    return genic_status_bucketed(
-        v, g, chrom_col="chrom", pos_col="pos"
-    )
+    return attach_genic_status(v, g, chrom_col="chrom", pos_col="pos")
 
 
 def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:

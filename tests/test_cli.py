@@ -429,6 +429,30 @@ def test_cli_module_subprocess(tmp_path):
     assert rows == [("1", 10, 0.1), ("1", 15, 0.2)]
 
 
+def test_cli_module_file_registers_every_tool():
+    """`python -m variant_load_pipeline_spark.cli` runs cli.py as __main__:
+    tools registered below main() must still be valid choices.  `--help`
+    exits while parsing, before any SparkSession starts."""
+    import os
+    import subprocess
+    import sys
+
+    root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    r = subprocess.run(
+        [
+            sys.executable, "-m", "variant_load_pipeline_spark.cli",
+            "--tool", "GenicStatusFixUp", "--help",
+        ],
+        env={**os.environ, "PYTHONPATH": root},
+        capture_output=True,
+        text=True,
+        timeout=120,
+    )
+    assert r.returncode == 0, r.stderr[-2000:]
+    assert "GenicStatusFixUp" in r.stdout
+    assert "SparkContext" not in r.stderr and "log level" not in r.stderr
+
+
 def test_cli_vcf8col_converter_rejects_ac_alt_mismatch(spark, tmp_path):
     """Malformed AC (length != ALT count) must fail loudly (the reference
     Java crashes on the index mismatch), never silently misalign counts."""

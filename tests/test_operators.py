@@ -256,26 +256,6 @@ def test_lsh_topk_recall(spark):
     assert hits >= 3  # recall >= 60% on this easy instance
 
 
-def test_salted_join_matches_plain_join(spark):
-    from variant_load_pipeline_spark.operators.interval_join import salted_join
-
-    left = spark.createDataFrame(
-        [("1", i) for i in range(50)] + [("2", 99)], ["chrom", "v"]
-    )
-    right = spark.createDataFrame(
-        [("1", "geneA"), ("2", "geneB"), ("3", "geneC")], ["chrom", "g"]
-    )
-    got = sorted(
-        (r["chrom"], r["v"], r["g"])
-        for r in salted_join(left, right, ["chrom"]).collect()
-    )
-    exp = sorted(
-        (r["chrom"], r["v"], r["g"])
-        for r in left.join(right, ["chrom"]).collect()
-    )
-    assert got == exp and len(got) == 51
-
-
 def test_cosine_topk_pandas_matches_expression(spark):
     from variant_load_pipeline_spark.operators import similarity as sim
 

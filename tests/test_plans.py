@@ -159,6 +159,46 @@ def test_load_upsert_against_existing(spark, tmp_path):
     assert all(r["id_source"] == "new" for p, r in ann.items() if p != 100)
 
 
+def test_empty_store_allocates_like_no_store(spark, tmp_path):
+    """An empty store (same schema, zero rows) has max(rgd_id) NULL, so it
+    allocates exactly as ``existing=None``: ids 1..n, all 'new'."""
+    store_schema = (
+        "rgd_id long, start_pos long, end_pos long, chromosome string,"
+        " ref_nuc string, variant_type string, var_nuc string"
+    )
+    empty = spark.createDataFrame([], store_schema)
+    key = ["chromosome", "start_pos", "end_pos", "ref_nuc", "var_nuc"]
+
+    def ids(df):
+        return {
+            tuple(r[k] for k in key): (r["rgd_id"], r["id_source"])
+            for r in df.collect()
+        }
+
+    cf2_df = convert.convert_vcf_to_cf2(spark, _write_vcf(tmp_path)).filter(
+        F.col("strain") == "S1"
+    ).drop("strain")
+    sample = load.SampleInfo(sample_id=42, gender="F", map_key=1)
+    v = load.derive_variants(cf2_df, sample)
+    incoming = spark.createDataFrame(
+        [("1", 100, 101, "A", "G", "snv"), ("1", 100, 103, "AC", None, "del"),
+         ("2", 300, 301, "T", "C", "snv"), ("1", 90, 91, "G", "T", "snv")],
+        "chromosome string, start_pos long, end_pos long, ref_nuc string,"
+        " var_nuc string, variant_type string",
+    )
+    for fresh, against_empty in (
+        (load.assign_ids(v, None), load.assign_ids(v, empty)),
+        (
+            load.run_reload_from_db(incoming, None, sample)["_ids"],
+            load.run_reload_from_db(incoming, empty, sample)["_ids"],
+        ),
+    ):
+        got = ids(fresh)
+        assert ids(against_empty) == got
+        assert sorted(i for i, _ in got.values()) == list(range(1, len(got) + 1))
+        assert {src for _, src in got.values()} == {"new"}
+
+
 def test_genotype_counts(spark, tmp_path):
     # surviving lines: pos 100, 201, 400, 500 (150 multi-allelic, 300 chrUn)
     out = convert.genotype_counts(spark, _write_vcf(tmp_path)).collect()

@@ -339,35 +339,64 @@ def test_variant_load_stream_matches_batch(spark, tmp_path):
     q.stop()
 
 
-def test_genic_status_bucketed_matches_batch_join(spark):
-    """The bucket-probe genic operator agrees with the semi/anti-join batch
-    form on a position sweep crossing bin boundaries."""
-    from variant_load_pipeline_spark.plans.load import attach_genic_status
-    from variant_load_pipeline_spark.streaming.variants import (
-        genic_status_bucketed,
-    )
+def _genic_reference(variants, genes, use_status):
+    """Brute-force containment: GENIC iff some (ACTIVE) gene on the same
+    chromosome has start <= pos <= stop; NULLs never match."""
+    return {
+        vid: "GENIC"
+        if chrom is not None and pos is not None and any(
+            g_chrom == chrom and g_start <= pos <= g_stop
+            and (not use_status or status == "ACTIVE")
+            for g_chrom, g_start, g_stop, status in genes
+        )
+        else "INTERGENIC"
+        for vid, chrom, pos in variants
+    }
 
-    genes = spark.createDataFrame(
-        [(1, "1", 99_990, 100_020, 1, "ACTIVE"),  # straddles a 100k bin edge
-         (2, "1", 250_000, 260_000, 1, "ACTIVE")],
-        ["gene_rgd_id", "chromosome", "start_pos", "stop_pos", "map_key",
-         "object_status"],
+
+def test_genic_status_matches_brute_force_containment(spark):
+    """The bucket probe (the only genic-status code) agrees with a
+    brute-force scan of every gene on bin edges, multi-bin and overlapping
+    genes, INACTIVE genes, NULL keys and a gene-less chromosome — with and
+    without an object_status column."""
+    from variant_load_pipeline_spark.plans.load import attach_genic_status
+
+    genes = [
+        ("1", 99_990, 100_020, "ACTIVE"),     # straddles the 100 kb bin edge
+        ("1", 100_010, 100_100, "ACTIVE"),    # overlaps the gene above
+        ("1", 150_000, 420_000, "ACTIVE"),    # spans bins 1..4
+        ("1", 600_000, 650_000, "INACTIVE"),
+        ("2", 5, 50, "ACTIVE"),
+    ]
+    positions = [
+        1, 99_989, 99_990, 99_999, 100_000, 100_001, 100_020, 100_050,
+        100_100, 100_101, 149_999, 150_000, 199_999, 200_000, 300_000,
+        400_000, 420_000, 420_001, 600_000, 625_000, 650_000, 650_001,
+    ]
+    variants = [(i, "1", p) for i, p in enumerate(positions)]
+    variants += [
+        (100, "2", 5), (101, "2", 51),
+        (102, "1", None),       # NULL position
+        (103, None, 100_000),   # NULL chromosome
+        (104, "7", 100_000),    # chromosome with no genes
+    ]
+    v = spark.createDataFrame(variants, "vid int, chr string, position long")
+    gdf = spark.createDataFrame(
+        genes,
+        "chromosome string, start_pos long, stop_pos long, object_status string",
     )
-    v = spark.createDataFrame(
-        [("1", p) for p in
-         [99_989, 99_990, 100_000, 100_020, 100_021, 255_000, 1]],
-        ["chr", "position"],
-    )
-    a = {
-        r["position"]: r["genic_status"]
-        for r in genic_status_bucketed(v, genes).collect()
-    }
-    b = {
-        r["position"]: r["genic_status"]
-        for r in attach_genic_status(v, genes).collect()
-    }
-    assert a == b
-    assert a[99_990] == "GENIC" and a[99_989] == "INTERGENIC"
+    for use_status, g in ((True, gdf), (False, gdf.drop("object_status"))):
+        got = {
+            r["vid"]: r["genic_status"]
+            for r in attach_genic_status(v, g).collect()
+        }
+        assert got == _genic_reference(variants, genes, use_status), use_status
+    # the cases are not vacuous: both outcomes and the INACTIVE switch occur
+    ref = _genic_reference(variants, genes, True)
+    assert ref[4] == "GENIC" and ref[1] == "INTERGENIC"     # 100_000 / 99_989
+    assert ref[14] == "GENIC"                               # 300_000, mid-gene
+    assert ref[19] == "INTERGENIC"                          # inside INACTIVE
+    assert _genic_reference(variants, genes, False)[19] == "GENIC"
 
 
 def _mk_asof_events(spark):

@@ -1061,41 +1061,20 @@ def main(argv: list[str] | None = None, spark: SparkSession | None = None) -> No
     TOOLS[args.tool](spark, args)
 
 
-if __name__ == "__main__":
-    main()
-
-
 @tool("GenicStatusFixUp")
 def _genic_status_fixup(spark, args) -> None:
     """fixup/GenicStatusFixUp.java:60-109: re-derive GENIC/INTERGENIC from
     the gene model and report up-to-date vs fixed counts."""
-    from .operators.interval_join import point_in_interval_join
+    from .plans.load import attach_genic_status
 
-    df = _read(spark, args.variants)
-    genes = _read(spark, args.genes)
-    if "object_status" in genes.columns:
-        genes = genes.filter(F.col("object_status") == "ACTIVE")
-    g = genes.select(
-        F.col("chromosome").alias("g_chrom"),
-        F.col("start_pos").alias("g_start"),
-        F.col("stop_pos").alias("g_stop"),
+    # keep the stored value apart: the probe writes its own genic_status
+    df = _read(spark, args.variants).withColumnRenamed(
+        "genic_status", "stored_genic_status"
     )
-    kw = dict(
-        point_chrom="chromosome",
-        point_pos="start_pos",
-        ivl_chrom="g_chrom",
-        ivl_start="g_start",
-        ivl_end="g_stop",
-        strategy="binned",
+    probed = attach_genic_status(
+        df, _read(spark, args.genes), chrom_col="chromosome", pos_col="start_pos"
     )
-    genic = point_in_interval_join(df, g, how="left_semi", **kw).withColumn(
-        "recomputed", F.lit("GENIC")
-    )
-    inter = point_in_interval_join(df, g, how="left_anti", **kw).withColumn(
-        "recomputed", F.lit("INTERGENIC")
-    )
-    both = genic.unionByName(inter)
-    report = _fixup_report(both, "genic_status", F.col("recomputed"))
+    report = _fixup_report(probed, "stored_genic_status", F.col("genic_status"))
     report.write.mode("overwrite").parquet(args.out)
 
 
@@ -1379,3 +1358,7 @@ def _corpus_classify(spark, args) -> None:
         .alias("kept"),
     )
     out.write.mode("overwrite").parquet(args.out)
+
+
+if __name__ == "__main__":
+    main()

@@ -157,25 +157,6 @@ def allele_read_count(ad_array: Column, alleles: Column, allele: Column) -> Colu
     return F.when(idx > 0, F.element_at(ad_array, idx.cast("int"))).otherwise(F.lit(0))
 
 
-def acgt_counts(ad_array: Column, alleles: Column) -> dict[str, Column]:
-    """count_a/c/g/t = read count of that literal allele (0 if absent).
-
-    Parity: VcfToCommonFormat2Converter.java:294-297.
-    """
-    return {
-        f"count_{b.lower()}": F.coalesce(
-            allele_read_count(ad_array, alleles, F.lit(b)), F.lit(0)
-        )
-        for b in "ACGT"
-    }
-
-
-# -- C9: 8-col refNuc depth imputation --------------------------------------
-def ref_depth_imputed(dp: Column, ac_array: Column) -> Column:
-    """depth_ref = DP - sum(AC); parity Vcf8ColToCommonFormat2Converter.java:175-200."""
-    return dp - F.aggregate(ac_array, F.lit(0), lambda acc, x: acc + x)
-
-
 # -- C12: reverse complement ------------------------------------------------
 def reverse_complement(seq: Column) -> Column:
     """Reverse + A<->T, C<->G (case-normalized to upper); N/?/./- pass through.

@@ -153,31 +153,3 @@ def interval_overlap_join(
     # drop helper bins and the duplicated chrom column from the right
     return joined.drop("__bin")
 
-
-def salted_join(
-    left: DataFrame,
-    right: DataFrame,
-    keys: list[str],
-    how: str = "inner",
-    salt_buckets: int = 16,
-) -> DataFrame:
-    """Skew-resistant equi join: salt the (large, skewed) left side with a
-    deterministic per-row bucket and explode the right side across all
-    buckets, so one hot key spreads over ``salt_buckets`` tasks.
-
-    AQE's skew-join split handles most cases at runtime; this is the static
-    fallback for keys so hot (chr1 vs chrMT-scale imbalance) that even split
-    sub-partitions overwhelm a task, or for engines/paths where AQE cannot
-    re-plan (e.g. inside a streaming micro-batch join).  Deterministic salt
-    (hash of all columns) keeps reruns stable.  Row multiplication is on the
-    RIGHT side only — keep the smaller side right.
-    """
-    lsalt = left.withColumn(
-        "__salt", F.pmod(F.hash(*[F.col(c) for c in left.columns]), salt_buckets)
-    )
-    rsalt = right.withColumn(
-        "__salt",
-        F.explode(F.sequence(F.lit(0), F.lit(salt_buckets - 1))),
-    )
-    out = lsalt.join(rsalt, [*keys, "__salt"], how)
-    return out.drop("__salt")

@@ -170,15 +170,6 @@ def _hyperplanes(dim: int, n_planes: int, seed: int = 7) -> list[list[float]]:
     return planes
 
 
-def lsh_bucket(vec: Column, planes: list[list[float]]) -> Column:
-    """Sign-bit bucket id for one LSH table."""
-    bucket: Column = F.lit(0).cast("long")
-    for i, p in enumerate(planes):
-        proj = dot(vec, F.array(*[F.lit(float(x)) for x in p]))
-        bucket = bucket + F.when(proj >= 0, F.lit(1 << i).cast("long")).otherwise(0)
-    return bucket
-
-
 def _planes_sql(planes: list[list[float]]) -> str:
     """All hyperplanes as ONE array<array<double>> SQL literal string.
 

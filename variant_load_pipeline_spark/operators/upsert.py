@@ -15,6 +15,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from .windows import bucketed_row_number
+
 VARIANT_6KEY = [
     "start_pos",
     "end_pos",
@@ -27,43 +29,34 @@ VARIANT_6KEY = [
 _CASE_INSENSITIVE = {"ref_nuc", "var_nuc"}
 
 
-def dedup_upsert(
-    incoming: DataFrame,
-    existing: DataFrame,
-    keys: list[str] | None = None,
-    id_col: str = "rgd_id",
-    id_offset: int | None = None,
-    case_insensitive: set[str] | None = None,
-) -> DataFrame:
-    """Assign ids: reuse the existing id on 6-key match, else allocate a new
-    deterministic id ``offset + row_number`` ordered by the natural key.
+def dedup_upsert(incoming: DataFrame, existing: DataFrame | None) -> DataFrame:
+    """Assign ``rgd_id``: reuse the store's id on a 6-key match, else
+    allocate a new deterministic id ``offset + rank``, ranked by
+    (chromosome, 6-key); ``id_source`` says which ('reused' | 'new').
 
-    ``existing`` must carry ``id_col``; ``id_offset`` defaults to
-    max(existing id) so new ids never collide (the Oracle-sequence analog).
-    Null-safe equality (``eqNullSafe``) mirrors the reference's null-tolerant
-    compare in the ClinVar variant (VariantRatLoaderFromDb.java:220-250).
+    This is the only id allocator.  The offset is max(store id) + 1 — the
+    Oracle-sequence analog — so an empty store, whose max is NULL, and
+    ``existing=None`` (no store: no join, no job) both allocate from 1.
+    Null-safe equality (``eqNullSafe``) mirrors the reference's
+    null-tolerant compare in the ClinVar variant
+    (VariantRatLoaderFromDb.java:220-250).
     """
-    keys = keys or VARIANT_6KEY
-    ci = _CASE_INSENSITIVE if case_insensitive is None else case_insensitive
-
-    if id_offset is None:
-        id_offset_row = existing.agg(F.max(id_col)).collect()[0][0]
-        id_offset = (id_offset_row or 0) + 1
+    if existing is None:
+        return _fresh_ids(incoming, 1)
+    id_offset = (existing.agg(F.max("rgd_id")).collect()[0][0] or 0) + 1
 
     e = existing.select(
-        *[F.col(k).alias(f"__e_{k}") for k in keys],
-        F.col(id_col).alias("__existing_id"),
-    ).dropDuplicates([f"__e_{k}" for k in keys])
+        *[F.col(k).alias(f"__e_{k}") for k in VARIANT_6KEY],
+        F.col("rgd_id").alias("__existing_id"),
+    ).dropDuplicates([f"__e_{k}" for k in VARIANT_6KEY])
 
     cond = None
-    for k in keys:
+    for k in VARIANT_6KEY:
         l, r = F.col(k), F.col(f"__e_{k}")
-        if k in ci:
+        if k in _CASE_INSENSITIVE:
             l, r = F.upper(l), F.upper(r)
         c = l.eqNullSafe(r)
         cond = c if cond is None else (cond & c)
-
-    from .windows import bucketed_row_number
 
     # lazy localCheckpoint, not persist(): both id branches reuse the join
     # result, and the checkpoint's RDD blocks are reference-tracked — the
@@ -75,22 +68,26 @@ def dedup_upsert(
     # outputs immediately after, keeping the exposure window small.
     matched = incoming.join(e, cond, "left").localCheckpoint(eager=False)
     reused = matched.filter(F.col("__existing_id").isNotNull()).withColumn(
-        id_col, F.col("__existing_id").cast("long")
+        "rgd_id", F.col("__existing_id").cast("long")
     ).withColumn("id_source", F.lit("reused"))
-    # new ids: deterministic chromosome-major rank — the per-chromosome
-    # row_number + tiny cumulative-offset table replaces a global sort
-    # (allocation order is (chromosome, *keys); ids stay arbitrary-but-
-    # deterministic, correctness always compares natural keys)
-    fresh = bucketed_row_number(
-        matched.filter(F.col("__existing_id").isNull()),
-        order_keys=keys,
-        bucket="chromosome",
-    )
-    fresh = fresh.withColumn(
-        id_col, (F.lit(id_offset) + F.col("__rank") - 1).cast("long")
-    ).withColumn("id_source", F.lit("new")).drop("__rank")
+    fresh = _fresh_ids(matched.filter(F.col("__existing_id").isNull()), id_offset)
     out = reused.unionByName(fresh)
-    return out.drop("__existing_id", *[f"__e_{k}" for k in keys])
+    return out.drop("__existing_id", *[f"__e_{k}" for k in VARIANT_6KEY])
+
+
+def _fresh_ids(rows: DataFrame, id_offset: int) -> DataFrame:
+    """New ids from ``id_offset``: a deterministic chromosome-major rank —
+    the per-chromosome row_number + tiny cumulative-offset table replaces a
+    global sort (ids stay arbitrary-but-deterministic; correctness always
+    compares natural keys)."""
+    ranked = bucketed_row_number(rows, order_keys=VARIANT_6KEY, bucket="chromosome")
+    return (
+        ranked.withColumn(
+            "rgd_id", (F.lit(id_offset) + F.col("__rank") - 1).cast("long")
+        )
+        .withColumn("id_source", F.lit("new"))
+        .drop("__rank")
+    )
 
 
 def insert_if_not_exists(

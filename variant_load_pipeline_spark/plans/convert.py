@@ -224,7 +224,3 @@ def genotype_counts(
     ).otherwise(F.col("sample_value"))
     return df.groupBy("strain", gt.alias("genotype")).count()
 
-
-def variant_counts(cf2: DataFrame) -> DataFrame:
-    """A2: per strain and per strain x chr counts in one cube."""
-    return cf2.cube("strain", "chr").count()

@@ -5,13 +5,13 @@ accumulation + JDBC batches (VariantLoad3.java:178-589):
 
     read_cf2 -> allele validation (F4) -> derive type/end/quality (C1-C4)
     -> zygosity columns (C10/C11) -> zero-called filter (F8)
-    -> genic status via binned interval join (J1/J2)
-    -> dedup-upsert ids against the existing store (J4)
+    -> genic status: one broadcast (chromosome, bin) bucket probe (J2)
+    -> dedup-upsert ids against the existing store, or fresh ids (J4)
     -> project VARIANT / VARIANT_MAP_DATA / VARIANT_SAMPLE_DETAIL
 
-Scale: the only shuffles are the id-allocation window and the (broadcast or
-binned) gene join; everything else is narrow.  Partition the store by
-(map_key, chromosome) on write so per-assembly loads prune.
+Scale: the only shuffles are the upsert join and the id-allocation window;
+the gene model is broadcast and everything else is narrow.  Partition the
+store by (map_key, chromosome) on write so per-assembly loads prune.
 """
 
 from __future__ import annotations
@@ -23,6 +23,7 @@ from pyspark.sql import functions as F
 
 from ..functions import scalar
 from ..functions import zygosity as Z
+from ..operators.interval_join import DEFAULT_BIN
 from ..operators.upsert import dedup_upsert
 
 
@@ -129,21 +130,56 @@ def derive_variants(
 
 
 def attach_genic_status(
-    variants: DataFrame, genes: DataFrame, strategy: str = "binned"
+    variants: DataFrame,
+    genes: DataFrame,
+    chrom_col: str = "chr",
+    pos_col: str = "position",
 ) -> DataFrame:
     """J2: point-in-interval probe against ACTIVE gene intervals ->
-    GENIC/INTERGENIC (VariantLoad3.java:682-692 via GeneCache).
+    ``genic_status`` GENIC/INTERGENIC (VariantLoad3.java:682-692 via
+    GeneCache; GenicStatusFixUp reuses the same probe).  ``genes`` carries
+    chromosome/start_pos/stop_pos and optionally object_status.
 
-    Physical form: ONE left join against the broadcast (chromosome, bin) ->
-    interval-array table plus an `exists` containment probe — a single pass
-    over the variants instead of the semi/anti pair (which scans twice and
-    unions), and the same operator works on streaming frames (stream-static
-    anti joins are unsupported).  Equivalence to the semi/anti form is
-    pinned by tests/test_streaming.py::test_genic_status_bucketed_matches_batch_join.
+    The only genic-status code: the gene model collapses to one broadcast
+    row per (chromosome, 100 kb bin) carrying that bin's interval array; a
+    variant joins at most one bucket row (a left join on a unique key, so
+    no row multiplication) and tests containment with ``F.exists``.  One
+    pass, no semi/anti pair, and streaming-safe (stream-static anti joins
+    are unsupported).  A NULL position or chromosome, or a chromosome with
+    no genes, finds no bucket and is INTERGENIC.
     """
-    from ..streaming.variants import genic_status_bucketed
-
-    return genic_status_bucketed(variants, genes)
+    g = genes
+    if "object_status" in g.columns:
+        g = g.filter(F.col("object_status") == "ACTIVE")
+    gb = (
+        g.select(
+            F.col("chromosome").alias("g_chrom"),
+            F.col("start_pos").alias("g_start"),
+            F.col("stop_pos").alias("g_stop"),
+        )
+        .withColumn(
+            "g_bin",
+            F.explode(
+                F.sequence(
+                    F.floor(F.col("g_start") / DEFAULT_BIN),
+                    F.floor(F.col("g_stop") / DEFAULT_BIN),
+                )
+            ),
+        )
+        .groupBy("g_chrom", "g_bin")
+        .agg(F.collect_list(F.struct("g_start", "g_stop")).alias("ivls"))
+    )
+    v = variants.withColumn("__bin", F.floor(F.col(pos_col) / DEFAULT_BIN))
+    joined = v.join(
+        F.broadcast(gb),
+        (F.col(chrom_col) == F.col("g_chrom")) & (F.col("__bin") == F.col("g_bin")),
+        "left",
+    )
+    pos = F.col(pos_col)
+    hit = F.exists("ivls", lambda i: (i["g_start"] <= pos) & (i["g_stop"] >= pos))
+    return joined.withColumn(
+        "genic_status", F.when(hit, F.lit("GENIC")).otherwise(F.lit("INTERGENIC"))
+    ).drop("__bin", "g_chrom", "g_bin", "ivls")
 
 
 def assign_ids(variants: DataFrame, existing: DataFrame | None) -> DataFrame:
@@ -152,20 +188,6 @@ def assign_ids(variants: DataFrame, existing: DataFrame | None) -> DataFrame:
     v = variants.withColumnRenamed("chr", "chromosome").withColumnRenamed(
         "position", "start_pos"
     )
-    if existing is None or len(existing.take(1)) == 0:
-        from ..operators.windows import bucketed_row_number
-
-        # chromosome-major deterministic ids, no single-partition sort
-        out = bucketed_row_number(
-            v,
-            order_keys=["start_pos", "ref_nuc", "var_nuc", "sample_id"],
-            bucket="chromosome",
-        )
-        return (
-            out.withColumn("rgd_id", F.col("__rank"))
-            .drop("__rank")
-            .withColumn("id_source", F.lit("new"))
-        )
     return dedup_upsert(v, existing)
 
 
@@ -327,21 +349,7 @@ def run_reload_from_db(
     if "padding_base" not in df.columns:
         df = df.withColumn("padding_base", F.lit(None).cast("string"))
 
-    if existing is None or len(existing.take(1)) == 0:
-        from ..operators.windows import bucketed_row_number
-
-        ids = bucketed_row_number(
-            df,
-            order_keys=["start_pos", "end_pos", "ref_nuc", "var_nuc"],
-            bucket="chromosome",
-        )
-        ids = (
-            ids.withColumn("rgd_id", F.col("__rank"))
-            .drop("__rank")
-            .withColumn("id_source", F.lit("new"))
-        )
-    else:
-        ids = dedup_upsert(df, existing)
+    ids = dedup_upsert(df, existing)
 
     # only unmatched rows are inserted into variant/variant_map_data
     # (varBatch collects id==0 rows only, :145-155); sample detail takes

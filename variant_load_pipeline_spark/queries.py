@@ -363,28 +363,22 @@ def j1_interval_overlap(spark: SparkSession, sf_dir: str) -> DataFrame:
         FROM v
     ) GROUP BY status
     """,
-    doc="J2: point-in-interval genic status via left semi probe (GeneCache analog)",
+    doc="J2: point-in-interval genic status via the broadcast bucket probe (GeneCache analog)",
 )
 def j2_genic_status(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from .operators.interval_join import point_in_interval_join
+    from .plans.load import attach_genic_status
 
     v = _variant_cols(load(spark, sf_dir, "lineitem")).transform(spread)
-    g = _gene_cols(load(spark, sf_dir, "part")).withColumnRenamed("chrom", "gchrom")
-    kw = dict(
-        point_chrom="chrom",
-        point_pos="pos",
-        ivl_chrom="gchrom",
-        ivl_start="gstart",
-        ivl_end="gstop",
-        strategy="binned",
+    g = _gene_cols(load(spark, sf_dir, "part")).select(
+        F.col("chrom").alias("chromosome"),
+        F.col("gstart").alias("start_pos"),
+        F.col("gstop").alias("stop_pos"),
     )
-    hit = point_in_interval_join(v, g, how="left_semi", **kw).select(
-        F.lit("GENIC").alias("status")
+    return (
+        attach_genic_status(v, g, chrom_col="chrom", pos_col="pos")
+        .groupBy(F.col("genic_status").alias("status"))
+        .agg(F.count(F.lit(1)).alias("n"))
     )
-    miss = point_in_interval_join(v, g, how="left_anti", **kw).select(
-        F.lit("INTERGENIC").alias("status")
-    )
-    return hit.unionByName(miss).groupBy("status").agg(F.count(F.lit(1)).alias("n"))
 
 
 # ===========================================================================

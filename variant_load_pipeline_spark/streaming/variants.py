@@ -2,76 +2,18 @@
 unbounded CF2 input (capability extension: the reference is batch-only, but
 an ingest pipeline at 100 TB wants variants annotated as files land).
 
-The scalar/zygosity stage (`plans.load.derive_variants`) is already pure
-narrow operations, so it runs on a streaming frame unchanged.  Genic status
-needs a redesign: the batch form is a semi/anti join pair and stream-static
-ANTI joins are not supported — instead the gene model becomes a broadcast
-(chromosome, bin) -> interval-array table and each variant row probes its
-single bucket with `F.exists` (one left join against a unique key: no row
-multiplication, no anti join, streaming- and batch-safe).
+Both stages run on a streaming frame unchanged: the scalar/zygosity stage
+(`plans.load.derive_variants`) is pure narrow operations, and genic status
+(`plans.load.attach_genic_status`) is one left join against a broadcast
+(chromosome, bin) -> interval-array table plus an `F.exists` probe — no
+anti join, which stream-static joins do not support.
 """
 
 from __future__ import annotations
 
 from pyspark.sql import DataFrame
-from pyspark.sql import functions as F
 
-from ..plans.load import SampleInfo, derive_variants
-
-DEFAULT_BIN = 100_000
-
-
-def genic_status_bucketed(
-    variants: DataFrame,
-    genes: DataFrame,
-    bin_size: int = DEFAULT_BIN,
-    chrom_col: str = "chr",
-    pos_col: str = "position",
-) -> DataFrame:
-    """J2 as a single bucket-probe: per (chromosome, bin) the gene model
-    collapses to one row carrying the interval array; a variant joins at
-    most one bucket row and tests containment with `F.exists` — the
-    streaming-safe (and union-free) form of the semi/anti pair."""
-    g = genes
-    if "object_status" in g.columns:
-        g = g.filter(F.col("object_status") == "ACTIVE")
-    gb = (
-        g.select(
-            F.col("chromosome").alias("g_chrom"),
-            F.col("start_pos").alias("g_start"),
-            F.col("stop_pos").alias("g_stop"),
-        )
-        .withColumn(
-            "g_bin",
-            F.explode(
-                F.sequence(
-                    F.floor(F.col("g_start") / bin_size),
-                    F.floor(F.col("g_stop") / bin_size),
-                )
-            ),
-        )
-        .groupBy("g_chrom", "g_bin")
-        .agg(
-            F.collect_list(F.struct("g_start", "g_stop")).alias("ivls")
-        )
-    )
-    v = variants.withColumn("__bin", F.floor(F.col(pos_col) / bin_size))
-    joined = v.join(
-        F.broadcast(gb),
-        (F.col(chrom_col) == F.col("g_chrom")) & (F.col("__bin") == F.col("g_bin")),
-        "left",
-    )
-    pos = F.col(pos_col)
-    hit = F.exists(
-        "ivls", lambda i: (i["g_start"] <= pos) & (i["g_stop"] >= pos)
-    )
-    return (
-        joined.withColumn(
-            "genic_status",
-            F.when(hit, F.lit("GENIC")).otherwise(F.lit("INTERGENIC")),
-        )
-        .drop("__bin", "g_chrom", "g_bin", "ivls")
-    )
+from ..plans.load import SampleInfo, attach_genic_status, derive_variants
 
 
 def variant_load_stream(
@@ -82,5 +24,4 @@ def variant_load_stream(
     Append-mode compatible (no aggregation state); id allocation stays a
     batch concern (per-micro-batch ids would not be globally deterministic).
     """
-    v = derive_variants(cf2, sample)
-    return genic_status_bucketed(v, genes)
+    return attach_genic_status(derive_variants(cf2, sample), genes)

@@ -1,31 +1,32 @@
-"""Benchmark: run the headline queries at $SPARK_GRAFT_SF_DIR (default
-/root/testdata/sf0.1) on local[$SPARK_GRAFT_CPUS] and print ONE JSON line:
-{"metric": ..., "value": total_sec, "unit": "sec", "queries": {...}, "sf": ...}
+"""Benchmark: run the registry's nine bench groups over the tables in
+$SPARK_GRAFT_SF_DIR (default `SF_DIR`, the sf0.1 test data) on
+local[$SPARK_GRAFT_CPUS] and print ONE JSON line, last on stdout.
 
-Each query is executed to completion via a `noop`-format write, which
-materializes EVERY column of EVERY row (unlike count(), which lets Catalyst
-prune unreferenced projections down to an empty-schema FileScan — under
-count(), a pure-projection query like c13_translate measured parquet
-row-counting, not codon translation).  Results are not collected to the
-driver.
+`time_query` times every query in two parts, each under its own Spark job
+group:
+* construct_s -- building the DataFrame: Python, py4j, Catalyst, and every
+  Spark job the builder starts itself (parquet schema inference, model
+  fits, store writes, checkpoint loops).  construct_jobs counts those jobs;
+* execute_s -- a `noop`-format write of the built plan, which materializes
+  every column of every row (unlike count(), which lets Catalyst prune
+  unreferenced projections down to an empty-schema scan).  Nothing is
+  collected to the driver.
 
-Each query runs REPEATS times and reports the per-query MEDIAN (total =
-sum of medians), so single-run noise (~±30% observed round-over-round)
-can't masquerade as a regression.  The plan is rebuilt from scratch every
-repeat — re-executing one DataFrame instance would skip already-computed
-shuffle map stages and time only the tail.
+A query's time is construct_s + execute_s.  Each query runs
+$SPARK_GRAFT_BENCH_REPEATS times (default 3), interleaved round-robin over
+its group so a slow phase of the host hits at most one repeat of each
+query.  Every repeat builds a fresh plan after clearCache(): re-executing
+one DataFrame would skip finished shuffle map stages, and a persist() left
+by repeat 1 would serve the later ones.  One untimed query runs first so
+JVM start-up, codegen and footer reads land on no query.
 
-r14 measurement fixes (declared; VERDICT r13 "Next round" #2/#5):
-* repeats are INTERLEAVED (round-robin across the group's queries, not
-  R back-to-back runs of each) so a multi-second host slow-phase lands
-  on at most one repeat of each query instead of all repeats of one —
-  the per-query median then rejects it.  Same protocol otherwise (fresh
-  plan + clearCache per repeat, noop sink, median of R).
-* the FULL record — including per-query MIN maps, which the one-line
-  print omits to stay inside the round driver's stdout-tail window —
-  is also written to BENCH.json in the repo root, so the next round's
-  drift bridge (and PERF comparison) has a parsable prev even if the
-  driver's captured stdout tail truncates (BENCH_r12 was lost that way).
+The record: `queries` (HEADLINE) and `queries_v2`..`queries_v9` map each
+query to its median construct_s, median execute_s, construct_jobs (of the
+median repeat) and min_s (the fastest construct + execute);
+`value`..`value_v9` are the per-group sums of median construct_s +
+median execute_s.
+
+Usage:  PYTHONPATH=. python bench.py
 """
 
 from __future__ import annotations
@@ -35,6 +36,7 @@ import os
 import statistics
 import sys
 import time
+import uuid
 
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
@@ -287,381 +289,80 @@ HEADLINE_V9 = [
     "rrf_hybrid_filtered_topk",
 ]
 
-# Drift probes: a fixed, diverse subset of the headline groups used to
-# measure HOST drift between rounds on byte-identical code.  The no-IO
-# `calib` ruler over-responds to host load relative to IO/shuffle-mixed
-# queries (measured r8->r9: calib ratio 0.76 vs 0.92 median raw ratio
-# on unchanged queries), so cross-round comparisons bridge on these
-# instead: for each probe the record carries its wall time AND the md5
-# of its query function's source — compare rounds only on probes whose
-# md5 matches (the code is byte-identical, so the ratio IS host drift),
-# then judge each group's normalized movement against that bridge.
-DRIFT_PROBES = [
-    "q1_pricing_summary",       # scan + partial agg
-    "q21_waiting_suppliers",    # multi-join + anti/semi
-    "a_grouping_sets_counts",   # grouping sets
-    "events_sessionize",        # stateful window
-    "cdc_chunk_dedup",          # text chunking
-    "countmin_heavy_hitters",   # sketch
-    "dup_span_removal",         # gram join + rewrite
-    "quality_lr_apply_persisted",  # ML chain + persisted model
-    "ivf_list_skew_report",     # tiny IVF monitor (fixed-cost floor)
-    # round-10 widening (no r9 match; bridges r10 -> r11 onward):
-    "lsh_match_probe_only",     # persisted-index probe (v5 family)
-    # round-11 widening — v2 (the largest group) previously had NO
-    # probes, and v7's steady-state rows had none either; probes are
-    # free (they reuse the group timings), so every group now has a
-    # same-shape bridge anchor:
-    "minhash_signatures",       # shingle explode + per-doc agg (v2)
-    "decontaminate",            # broadcast gram semi/anti join (v2)
-    "tfidf_top_terms",          # tokenize + term join (v2)
-    "ivf_compact_probe_only",   # post-fold steady-state probe (v7)
-    "rho_loss_selection",       # two-LM scoring chain (v8)
-    "kmv_sketch_intersection",  # sketch windows + pair joins (v8)
-    "ann_hard_negatives_probe_only",  # IVF probe + mine (v6 family)
-    "sequence_packing_tokens",  # BPE encode + window packing (v6)
-    # round-12 widening: v9 anchors (no prior match; bridge r12 -> r13
-    # onward), plus a SECOND v7 anchor — the r12 preview run showed
-    # ivf_compact_probe_only at 0.89x while its group sibling
-    # contrastive_triplets_probe_only sat in a 3x host slow-phase: one
-    # probe per family is exactly the single-probe-evidence trap
-    "kmv_overlap_probe_only",   # persisted-sketch pair probe (v9)
-    "bm25_compact_probe_only",  # folded-lexical-store probe (v9)
-    "contrastive_triplets_probe_only",  # miner probe (v7)
-]
 
-# Family assignment for probes that are NOT in any headline group (they
-# get a standalone timed run): group key -> used for that group's
-# family drift bridge.  minhash_signatures was listed as a v2 probe in
-# round 11 but never ran (it is not a v2 group member) — the standalone
-# run closes that gap.
-PROBE_FAMILY_OVERRIDE = {
-    "minhash_signatures": "value_v2",
+GROUPS = {
+    "value": HEADLINE,
+    "value_v2": HEADLINE_V2,
+    "value_v3": HEADLINE_V3,
+    "value_v4": HEADLINE_V4,
+    "value_v5": HEADLINE_V5,
+    "value_v6": HEADLINE_V6,
+    "value_v7": HEADLINE_V7,
+    "value_v8": HEADLINE_V8,
+    "value_v9": HEADLINE_V9,
 }
 
-
-# Queries whose plan CONSTRUCTION performs distributed work (the
-# connected-components localCheckpoint+count loop runs eagerly): for
-# these the timer must wrap construction too, or the measurement reads
-# only the final label write (~0.02 s for a multi-second computation).
-# For declarative queries construction is driver-side py4j expression
-# building — a per-plan constant that does not grow with data — so
-# charging it against per-query runtime would distort the scale story
-# AND break comparability with rounds <= 4; they stay execute-only.
-EAGER_CONSTRUCT = {
-    # r13 measurement fix: the chunked path's lazy localCheckpoint still
-    # materializes its upstream (interval join + variant grouping) at
-    # CONSTRUCTION under AQE (toRdd finalizes and runs the stages), so
-    # execute-only timing missed roughly half the query's real work
-    "p29_annotate_chunked",
-    # r13 measurement fix (same lazy-localCheckpoint-runs-at-construction
-    # mechanism, found by a construction-time census): these three
-    # checkpoint a multi-consumer join/group frame mid-query, so their
-    # upstream executed untimed at construction.  Warm construct/execute
-    # split measured at sf0.1: j4 2.7/1.5 s, merge 0.5/1.9 s,
-    # edit_distance 1.5/1.2 s — the old execute-only numbers undercounted
-    # by the construct share
-    "j4_dedup_upsert_ids",
-    "merge_full_upsert",
-    "edit_distance_dup_pairs",
-    "near_dup_components",
-    "near_dup_components_star",
-    "corpus_dedup_keeplist",
-    # the k-means fit loop (assign/update collects) runs at construction
-    "kmeans_embeddings",
-    "semdedup_pairs",
-    "ann_pq_adc_topk",
-    # index fit + parquet write + reload-side collects at construction
-    "ann_pq_persisted_topk",
-    "ann_ivf_persisted_topk",
-    # corpus shingle/band + index write happens at construction
-    "lsh_incremental_match",
-    # the component loop (star rounds) runs at construction
-    "leakage_safe_split",
-    # driver-side fixture render + write happens at construction
-    "jsonl_docs_scan",
-    # the greedy k-step loop (localCheckpoint per pick) runs eagerly
-    "mmr_diverse_topk",
-    # power-iteration loop localCheckpoints per round at construction
-    "pagerank_cosupply",
-    # distributed two-generation parquet write happens at construction
-    "schema_evolution_scan",
-    # per-round top-pair collect + checkpoint happens at construction
-    "bpe_learn_merges",
-    # driver-side PNG fixture encode happens at construction
-    "mm_image_dhash_pairs",
-    # driver-side WAV fixture encode happens at construction
-    "mm_audio_ahash_pairs",
-    # the split-point min/max scalar collect happens at construction
-    "rollup_incremental_refresh",
-    # first call writes the bucketed tables at construction
-    "bucketed_join_revenue",
-    # the basket-count scalar collect happens at construction
-    "item_pair_lift",
-    # the edge localCheckpoint happens at construction
-    "triangle_count_cosupply",
-    # the component loop (min-propagation rounds) runs at construction
-    "dedup_cluster_stats",
-    # both keep-lists run their component loops at construction
-    "keeplist_delta",
-    # snapshot keep-list write + new-side component loop at construction
-    "keeplist_delta_incremental",
-    # the feature-matrix localCheckpoint materializes at construction
-    "quality_lr_train",
-    "quality_lr_score",
-    # the model parquet write happens at construction
-    "lm_persisted_surprisal",
-    # IVF index write + labeled-subset LR fit run at construction
-    "rerank_quality_topk",
-    # seed index write + delta batch append run at construction
-    "ivf_ingest_append",
-    # the feature-matrix localCheckpoint materializes at construction
-    "quality_calibration_ece",
-    # the ORC store write happens at construction
-    "orc_roundtrip_scan",
-    # fit + model parquet write happen at construction
-    "quality_lr_apply_persisted",
-    # the NEW-side component loop runs at construction; the snapshot
-    # side is write-if-missing, so only the first (non-median) repeat
-    # pays the snapshot chain — the median measures refresh-only
-    "keeplist_delta_refresh_only",
-    # IVF index write + centroid collect run at construction
-    "contrastive_triplets_ivf",
-    # the manifest parquet write runs at construction
-    "epoch_shard_manifest",
-    # IVF index write + centroid collect run at construction
-    "ann_hard_negatives_ivf",
-    # IVF index write + labeled-subset fit run at construction
-    "rerank_batch_topk",
-    # seed index write + delta batch append run at construction
-    "ivf_centroid_drift_report",
-    # index is write-if-missing: only the first (non-median) repeat
-    # pays the build — the median measures the per-batch probe alone
-    "lsh_match_probe_only",
-    # seed index write + assignment + delta append run at construction
-    "ivf_assign_ingest",
-    # the k-means fit loop (assign/update collects) runs at construction
-    "cluster_balanced_sample",
-    # seed write + delta append + compaction fold run at construction
-    "ivf_compact_probe_parity",
-    # seed write + delta append + fold + centroid retrain at construction
-    "ivf_retrain_centroids",
-    # index is write-if-missing: only the first (non-median) repeat pays
-    # the build — the median measures the per-batch mining probe alone
-    "ann_hard_negatives_probe_only",
-    # the feature-matrix localCheckpoint + GD fit run at construction
-    "quality_pr_sweep",
-    # index is write-if-missing: only the first (non-median) repeat pays
-    # the build — the median measures the per-batch mining probe alone
-    "contrastive_triplets_probe_only",
-    # seed+delta+fold are write-if-missing (a _FOLDED marker gates):
-    # only the first repeat pays the lifecycle — the median measures
-    # the post-compaction batch probe alone (steady-state serving)
-    "ivf_compact_probe_only",
-    # index is write-if-missing + the probe-strategy collect runs at
-    # construction: only the first repeat pays the build — the median
-    # measures the steady-state filtered query alone
-    "ann_filtered_topk",
-    # rep index is write-if-missing: the median measures the two-stage
-    # retrieve + MaxSim re-rank alone, not the one-time build
-    "maxsim_rerank_ivf",
-    # lexical index is write-if-missing: the median measures the
-    # bucket-pruned posting probe alone, not the one-time build
-    "bm25_persisted_topk",
-    # two-LM model is write-if-missing: the median measures scoring
-    # against the reloaded model alone, not the one-time model write
-    "rho_persisted_selection",
-    # seed+append+fold are write-if-missing (_READY marker): the median
-    # measures the post-fold bucket-pruned probe alone (steady state)
-    "bm25_compact_probe_only",
-    # seed+append store is write-if-missing: the median measures the
-    # monitor scan alone (delta-vocab pruned / bucket aggregate)
-    "bm25_idf_drift_report",
-    "bm25_bucket_skew_report",
-    # sketch store is write-if-missing: the median measures the
-    # store-only pair estimation, never a corpus scan
-    "kmv_overlap_probe_only",
-    # index is write-if-missing + the strategy decision's survivor
-    # count runs at construction: the median measures the chosen
-    # branch's steady-state query alone
-    "ann_filtered_auto_topk",
-    # shares bm25_persisted_topk's write-if-missing store: the median
-    # measures the filtered bucket-pruned probe alone
-    "bm25_filtered_topk",
-    # rep index + token store are write-if-missing and the candidate
-    # bucket probe collects at construction: the median measures the
-    # two-stage retrieve + store-served re-rank alone
-    "maxsim_rerank_persisted",
-    # both stores (lexical + IVF) are write-if-missing/shared and the
-    # query-vector fetch + probe choice collect at construction: the
-    # median measures the two filtered probes + the bounded fusion
-    "rrf_hybrid_filtered_topk",
-}
+def _timed_in_group(sc, description: str, fn):
+    """Run ``fn()`` under a fresh job group; return (result, seconds,
+    group id)."""
+    group = f"bench-{uuid.uuid4().hex}"
+    sc.setJobGroup(group, description)
+    t0 = time.perf_counter()
+    try:
+        out = fn()
+    finally:
+        elapsed = time.perf_counter() - t0
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    return out, elapsed, group
 
 
-def _drift_bridge(
-    cur_probe: dict, cur_totals: dict, families: dict | None = None
-) -> dict:
-    """Automate the round-over-round drift bridge: read the PREVIOUS
-    round's BENCH_r*.json (the driver records bench stdout's tail as a
-    string — possibly front-truncated, so the probe block and totals are
-    regex-extracted, never json.loads'd wholesale), match drift probes
-    by source md5 (byte-identical code => the sec ratio IS host drift),
-    and emit:
-
-      drift_vs_prev        median(cur_sec / prev_sec) over matched probes
-      drift_probes_matched how many of the probes were byte-identical
-      fam_drift            {"v1": r, "v2": r, ...} — the SAME ratio over
-                           only that group's own matched probes
-                           (``families`` maps probe -> group key): host
-                           drift is workload-dependent on this VM
-                           (spread [0.49, 2.84] observed in round 11),
-                           so each group bridges on probes of its own
-                           shape, never a cross-family median.  ONE
-                           compact map, not per-group keys — the whole
-                           probe block + scalars must fit the round
-                           driver's 2000-char stdout-tail window
-      value*_bridged       (cur_total / prev_total) / family drift —
-                           falling back to the global median when the
-                           group has no matched probe this round
-                           (1.0 = flat, <1 = real win)
-
-    All-None when no prior BENCH record exists or nothing matched."""
-    import glob
-    import re
-
-    out: dict = {"drift_vs_prev": None, "drift_probes_matched": 0}
-    here = os.path.dirname(os.path.abspath(__file__))
-    cur_sf = SF_DIR.rstrip("/").rsplit("sf", 1)[-1]
-    # keep only names the sort key can parse — a stray BENCH_rerun.json
-    # must degrade to "no prior record", never crash the emission
-    matched = [
-        (int(m.group(1)), p)
-        for p in glob.glob(os.path.join(here, "BENCH_r*.json"))
-        if (m := re.search(r"BENCH_r0*(\d+)\.json$", p))
-    ]
-    prev_probe = None
-    tail = ""
-    if matched:
-        files = [p for _, p in sorted(matched)]
-        try:
-            rec = json.load(open(files[-1]))
-            tail = rec.get("tail") or ""
-        except (json.JSONDecodeError, OSError):
-            tail = ""
-    if tail:
-        # same-SF guard: a prev record at a different scale factor would
-        # "bridge" the SF difference as host drift — refuse, don't mislead
-        sm = re.search(r'"sf":\s*([0-9.]+)', tail)
-        if sm and cur_sf.replace(".", "").isdigit():
-            if float(sm.group(1)) != float(cur_sf):
-                tail = ""
-    if tail:
-        m = re.search(r'"drift_probe":\s*(\{(?:[^{}]|\{[^{}]*\})*\})', tail)
-        if m:
-            try:
-                prev_probe = json.loads(m.group(1))
-            except json.JSONDecodeError:
-                prev_probe = None
-        if prev_probe is None:
-            # tolerant fallback (r14): the r13 tail was front-truncated
-            # INSIDE the drift_probe map, losing its key but keeping the
-            # entries — {"sec", "md5"} objects appear nowhere else in the
-            # record, so scavenging them by shape recovers the bridge
-            ent = re.findall(
-                r'"(\w+)":\s*\{"sec":\s*([0-9.]+),\s*"md5":\s*"([0-9a-f]+)"\}',
-                tail,
-            )
-            if ent:
-                prev_probe = {
-                    n: {"sec": float(s), "md5": h} for n, s, h in ent
-                }
-    prev_full = None
-    if prev_probe is None:
-        # fallback: the committed full-record sidecar from the previous
-        # round's final bench run (BENCH_r12's stdout tail was captured
-        # truncated and its whole record was lost — this path is the
-        # insurance against a repeat).  NOTE: a BENCH.json overwritten by
-        # an earlier run of the SAME round would bridge within-round, so
-        # the driver-recorded per-round tail stays the primary source.
-        try:
-            full = json.load(
-                open(os.path.join(here, "BENCH.json"))
-            )
-            if (
-                isinstance(full.get("drift_probe"), dict)
-                and cur_sf.replace(".", "").isdigit()
-                and float(full.get("sf", -1)) == float(cur_sf)
-            ):
-                prev_probe = full["drift_probe"]
-                prev_full = full
-        except (json.JSONDecodeError, OSError, TypeError, ValueError):
-            prev_probe = None
-    if prev_probe is None:
-        return out
-    ratios = []
-    fam_ratios: dict[str, list[float]] = {}
-    for name, cur in cur_probe.items():
-        prev = prev_probe.get(name)
-        if prev and prev.get("md5") == cur["md5"] and prev.get("sec"):
-            r = cur["sec"] / prev["sec"]
-            ratios.append(r)
-            fam = (families or {}).get(name)
-            if fam:
-                fam_ratios.setdefault(fam, []).append(r)
-    if not ratios:
-        return out
-    drift = statistics.median(ratios)
-    out["drift_vs_prev"] = round(drift, 3)
-    out["drift_probes_matched"] = len(ratios)
-    # r13 hardening (single-probe-evidence trap): a family ratio built
-    # from ONE matched probe inherits that probe's full host-phase
-    # swing with no agreement signal — require >= 2 matched anchors per
-    # family, else that group bridges on the global median.  fam_n
-    # records each family's anchor count so n=1 bridges are legible.
-    fam_drift = {
-        fam: statistics.median(rs)
-        for fam, rs in fam_ratios.items()
-        if len(rs) >= 2
+def time_query(spark, query, sf_dir: str) -> dict:
+    """Build ``query``'s plan and write it to the noop sink, timing the
+    two parts separately.  construct_jobs is read after both timers stop,
+    once the listener bus has drained."""
+    sc = spark.sparkContext
+    df, construct_s, group = _timed_in_group(
+        sc, f"{query.name} construct", lambda: query.spark_fn(spark, sf_dir)
+    )
+    _, execute_s, _ = _timed_in_group(
+        sc,
+        f"{query.name} execute",
+        lambda: df.write.format("noop").mode("overwrite").save(),
+    )
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    return {
+        "construct_s": construct_s,
+        "execute_s": execute_s,
+        "construct_jobs": len(sc.statusTracker().getJobIdsForGroup(group)),
     }
 
-    def _short(fam: str) -> str:
-        return "v1" if fam == "value" else fam.split("_", 1)[1]
 
-    out["fam_drift"] = {
-        _short(fam): round(fam_drift[fam], 3) for fam in sorted(fam_drift)
-    }
-    out["fam_n"] = {
-        _short(fam): len(rs) for fam, rs in sorted(fam_ratios.items())
-    }
-    # the spread exposes WORKLOAD-DEPENDENT drift the median hides: a
-    # host whose single-thread speed moved but whose 32-way throughput
-    # didn't (observed r9->r10: 1-task-scan probes ~1.7x, shuffle-
-    # parallel probes ~0.8x, calib 1.8x) shows up as a wide spread —
-    # read group bridges against probes of the same shape, not the
-    # single median, when the spread is wide
-    # q1/q3 dropped in round 12: fam_drift bounds each group on probes
-    # of its OWN shape, which is strictly more honest than global
-    # quartiles — and the tail window pays for every key
-    out["drift_spread"] = [round(min(ratios), 3), round(max(ratios), 3)]
-    for key, cur_total in cur_totals.items():
-        # anchored match: "value": or "value_vN": exactly (never _norm)
-        prev_total = None
-        if prev_full is not None:
-            v = prev_full.get(key)
-            if isinstance(v, (int, float)):
-                prev_total = float(v)
-        else:
-            pm = re.search(rf'"{key}":\s*([0-9.]+)', tail)
-            if pm:
-                prev_total = float(pm.group(1))
-        if prev_total:
-            d = fam_drift.get(key, drift)  # family first, global fallback
-            if d:
-                out[f"{key}_bridged"] = round(
-                    (cur_total / prev_total) / d, 3
-                )
+def run_group(spark, queries: list, sf_dir: str, repeats: int) -> dict:
+    """Time every query ``repeats`` times, interleaved round-robin, and
+    aggregate each query's runs into one record entry."""
+    runs: dict[str, list[dict]] = {q.name: [] for q in queries}
+    for _ in range(repeats):
+        for q in queries:
+            spark.catalog.clearCache()
+            runs[q.name].append(time_query(spark, q, sf_dir))
+    out = {}
+    for name, rs in runs.items():
+        totals = [r["construct_s"] + r["execute_s"] for r in rs]
+        median_run = rs[totals.index(statistics.median_low(totals))]
+        out[name] = {
+            part: round(statistics.median(r[part] for r in rs), 3)
+            for part in ("construct_s", "execute_s")
+        }
+        out[name]["construct_jobs"] = median_run["construct_jobs"]
+        out[name]["min_s"] = round(min(totals), 3)
     return out
+
+
+def group_total(entries: dict) -> float:
+    return round(
+        sum(e["construct_s"] + e["execute_s"] for e in entries.values()), 3
+    )
 
 
 def main() -> None:
@@ -671,231 +372,26 @@ def main() -> None:
     spark = get_spark(app_name="vlp-bench")
     reg = Q.registry()
     sf = SF_DIR.rstrip("/").rsplit("sf", 1)[-1]
-
-    def materialize(df) -> None:
-        # noop sink: full pipeline + all output columns execute, nothing is
-        # persisted or collected.  Pruning-proof, unlike count().
-        df.write.format("noop").mode("overwrite").save()
-
-    # untimed warm-up: JVM/codegen/parquet-footer costs land here, not on
-    # whichever query happens to run first
-    materialize(reg["q6_forecast_revenue"].spark_fn(spark, SF_DIR))
-
     repeats = int(os.environ.get("SPARK_GRAFT_BENCH_REPEATS", "3"))
 
-    def calibration() -> float:
-        """Fixed synthetic workload (no file reads, constant size): a
-        host-speed ruler timed under the exact query protocol.  Rounds
-        drift 25-70% on this shared host (README); dividing each group
-        total by this run's calibration makes totals comparable across
-        rounds on NORMALIZED numbers instead of a prose drift note.
-        The mix mirrors the suite's hot paths: codegen hash + string
-        work map-side, one 32->9973-key shuffle, and an agg."""
-        from pyspark.sql import functions as F
+    time_query(spark, reg["q6_forecast_revenue"], SF_DIR)  # untimed warm-up
 
-        runs = []
-        for _ in range(repeats):
-            df = (
-                spark.range(0, 20_000_000, 1, 32)
-                .select(
-                    (F.col("id") % 9973).alias("k"),
-                    F.xxhash64(F.conv(F.col("id"), 10, 16)).alias("h"),
-                    F.length(
-                        F.regexp_replace(
-                            F.conv(F.col("id"), 10, 36), "[aeiou]", ""
-                        )
-                    ).alias("ln"),
-                )
-                .groupBy("k")
-                .agg(
-                    # pmod keeps the sum inside long range under ANSI
-                    F.sum(F.pmod("h", F.lit(1_000_000))).alias("s"),
-                    F.avg("ln").alias("a"),
-                    F.count(F.lit(1)).alias("c"),
-                )
-            )
-            t0 = time.time()
-            materialize(df)
-            runs.append(time.time() - t0)
-        return round(statistics.median(runs), 3)
-
-    group_mins: dict[str, dict[str, float]] = {}
-
-    def run_group(
-        names: list[str], min_key: str | None = None
-    ) -> dict[str, float]:
-        present = [n for n in names if n in reg]
-        runs_by: dict[str, list[float]] = {n: [] for n in present}
-        # r14: repeats interleave round-robin across the group — a host
-        # slow-phase (this VM swings 1.5s <-> 60s on identical work)
-        # then hits at most ONE repeat of each query, which the median
-        # rejects, instead of all R repeats of whichever query was
-        # unlucky enough to run inside it
-        for _ in range(repeats):
-            for name in present:
-                # fresh plan per repeat: same-instance re-execution would
-                # skip completed shuffle map stages and under-time the query.
-                # r13: ALSO drop the CacheManager state — operators that
-                # persist() an intermediate (the fused LSH/simhash family)
-                # would otherwise serve repeats 2..n from repeat 1's cache
-                # (plan-canonicalization lookup), under-timing the median;
-                # every repeat must compute from the parquet inputs
-                spark.catalog.clearCache()
-                if name in EAGER_CONSTRUCT:
-                    t0 = time.time()
-                    df = reg[name].spark_fn(spark, SF_DIR)
-                else:
-                    df = reg[name].spark_fn(spark, SF_DIR)
-                    t0 = time.time()
-                materialize(df)
-                runs_by[name].append(time.time() - t0)
-        if min_key is not None:
-            group_mins[min_key] = {
-                n: round(min(rs), 3) for n, rs in runs_by.items()
-            }
-        return {
-            n: round(statistics.median(rs), 3) for n, rs in runs_by.items()
-        }
-
-    calib = calibration()
-    timings = run_group(HEADLINE, "queries")
-    timings_v2 = run_group(HEADLINE_V2, "queries_v2")
-    timings_v3 = run_group(HEADLINE_V3, "queries_v3")
-    timings_v4 = run_group(HEADLINE_V4, "queries_v4")
-    timings_v5 = run_group(HEADLINE_V5, "queries_v5")
-    timings_v6 = run_group(HEADLINE_V6, "queries_v6")
-    timings_v7 = run_group(HEADLINE_V7, "queries_v7")
-    timings_v8 = run_group(HEADLINE_V8, "queries_v8")
-    timings_v9 = run_group(HEADLINE_V9, "queries_v9")
-
-    groups = {
-        "value": timings,
-        "value_v2": timings_v2,
-        "value_v3": timings_v3,
-        "value_v4": timings_v4,
-        "value_v5": timings_v5,
-        "value_v6": timings_v6,
-        "value_v7": timings_v7,
-        "value_v8": timings_v8,
-        "value_v9": timings_v9,
+    # an unregistered name is skipped here; tests/test_plans.py fails on it
+    maps = {
+        key: run_group(
+            spark, [reg[n] for n in names if n in reg], SF_DIR, repeats
+        )
+        for key, names in GROUPS.items()
     }
-    all_t = {}
-    for t in groups.values():
-        all_t.update(t)
-    # probe -> its group, for the per-family drift bridge; probes in no
-    # group (PROBE_FAMILY_OVERRIDE) get a standalone timed run so every
-    # family keeps a same-shape anchor
-    families = {}
-    for fam, t in groups.items():
-        for name in t:
-            if name in DRIFT_PROBES:
-                families[name] = fam
-    standalone = [
-        p for p in DRIFT_PROBES if p not in all_t and p in reg
-    ] + [p for p in PROBE_FAMILY_OVERRIDE if p not in all_t and p in reg]
-    if standalone:
-        extra = run_group(sorted(set(standalone)))
-        all_t.update(extra)
-        for name in extra:
-            fam = PROBE_FAMILY_OVERRIDE.get(name)
-            if fam:
-                families[name] = fam
-    import hashlib
-    import inspect
-
-    drift_probe = {
-        name: {
-            "sec": all_t[name],
-            "md5": hashlib.md5(
-                inspect.getsource(reg[name].spark_fn).encode()
-            ).hexdigest()[:10],
-        }
-        for name in sorted(set(DRIFT_PROBES) | set(PROBE_FAMILY_OVERRIDE))
-        if name in all_t
-    }
-
-    total = round(sum(timings.values()), 3)
-
-    def norm(x: float) -> float:
-        return round(x / calib, 3) if calib else 0.0
-
-    cur_totals = {
-        fam: round(sum(t.values()), 3) for fam, t in groups.items()
-    }
-    bridge = _drift_bridge(drift_probe, cur_totals, families)
-    # Key order matters: the round driver records only the TAIL of stdout
-    # (~2000 chars), and the full record with 90+ per-query timings is
-    # longer than that.  The big maps go FIRST and every scalar the driver
-    # needs (metric/value/value_v2/sf) goes LAST so truncation from the
-    # front can never eat the totals (BENCH_r05 lost `value` this way).
     record = {
-        "queries": timings,
-        "queries_v2": timings_v2,
-        "queries_v3": timings_v3,
-        "queries_v4": timings_v4,
-        "queries_v5": timings_v5,
-        "queries_v6": timings_v6,
-        "queries_v7": timings_v7,
-        "queries_v8": timings_v8,
-        "queries_v9": timings_v9,
-        "timing_note": "eager-construct queries "
-        + ",".join(sorted(EAGER_CONSTRUCT))
-        + " timed construct+execute; rest execute-only; repeats "
-        "interleaved round-robin per group (r14)",
-        # prose notes sit BEFORE drift_probe: the tail budget is
-        # spent on the probe block (next round's bridge input)
-        # and the scalars, never on static text.  Per-group norm
-        # keys were dropped in round 12 to keep the probe block
-        # + scalars inside the driver's 2000-char tail window —
-        # the family bridges supersede them (calib_note caveat).
-        "calib_note": "calib = median sec of a fixed synthetic "
-        "no-IO workload (host-speed ruler); value_norm = "
-        "value / calib.  CAVEAT (measured r8->r9): the no-IO "
-        "ruler over-responds to host load vs IO/shuffle-mixed "
-        "queries — prefer the drift/family bridges",
-        "bridge_note": "drift_vs_prev = median sec ratio over "
-        "drift probes whose source md5 matches the previous "
-        "round's BENCH record (byte-identical code => host "
-        "drift); fam_drift = {vN: the same over group N's OWN "
-        "probes} (drift is workload-dependent on this host); "
-        "value*_bridged = (cur/prev)/family-drift per group, "
-        "global-median fallback — the drift-corrected "
-        "round-over-round ratio (1.0 flat, <1 real win)",
         "metric": "headline_queries_total_runtime",
         "unit": "sec",
+        "sf": float(sf) if sf.replace(".", "").isdigit() else sf,
         "repeats": repeats,
         "aggregation": "median",
-        "sf": float(sf) if sf.replace(".", "").isdigit() else sf,
-        "drift_probe": drift_probe,
-        **bridge,
-        **cur_totals,
-        "calib": calib,
-        "value_norm": norm(total),
+        **{key: group_total(m) for key, m in maps.items()},
+        **{key.replace("value", "queries"): m for key, m in maps.items()},
     }
-    # Full-fidelity sidecar: everything the one-line print carries PLUS
-    # the per-query MIN maps (min is the better point estimate on a host
-    # with one-sided multi-second slow-phases; median stays the headline
-    # aggregation for cross-round comparability).  A stable on-disk copy
-    # also survives stdout-tail truncation at the round driver.
-    try:
-        with open(
-            os.path.join(
-                os.path.dirname(os.path.abspath(__file__)), "BENCH.json"
-            ),
-            "w",
-        ) as fh:
-            json.dump(
-                {
-                    **record,
-                    "mins": group_mins,
-                    "mins_note": "per-query MIN of the same interleaved "
-                    "repeats the median maps aggregate",
-                },
-                fh,
-                indent=1,
-            )
-    except OSError:
-        pass
     print(json.dumps(record))
 
 

@@ -21,7 +21,15 @@ check = importlib.util.module_from_spec(_spec)
 _spec.loader.exec_module(check)
 
 
-@pytest.mark.parametrize("name", ["j2_genic_status"])
+@pytest.mark.parametrize(
+    "name",
+    [
+        "j2_genic_status",
+        "emb_hashing_topk",
+        "mm_image_dhash_pairs",
+        "mm_audio_ahash_pairs",
+    ],
+)
 def test_query_matches_duckdb_oracle(spark, name):
     q = Q.registry()[name]
     con = duckdb.connect()

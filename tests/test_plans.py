@@ -2,6 +2,9 @@
 
 from __future__ import annotations
 
+import time
+
+import pytest
 from pyspark.sql import functions as F
 
 from variant_load_pipeline_spark.plans import convert, load
@@ -318,7 +321,8 @@ def test_load_counters_dot_rsid_is_novel(spark):
 
 
 def test_register_views_sql_front_door(spark):
-    from variant_load_pipeline_spark.session import TABLES, register_views
+    from variant_load_pipeline_spark.queries import TABLES
+    from variant_load_pipeline_spark.session import register_views
 
     register_views(spark, "/root/testdata/sf0.001", suffix="_t")
     for t in TABLES:
@@ -334,19 +338,58 @@ def test_register_views_sql_front_door(spark):
 
 def test_bench_headline_names_resolve(spark):
     # a renamed/deleted query must fail HERE, not silently drop out of
-    # the driver's BENCH run (bench.run_group skips unknown names)
+    # bench.py's record (bench.main skips unknown names)
     import bench
 
     from variant_load_pipeline_spark.queries import registry
 
     reg = registry()
-    groups = (
-        bench.HEADLINE + bench.HEADLINE_V2 + bench.HEADLINE_V3
-        + bench.HEADLINE_V4 + bench.HEADLINE_V5
-    )
+    groups = [n for names in bench.GROUPS.values() for n in names]
+    assert len(bench.GROUPS) == 9
     missing = [n for n in groups if n not in reg]
     assert not missing, missing
-    stray = [n for n in bench.EAGER_CONSTRUCT if n not in reg]
-    assert not stray, stray
     # no duplicates across the groups (totals must not double-count)
     assert len(groups) == len(set(groups))
+
+
+def _slow_builder(spark, sf_dir):
+    # a builder that runs a job and spends time before returning its plan
+    spark.range(1000).count()
+    time.sleep(0.3)
+    return spark.range(10)
+
+
+def test_bench_timer_counts_construction(spark):
+    import bench
+
+    from variant_load_pipeline_spark.queries import Query
+
+    pure = bench.time_query(
+        spark, Query("pure", lambda s, d: s.range(10), None), "unused"
+    )
+    assert pure["construct_jobs"] == 0
+    eager = Query("eager", _slow_builder, None)
+    r = bench.time_query(spark, eager, "unused")
+    assert r["construct_jobs"] >= 1
+    assert r["construct_s"] >= 0.3
+    entry = bench.run_group(spark, [eager], "unused", repeats=1)["eager"]
+    assert entry["construct_jobs"] >= 1
+    assert entry["min_s"] >= 0.3
+    assert bench.group_total({"eager": entry}) == pytest.approx(
+        entry["construct_s"] + entry["execute_s"], abs=1e-3
+    )
+    assert bench.group_total({"eager": entry}) >= 0.3
+
+
+def test_emb_hashing_topk_construction_runs_only_the_scan_jobs(spark):
+    # spread() on the documents scan, not after hash_embed's shuffles:
+    # building the query starts no job beyond the scan's own
+    import bench
+
+    from variant_load_pipeline_spark.queries import Query, load, registry
+
+    sf = "/root/testdata/sf0.001"
+    scan = Query("scan", lambda s, d: load(s, d, "documents"), None)
+    want = bench.time_query(spark, scan, sf)["construct_jobs"]
+    got = bench.time_query(spark, registry()["emb_hashing_topk"], sf)
+    assert got["construct_jobs"] == want

@@ -6,8 +6,9 @@ count — a cheap registry-wide sweep for duplicated-subtree plans (this
 environment performs no exchange/subtree reuse, so every extra scan is a
 real extra pass at scale).
 
-Construction-side work (EAGER_CONSTRUCT queries) executes at the chosen SF;
-default sf0.01 keeps that cheap.
+Building a plan runs whatever Spark jobs the query's builder starts (fits,
+store writes, checkpoint loops; `bench.time_query` counts them as
+construct_jobs) at the chosen SF; the default sf0.01 keeps that cheap.
 
 Usage:  PYTHONPATH=/root/repo python tools/plan_census.py [--sf DIR] [name ...]
 """

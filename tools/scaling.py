@@ -11,11 +11,11 @@ must be a documented exact baseline or get a written explanation in
 EXPLAINED below (enforced: unexplained entries exit nonzero so CI/judge
 can see).
 
-Protocol: same as bench.py — noop-format materialization (pruning-
-proof), fresh plan per run, eager-construct queries timed through
-construction.  One timed run per (query, sf) after a global warm-up;
-single-run noise (~±30%) is fine for order-of-magnitude exponents and
-the 15x flag threshold leaves headroom.
+Protocol: bench.py's timer (`bench.time_query`) — construction plus
+noop-format materialization (pruning-proof), fresh plan per run.  One
+timed run per (query, sf) after a global warm-up; single-run noise
+(~±30%) is fine for order-of-magnitude exponents and the 15x flag
+threshold leaves headroom.
 
 Usage:
     python tools/make_sfx.py --replicas 1 --out /tmp/vlp_sf01   # baseline
@@ -28,7 +28,6 @@ from __future__ import annotations
 import json
 import os
 import sys
-import time
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
@@ -127,7 +126,7 @@ EXPLAINED: dict[str, str] = {
 
 
 def main() -> None:
-    from bench import EAGER_CONSTRUCT
+    from bench import time_query
     from variant_load_pipeline_spark import queries as Q
     from variant_load_pipeline_spark.session import get_spark
 
@@ -144,14 +143,8 @@ def main() -> None:
     names = only or sorted(reg)
 
     def run_once(name: str, sf_dir: str) -> float:
-        if name in EAGER_CONSTRUCT:
-            t0 = time.time()
-            df = reg[name].spark_fn(spark, sf_dir)
-        else:
-            df = reg[name].spark_fn(spark, sf_dir)
-            t0 = time.time()
-        df.write.format("noop").mode("overwrite").save()
-        return time.time() - t0
+        r = time_query(spark, reg[name], sf_dir)
+        return r["construct_s"] + r["execute_s"]
 
     # global warm-up (JVM/codegen/parquet footers)
     run_once("q6_forecast_revenue", SF01)
@@ -213,8 +206,8 @@ def write_md(state: dict[str, dict]) -> list[str]:
         "`/tmp/vlp_sf1`; consistent key shifts, per-replica text "
         "divergence, label scale-out — see its docstring for why each "
         "choice models real corpus growth).  Protocol = bench.py's "
-        "(noop sink, fresh plan, eager-construct queries timed through "
-        "construction), single run per point.",
+        "timer (construction + noop sink, fresh plan), single run per "
+        "point.",
         "",
         f"A linear operator lands at <=10x (usually well under — fixed "
         f"driver/plan overhead amortizes).  Entries over {FLAG_RATIO:.0f}x "

@@ -1,9 +1,9 @@
-"""Time individual registry queries in isolation (guide §1.4): noop sink,
-fresh plan per repeat, median + all runs printed.  Mirrors bench.py's
-protocol (EAGER_CONSTRUCT queries time construction too) so isolated
-numbers are comparable with group-bench numbers.
+"""Time individual registry queries in isolation with bench.py's timer
+(`bench.time_query`: construction and noop-sink execution timed apart,
+plus the jobs construction starts), fresh plan and cleared cache per
+repeat, so isolated numbers are comparable with group-bench numbers.
 
-Usage:  PYTHONPATH=/root/repo python tools/time_query.py q1 q2 ... \
+Usage:  PYTHONPATH=. python tools/time_query.py q1 q2 ... \
             [--sf DIR] [--repeats N] [--plan]
 """
 
@@ -12,7 +12,6 @@ from __future__ import annotations
 import os
 import statistics
 import sys
-import time
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
@@ -38,38 +37,31 @@ def main() -> None:
             names.append(a)
         i += 1
 
-    from bench import EAGER_CONSTRUCT
+    from bench import time_query
     from variant_load_pipeline_spark import queries as Q
     from variant_load_pipeline_spark.session import get_spark
 
     spark = get_spark(app_name="vlp-time-query")
     reg = Q.registry()
 
-    def materialize(df) -> None:
-        df.write.format("noop").mode("overwrite").save()
-
     # same warm-up as bench.py
-    spark.sparkContext.setJobDescription("warmup")
-    materialize(reg["q6_forecast_revenue"].spark_fn(spark, sf_dir))
+    time_query(spark, reg["q6_forecast_revenue"], sf_dir)
 
     for name in names:
         if name not in reg:
             print(f"{name}: NOT IN REGISTRY")
             continue
         runs = []
-        for r in range(repeats):
-            spark.sparkContext.setJobDescription(f"{name} rep{r}")
+        for _ in range(repeats):
             spark.catalog.clearCache()  # mirror bench.py's repeat hygiene
-            if name in EAGER_CONSTRUCT:
-                t0 = time.time()
-                df = reg[name].spark_fn(spark, sf_dir)
-            else:
-                df = reg[name].spark_fn(spark, sf_dir)
-                t0 = time.time()
-            materialize(df)
-            runs.append(round(time.time() - t0, 3))
-        med = round(statistics.median(runs), 3)
-        print(f"{name}: median={med} runs={runs}")
+            runs.append(time_query(spark, reg[name], sf_dir))
+        totals = [round(r["construct_s"] + r["execute_s"], 3) for r in runs]
+        print(
+            f"{name}: median={round(statistics.median(totals), 3)} "
+            f"runs={totals} "
+            f"construct={[round(r['construct_s'], 3) for r in runs]} "
+            f"construct_jobs={[r['construct_jobs'] for r in runs]}"
+        )
         if want_plan:
             df = reg[name].spark_fn(spark, sf_dir)
             print(df._sc._jvm.PythonSQLUtils.explainString(

@@ -54,18 +54,22 @@ def load(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
 
 def spread(df: DataFrame) -> DataFrame:
     """Scale-adaptive parallelism fix-up (guide §2.4/§2.5): round-robin
-    repartition ONLY when the scan under-parallelizes the session.
+    repartition ONLY when ``df`` has fewer partitions than the session's
+    default parallelism.
 
     The single-file local fixtures scan as 1 task, so CPU-heavy derivations
     (shingling, hashing, per-row media decode) previously forced an
     unconditional ``repartition(defaultParallelism)`` — which on a real
     corpus is a full-payload shuffle of bytes that are ALREADY spread over
     thousands of scan partitions, plus the local sort every keyless
-    repartition pays (sortBeforeRepartition).  Checking the actual scan
-    partition count makes the fix-up a no-op exactly where it would hurt:
-    at scale the Exchange disappears from the plan, on the 1-file fixtures
-    behavior is byte-identical.  Results never depend on partitioning
-    (every registry query is oracle-hash-gated deterministic).
+    repartition pays (sortBeforeRepartition).  Results never depend on
+    partitioning (every registry query is oracle-hash-gated deterministic).
+
+    It reads the partition count of the plan it is given, via
+    ``df.rdd.getNumPartitions()``.  Apply it to a scan or a projection of
+    one, never after a shuffle: there the count is the (AQE-coalesced)
+    shuffle partition count, and under AQE reading it runs the upstream
+    shuffle stages while the query is still being built.
     """
     p = df.sparkSession.sparkContext.defaultParallelism
     if df.rdd.getNumPartitions() >= p:
@@ -1863,8 +1867,10 @@ def emb_hashing_topk_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     from .operators.similarity import dot, hash_embed
 
     emb = hash_embed(
-        load(spark, sf_dir, "documents"), dim=_HE_DIM, sign_bit=_HE_SIGN_BIT
-    ).transform(spread)
+        load(spark, sf_dir, "documents").transform(spread),
+        dim=_HE_DIM,
+        sign_bit=_HE_SIGN_BIT,
+    )
     nrm2 = dot(F.col("embedding"), F.col("embedding"))
     q = emb.filter(F.col("doc_id") % 50 == 0).select(
         F.col("doc_id").alias("qid"),

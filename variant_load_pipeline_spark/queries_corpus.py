@@ -2575,9 +2575,7 @@ def mm_image_dhash_pairs_q(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         img = ((mid + 3 * x + 5 * y + 11 * c) % 256).astype("uint8")
         payloads.append((mid, bytearray(encode_png(img))))
-    media = spark.createDataFrame(
-        payloads, "media_id long, payload binary"
-    ).transform(spread)
+    media = spark.createDataFrame(payloads, "media_id long, payload binary")
     hashes = image_dhash(media)
     a = hashes.select(
         F.col("media_id").alias("id_a"), F.col("dhash").alias("ha")
@@ -2692,9 +2690,7 @@ def mm_audio_ahash_pairs_q(spark: SparkSession, sf_dir: str) -> DataFrame:
         jitter = np.where(t % 131 == 0, r["jit"] * 1500, 0)
         s = ((r["grp"] * 991 + t * t + jitter) % 4001 - 2000).astype("<i2")
         payloads.append((mid, bytearray(encode_wav(s, 16000))))
-    media = spark.createDataFrame(
-        payloads, "media_id long, payload binary"
-    ).transform(spread)
+    media = spark.createDataFrame(payloads, "media_id long, payload binary")
     hashes = audio_energy_hash(media, n_frames=_AH_FRAMES)
     a = hashes.select(
         F.col("media_id").alias("id_a"), F.col("ahash").alias("ha")

@@ -99,18 +99,12 @@ def get_spark(
     return spark
 
 
-TABLES = [
-    "region", "nation", "customer", "supplier", "part",
-    "orders", "lineitem", "events", "documents", "embeddings",
-]
-
-
 def register_views(spark, sf_dir: str, suffix: str = "") -> None:
     """Register every testdata parquet table as a temp view so plain
     spark.sql() text works against the engine (the SQL front door next
     to the DataFrame API).  The events view goes through load_events'
     timestamp normalization so SQL sees proper TIMESTAMP values."""
-    from .queries import load, load_events
+    from .queries import TABLES, load, load_events
 
     for name in TABLES:
         df = (

@@ -890,7 +890,6 @@ def test_compact_lsh_index_single_generation_is_noop(spark, tmp_path):
     assert os.listdir(f"{idx}/bands") == ["ingest_batch=-1"]
 
 
-@pytest.mark.slow
 def test_compact_lsh_index_mid_crash_leftovers_harmless(spark, tmp_path):
     """Crash simulation for the recoverable swap order: the new seed
     generation has been renamed into place but the folded source
@@ -1908,7 +1907,6 @@ def test_read_kept_asof_time_travels_the_tier_store(spark, tmp_path):
         ing.read_kept_asof(spark, kept, 0)
 
 
-@pytest.mark.slow
 def test_count_store_compaction_never_double_counts(spark, tmp_path):
     """Additive count stores fold WITHOUT double counting: rows carry
     their origin batch id, so (a) the folded sweep equals the pre-fold

@@ -79,7 +79,6 @@ def test_bm25_fold_probe_identical_and_uncommitted_kept(spark, tmp_path):
     assert lx.compact_bm25_index(spark, path, upto_batch_id=1) == 0
 
 
-@pytest.mark.slow
 def test_bm25_fold_untouched_buckets_byte_identical(spark, tmp_path):
     """O(delta) on disk, not just in promise: folding a tiny delta
     rewrites ONLY the term_bucket / doc_bucket partitions it touches —
@@ -134,7 +133,6 @@ def test_bm25_fold_untouched_buckets_byte_identical(spark, tmp_path):
     assert [r["doc_id"] for r in got] == [100001]
 
 
-@pytest.mark.slow
 def test_bm25_fold_mid_swap_recovery(spark, tmp_path):
     """Crash BETWEEN the swap renames (postings moved aside, new copy
     not in place): the next fold restores and completes."""
@@ -167,7 +165,6 @@ def test_bm25_fold_stale_old_copy_recovery(spark, tmp_path):
     assert _probe(spark, path) == want
 
 
-@pytest.mark.slow
 def test_bm25_fold_delete_crash_reads_exactly_once(spark, tmp_path):
     """Crash DURING the delete phase (folded batch's partitions back on
     disk beside the folded seed): the stats watermark excludes the
@@ -229,7 +226,6 @@ def test_bm25_clean_append_probe_has_no_dedup(spark, tmp_path):
     ), plan
 
 
-@pytest.mark.slow
 def test_bm25_fold_swap_crash_window_marker_dedups(spark, tmp_path):
     """The swap-crash window (buckets swapped, folded deltas NOT yet
     deleted, watermark NOT yet advanced): folded rows exist in both the

@@ -426,6 +426,7 @@ def _polyphen_loader2(spark, args) -> None:
         read_polyphen_info2,
         read_polyphen_results,
     )
+    from .store import overwrite_partitions
 
     paired = pair_results_with_info(
         read_polyphen_results(spark, args.results),
@@ -449,33 +450,23 @@ def _polyphen_loader2(spark, args) -> None:
         "sample_id", F.lit(sample_id)
     ).localCheckpoint(eager=True)
 
-    old = spark.conf.get("spark.sql.sources.partitionOverwriteMode", None)
-    spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-    try:
-        rows.write.mode("overwrite").partitionBy("sample_id").parquet(
-            f"{args.out}/polyphen"
+    overwrite_partitions(rows, f"{args.out}/polyphen", ["sample_id"])
+    if args.variant_transcripts:
+        updates = rows.select(
+            "variant_transcript_id",
+            F.col("prediction").alias("polyphen_status"),
+            F.col("uniprot_acc_id").alias("uniprot_id"),
+            F.col("protein_acc_id").alias("protein_id"),
         )
-        if args.variant_transcripts:
-            updates = rows.select(
-                "variant_transcript_id",
-                F.col("prediction").alias("polyphen_status"),
-                F.col("uniprot_acc_id").alias("uniprot_id"),
-                F.col("protein_acc_id").alias("protein_id"),
-            )
-            vt = merge_update(
-                _read(spark, args.variant_transcripts),
-                updates,
-                keys=["variant_transcript_id"],
-                set_cols=["polyphen_status", "uniprot_id", "protein_id"],
-            ).withColumn("sample_id", F.lit(sample_id))
-            vt.write.mode("overwrite").partitionBy("sample_id").parquet(
-                f"{args.out}/variant_transcripts"
-            )
-    finally:
-        if old is not None:
-            spark.conf.set("spark.sql.sources.partitionOverwriteMode", old)
-        else:
-            spark.conf.unset("spark.sql.sources.partitionOverwriteMode")
+        vt = merge_update(
+            _read(spark, args.variant_transcripts),
+            updates,
+            keys=["variant_transcript_id"],
+            set_cols=["polyphen_status", "uniprot_id", "protein_id"],
+        ).withColumn("sample_id", F.lit(sample_id))
+        overwrite_partitions(
+            vt, f"{args.out}/variant_transcripts", ["sample_id"]
+        )
 
 
 @tool("UpdateVariantStatus")
@@ -810,6 +801,7 @@ def _corpus_ingest(spark, args) -> None:
     --lex-index chains BM25 postings appends: survivors become
     lexically searchable (CorpusLexSearch) at the door; fold the
     accumulated deltas with CorpusLexIndex --compact."""
+    from .store import exists
     from .streaming.ingest import corpus_ingest_sink, seed_lsh_ingest
 
     if not args.index:
@@ -819,10 +811,7 @@ def _corpus_ingest(spark, args) -> None:
         # resume the checkpointed stream after a compaction folded the
         # seed partition must not re-create it beside the generation
         # (duplicate bands/shingles growing per resume/compact cycle)
-        hp = spark._jvm.org.apache.hadoop.fs.Path(f"{args.index}/bands")
-        if not hp.getFileSystem(
-            spark._jsc.hadoopConfiguration()
-        ).exists(hp):
+        if not exists(spark, f"{args.index}/bands"):
             seed_lsh_ingest(_read(spark, args.seed_docs), args.index)
     schema = spark.read.parquet(args.docs).schema
     stream = (

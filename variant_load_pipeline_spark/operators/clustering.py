@@ -23,6 +23,8 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from .. import store
+
 
 def int_vectors(
     vec_col: Column, scale: int = 1000
@@ -582,30 +584,20 @@ def append_ivf_batch(
     split as the LSH ingest-index + compaction pair).
 
     Idempotent under redelivery: the batch overwrites ONLY its own
-    ``batch_id`` partition (dynamic overwrite), so replaying a batch
-    cannot duplicate vectors — the contract streaming ingestion needs.
+    ``batch_id`` partition (``store.overwrite_partitions``), so
+    replaying a batch cannot duplicate vectors — the contract streaming
+    ingestion needs.
     """
-    spark = batch.sparkSession
-    old = spark.conf.get("spark.sql.sources.partitionOverwriteMode", None)
-    spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-    try:
+    store.overwrite_partitions(
         batch.select(
             F.col(id_col),
             F.col(vec_col),
             F.lit(batch_id).alias("batch_id"),
             F.col(list_col).alias("list_id"),
-        ).write.mode("overwrite").partitionBy("batch_id", "list_id").parquet(
-            f"{path}/lists_delta"
-        )
-    finally:
-        if old is not None:
-            spark.conf.set("spark.sql.sources.partitionOverwriteMode", old)
-        else:
-            # the conf was unset before this call — restore that, or every
-            # later partitioned overwrite in the session silently becomes
-            # dynamic (a full-rebuild overwrite would then keep stale
-            # partitions absent from the new data)
-            spark.conf.unset("spark.sql.sources.partitionOverwriteMode")
+        ),
+        f"{path}/lists_delta",
+        ["batch_id", "list_id"],
+    )
 
 
 def compact_ivf_index(
@@ -655,96 +647,33 @@ def compact_ivf_index(
     exact integer arithmetic so the new model is bit-reproducible and
     engine-portable (oracle-gated by ivf_retrain_centroids).
 
-    Crash-safe swap, now per touched partition (Hadoop FileSystem API,
-    runs on HDFS/S3A):
-
-    1. write the merged rows of TOUCHED lists (their seed partitions +
-       committed delta rows, deduped per id) to a dot-prefixed temp dir
-       partitioned by ``list_id``, invisible to readers;
-    2. per touched list: rename ``lists/list_id=L`` ->
-       ``.lists_old/list_id=L``, then temp partition -> live (abort on
-       a false-returning rename, restoring the moved-out partition,
-       before anything is deleted);
-    3. delete the folded delta partitions, then ``.lists_old``
-       (centroid swap, when retraining, stays whole-table — the
-       centroid table is model-sized).
-
-    A crash before (2) leaves only hidden temp dirs (overwritten next
-    run).  A crash MID-SWAP leaves some partitions moved out — the next
-    call renames back every ``.lists_old/list_id=L`` whose live
-    partition is missing and deletes the rest, before starting over (a
-    legacy whole-store ``.lists_old`` without ``lists`` restores
-    wholesale).  A crash during (3) leaves duplicates (folded rows
-    still present as deltas) that probes see double until the next fold
-    dedups them — readers needing exactly-once rows in that window
+    Swap order (the swaps and their recovery are store.py's): the
+    merged rows of the touched lists go to ``.lists_tmp``; a
+    per-partition swap moves each touched ``list_id=L`` aside to
+    ``.lists_old`` and the new copy in; then the folded delta
+    partitions are deleted, then ``.lists_old``.  Retrained centroids
+    swap whole-table through ``.centroids_tmp`` / ``.centroids_old``
+    (the table is model-sized).  A crash after the swap but before the
+    delta deletes leaves duplicates (folded rows still present as
+    deltas) that probes see double until the next fold dedups them —
+    readers needing exactly-once rows in that window
     dropDuplicates(id_col), the compact_kept contract.
 
     Returns the number of delta batch partitions folded.
     """
-    jvm = spark._jvm
-    conf = spark._jsc.hadoopConfiguration()
-
-    def fs_path(s):
-        return jvm.org.apache.hadoop.fs.Path(s)
-
-    fs = fs_path(path).getFileSystem(conf)
-
-    def swap_in(live: str, old: str, tmp: str) -> None:
-        if not fs.rename(fs_path(live), fs_path(old)):
-            raise IOError(f"compaction: rename {live} -> {old} failed")
-        if not fs.rename(fs_path(tmp), fs_path(live)):
-            # restore immediately: the live dir must never stay missing
-            fs.rename(fs_path(old), fs_path(live))
-            raise IOError(f"compaction: rename {tmp} -> {live} failed")
-
-    # recovery from prior crashes.  lists (per-partition swap): a
-    # whole-store .lists_old with lists missing is a legacy/total torn
-    # swap — restore wholesale; otherwise rename back every moved-out
-    # partition whose live dir is missing (mid-swap crash) and delete
-    # the rest (stale copies from a crash after the swap).  centroids
-    # (whole-table swap, model-sized): the original two-state recovery.
     lists_live, lists_old = f"{path}/lists", f"{path}/.lists_old"
-    if fs.exists(fs_path(lists_old)):
-        if not fs.exists(fs_path(lists_live)):
-            if not fs.rename(fs_path(lists_old), fs_path(lists_live)):
-                raise IOError(
-                    f"compaction recovery: {lists_old} -> {lists_live} failed"
-                )
-        else:
-            for st in fs.listStatus(fs_path(lists_old)):
-                name = st.getPath().getName()
-                dest = f"{lists_live}/{name}"
-                if name.startswith("list_id=") and not fs.exists(
-                    fs_path(dest)
-                ):
-                    if not fs.rename(st.getPath(), fs_path(dest)):
-                        raise IOError(
-                            f"compaction recovery: restore {name} failed"
-                        )
-            fs.delete(fs_path(lists_old), True)
-    live, old = f"{path}/centroids", f"{path}/.centroids_old"
-    if fs.exists(fs_path(old)):
-        if not fs.exists(fs_path(live)):
-            if not fs.rename(fs_path(old), fs_path(live)):
-                raise IOError(
-                    f"compaction recovery: {old} -> {live} failed"
-                )
-        else:
-            fs.delete(fs_path(old), True)
+    store.recover(spark, lists_live, lists_old, "list_id")
+    store.recover(spark, f"{path}/centroids", f"{path}/.centroids_old")
 
     delta_root = f"{path}/lists_delta"
-    batches: list[int] = []
-    if fs.exists(fs_path(delta_root)):
-        for st in fs.listStatus(fs_path(delta_root)):
-            name = st.getPath().getName()
-            if name.startswith("batch_id="):
-                bid = int(name.split("=", 1)[1])
-                if bid <= upto_batch_id:
-                    batches.append(bid)
+    batches = [
+        b
+        for b in store.child_ids(spark, delta_root, "batch_id")
+        if b <= upto_batch_id
+    ]
     if not batches and not retrain_centroids:
         return 0
 
-    folded = 0
     if batches:
         from pyspark.sql.window import Window as W
 
@@ -768,7 +697,7 @@ def compact_ivf_index(
             for r in committed.select("list_id").distinct().collect()
         )
         seed_touched = (
-            spark.read.parquet(f"{path}/lists")
+            spark.read.parquet(lists_live)
             .select(id_col, vec_col, "list_id")
             # lands in PartitionFilters: only touched partitions read
             .filter(F.col("list_id").isin([int(t) for t in touched]))
@@ -784,43 +713,15 @@ def compact_ivf_index(
             .select(id_col, vec_col, "list_id")
         )
         tmp = f"{path}/.lists_tmp"
-        fs.delete(fs_path(tmp), True)
+        store.delete(spark, tmp)
         merged.write.mode("overwrite").partitionBy("list_id").parquet(tmp)
-        # per-partition swap: untouched invlist dirs are never moved,
-        # copied, or rewritten — their bytes stay identical
-        old_root = f"{path}/.lists_old"
-        fs.mkdirs(fs_path(old_root))
-        for t in touched:
-            part = f"list_id={t}"
-            live_p = f"{path}/lists/{part}"
-            old_p = f"{old_root}/{part}"
-            tmp_p = f"{tmp}/{part}"
-            if not fs.exists(fs_path(tmp_p)):
-                continue  # defensive: all rows of a touched list deduped away
-            if fs.exists(fs_path(live_p)):
-                if not fs.rename(fs_path(live_p), fs_path(old_p)):
-                    raise IOError(
-                        f"compaction: rename {live_p} -> {old_p} failed"
-                    )
-            if not fs.rename(fs_path(tmp_p), fs_path(live_p)):
-                # restore immediately: a partition must never stay missing
-                if fs.exists(fs_path(old_p)):
-                    fs.rename(fs_path(old_p), fs_path(live_p))
-                raise IOError(
-                    f"compaction: rename {tmp_p} -> {live_p} failed"
-                )
-        for bid in batches:
-            fs.delete(fs_path(f"{delta_root}/batch_id={bid}"), True)
-        # drop the delta root too when nothing (uncommitted batches)
-        # remains — an empty dir would break readers' schema inference
-        if not any(
-            st.getPath().getName().startswith("batch_id=")
-            for st in fs.listStatus(fs_path(delta_root))
-        ):
-            fs.delete(fs_path(delta_root), True)
-        fs.delete(fs_path(old_root), True)
-        fs.delete(fs_path(tmp), True)
-        folded = len(batches)
+        store.swap(
+            spark, lists_live, tmp, lists_old,
+            [f"list_id={t}" for t in touched],
+        )
+        store.drop_children(spark, delta_root, batches, "batch_id")
+        store.delete(spark, lists_old)
+        store.delete(spark, tmp)
 
     if retrain_centroids:
         # new centroid = floor-of-mean of milli-quantized members per
@@ -849,9 +750,11 @@ def compact_ivf_index(
         )
         ctmp = f"{path}/.centroids_tmp"
         cent.repartition(1).write.mode("overwrite").parquet(ctmp)
-        swap_in(f"{path}/centroids", f"{path}/.centroids_old", ctmp)
-        fs.delete(fs_path(f"{path}/.centroids_old"), True)
-    return folded
+        store.swap(
+            spark, f"{path}/centroids", ctmp, f"{path}/.centroids_old"
+        )
+        store.delete(spark, f"{path}/.centroids_old")
+    return len(batches)
 
 
 def read_ivf_lists(
@@ -866,20 +769,14 @@ def read_ivf_lists(
     reader must scan, or vectors appended after the seed write are
     silently invisible to mining/rerank while CorpusSearch sees them.
     Both stores are partitioned by ``list_id``, so a probe's equi-join
-    or IN-filter on ``list_id`` partition-prunes each side.  Existence
-    is probed via the Hadoop FileSystem API (works on HDFS/S3A)."""
+    or IN-filter on ``list_id`` partition-prunes each side."""
     lists = spark.read.parquet(f"{path}/lists").select(
         id_col, vec_col, "list_id"
     )
     delta_dir = f"{path}/lists_delta"
-    hpath = spark._jvm.org.apache.hadoop.fs.Path(delta_dir)
-    fs = hpath.getFileSystem(spark._jsc.hadoopConfiguration())
-    # the batch_id= check also tolerates an empty delta root (a crash
-    # window of compact_ivf_index) that schema inference would reject
-    if fs.exists(hpath) and any(
-        st.getPath().getName().startswith("batch_id=")
-        for st in fs.listStatus(hpath)
-    ):
+    # listing batch_id= children also tolerates an empty delta root (a
+    # crash window of compact_ivf_index) that schema inference rejects
+    if store.child_ids(spark, delta_dir, "batch_id"):
         lists = lists.unionByName(
             spark.read.parquet(delta_dir).select(id_col, vec_col, "list_id")
         )

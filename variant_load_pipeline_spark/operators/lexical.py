@@ -53,9 +53,9 @@ monitors, and ``compact_bm25_index`` is the maintenance job they
 trigger: fold committed deltas into ONLY the term_bucket / doc_bucket
 partitions they touch (untouched bucket directories stay byte-identical
 on disk), collapse the stats rows into one watermarked seed row, and
-swap crash-safely — the compact_ivf_index recipe (per-partition rename
-swap, mid-swap/stale-copy/delete-crash recovery) applied to the
-inverted index.  Reference analog: the per-chromosome incremental
+swap crash-safely by the store.py protocol (per-partition swap and
+recovery for postings/doclen, whole-table for stats).  Reference
+analog: the per-chromosome incremental
 loading stance of ``/root/reference/changes.txt:32-36``.
 
 BM25 math is ``functions.text.bm25_scores``'s, expression-for-
@@ -69,6 +69,8 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+
+from .. import store
 
 N_BUCKETS = 64
 
@@ -133,7 +135,7 @@ def append_bm25_batch(
     rebuild: postings/doclen land under ``batch_id=<n>`` partitions and
     the stats store gains the batch's additive (n_docs, sum_dl) row.
     Idempotent under redelivery: every write overwrites ONLY its own
-    batch_id partition (dynamic overwrite — append_ivf_batch's recipe),
+    batch_id partition (``store.overwrite_partitions``),
     so a replayed batch cannot double postings, lengths, or stats.
 
     **Precondition (module docstring): the batch's doc ids are disjoint
@@ -144,54 +146,26 @@ def append_bm25_batch(
     seed row and could never be folded past the watermark)."""
     if batch_id < 0:
         raise ValueError(f"batch_id must be >= 0, got {batch_id}")
-    spark = batch.sparkSession
     post, dl = _postings(batch, text_col, id_col)
-    old = spark.conf.get("spark.sql.sources.partitionOverwriteMode", None)
-    spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-    try:
-        post.withColumn("batch_id", F.lit(batch_id)).write.mode(
-            "overwrite"
-        ).partitionBy("batch_id", "term_bucket").parquet(
-            f"{path}/postings_delta"
-        )
-        dl.withColumn("batch_id", F.lit(batch_id)).write.mode(
-            "overwrite"
-        ).partitionBy("batch_id", "doc_bucket").parquet(
-            f"{path}/doclen_delta"
-        )
+    store.overwrite_partitions(
+        post.withColumn("batch_id", F.lit(batch_id)),
+        f"{path}/postings_delta",
+        ["batch_id", "term_bucket"],
+    )
+    store.overwrite_partitions(
+        dl.withColumn("batch_id", F.lit(batch_id)),
+        f"{path}/doclen_delta",
+        ["batch_id", "doc_bucket"],
+    )
+    store.overwrite_partitions(
         dl.agg(
             F.count(F.lit(1)).alias("n_docs"),
             F.sum("dl").alias("sum_dl"),
             F.lit(batch_id).alias("batch_id"),
-        ).withColumn("bpart", F.col("batch_id")).write.mode(
-            "overwrite"
-        ).partitionBy("bpart").parquet(f"{path}/stats_delta")
-    finally:
-        if old is not None:
-            spark.conf.set(
-                "spark.sql.sources.partitionOverwriteMode", old
-            )
-        else:
-            spark.conf.unset("spark.sql.sources.partitionOverwriteMode")
-
-
-def _fs_of(spark, path: str):
-    hpath = spark._jvm.org.apache.hadoop.fs.Path(path)
-    return hpath.getFileSystem(spark._jsc.hadoopConfiguration()), hpath
-
-
-def _delta_batches(spark, delta_dir: str) -> list[int]:
-    """Batch ids present under a delta root (driver-side listing,
-    bounded by the number of unfolded batches)."""
-    fs, hpath = _fs_of(spark, delta_dir)
-    if not fs.exists(hpath):
-        return []
-    out = []
-    for st in fs.listStatus(hpath):
-        name = st.getPath().getName()
-        if name.startswith(("batch_id=", "bpart=")):
-            out.append(int(name.split("=", 1)[1]))
-    return sorted(out)
+        ).withColumn("bpart", F.col("batch_id")),
+        f"{path}/stats_delta",
+        ["bpart"],
+    )
 
 
 def _fold_in_progress(spark, path: str) -> bool:
@@ -204,8 +178,7 @@ def _fold_in_progress(spark, path: str) -> bool:
     Readers dedup only inside this window; the steady-state
     (clean-append) probe pays no dedup exchange and keeps its bucket
     PartitionFilters."""
-    fs, hpath = _fs_of(spark, f"{path}/{FOLD_MARKER}")
-    return bool(fs.exists(hpath))
+    return store.exists(spark, f"{path}/{FOLD_MARKER}")
 
 
 FOLD_MARKER = ".folding"
@@ -216,8 +189,7 @@ def _folded_upto(spark, path: str) -> int:
     store predates folds, carries no watermark column, or has no seed
     yet — the delta-only store the ingest door bootstraps).  A 1-row
     bounded collect — model state, never data."""
-    fs, hpath = _fs_of(spark, f"{path}/stats")
-    if not fs.exists(hpath):
+    if not store.exists(spark, f"{path}/stats"):
         return -1
     st = spark.read.parquet(f"{path}/stats")
     if "folded_upto" not in st.columns:
@@ -233,6 +205,7 @@ def _store_frame(
     cols: list[str],
     watermark: int,
     dedup_cols: list[str] | None = None,
+    key: str = "batch_id",
 ):
     """A sub-store's full reader frame: seed (when it exists — the
     ingest door can bootstrap a store from deltas alone, LSM-style)
@@ -243,22 +216,21 @@ def _store_frame(
     dropDuplicates — the defensive guard for postings/doclen, whose
     crash-leftover rows are bit-identical to their folded seed copies
     (see module docstring); skipped whenever one side is absent, so the
-    steady-state (or delta-only) read pays no extra exchange."""
-    fs, hseed = _fs_of(spark, seed_dir)
+    steady-state (or delta-only) read pays no extra exchange.  ``key``
+    names the delta root's batch partition column."""
     seed = (
         spark.read.parquet(seed_dir).select(*cols)
-        if fs.exists(hseed)
+        if store.exists(spark, seed_dir)
         else None
     )
     delta = None
-    if _delta_batches(spark, delta_dir):
+    if store.child_ids(spark, delta_dir, key):
         # explicit basePath: never let partition inference guess a
         # common root from the leaf listing (folds delete batch dirs
         # between reads — the cached file index would otherwise risk
         # CONFLICTING_DIRECTORY_STRUCTURES)
         d = spark.read.option("basePath", delta_dir).parquet(delta_dir)
-        bcol = "batch_id" if "batch_id" in d.columns else "bpart"
-        delta = d.filter(F.col(bcol) > watermark).select(*cols)
+        delta = d.filter(F.col(key) > watermark).select(*cols)
     if seed is None and delta is None:
         raise ValueError(
             f"no BM25 store at {seed_dir} (no seed, no deltas)"
@@ -346,6 +318,7 @@ def bm25_probe_topk(
         f"{path}/stats_delta",
         ["n_docs", "sum_dl"],
         w_mark,
+        key="bpart",
     )
     stats = st.agg(
         F.sum("n_docs").alias("n_docs"), F.sum("sum_dl").alias("sum_dl")
@@ -397,34 +370,8 @@ def bm25_probe_topk(
     )
 
 
-def _recover_partition_swap(fs, fs_path, live: str, old: str, prefix: str):
-    """compact_ivf_index's per-partition swap recovery, shared by the
-    postings and doclen folds: a whole-store ``old`` with ``live``
-    missing is a total torn swap — restore wholesale; otherwise rename
-    back every moved-out partition whose live dir is missing (mid-swap
-    crash) and delete the rest (stale copies from a crash after the
-    swap)."""
-    if not fs.exists(fs_path(old)):
-        return
-    if not fs.exists(fs_path(live)):
-        if not fs.rename(fs_path(old), fs_path(live)):
-            raise IOError(f"compaction recovery: {old} -> {live} failed")
-        return
-    for st in fs.listStatus(fs_path(old)):
-        name = st.getPath().getName()
-        dest = f"{live}/{name}"
-        if name.startswith(prefix) and not fs.exists(fs_path(dest)):
-            if not fs.rename(st.getPath(), fs_path(dest)):
-                raise IOError(
-                    f"compaction recovery: restore {name} failed"
-                )
-    fs.delete(fs_path(old), True)
-
-
 def _fold_bucketed(
     spark,
-    fs,
-    fs_path,
     seed_dir: str,
     delta_dir: str,
     bucket_col: str,
@@ -438,100 +385,71 @@ def _fold_bucketed(
     touch (driver-side directory listing finds the touched buckets —
     bounded by N_BUCKETS x batches, never a job), per-key dedup with
     delta-over-seed / later-over-earlier precedence (re-folds after a
-    delete-crash converge), write the merged buckets to a dot-prefixed
-    temp dir, swap each touched partition by rename — untouched bucket
-    directories are never moved, copied, or rewritten — then delete the
-    folded delta partitions (committed AND already-below-watermark
-    stale leftovers)."""
+    delete-crash converge), then a per-partition ``store.swap`` through
+    ``.<name>.tmp`` / ``.<name>.old`` — untouched bucket directories
+    are never moved — and finally delete the folded delta partitions
+    (committed AND already-below-watermark stale leftovers)."""
     parent, _, name = seed_dir.rpartition("/")
     tmp = f"{parent}/.{name}.tmp"
     old_root = f"{parent}/.{name}.old"
-    _recover_partition_swap(
-        fs, fs_path, seed_dir, old_root, f"{bucket_col}="
-    )
+    store.recover(spark, seed_dir, old_root, bucket_col)
     batches = [
         b
-        for b in _delta_batches(spark, delta_dir)
+        for b in store.child_ids(spark, delta_dir, "batch_id")
         if b <= upto_batch_id
     ]
-    committed = [b for b in batches if b > watermark]
-    if committed:
-        touched: set[int] = set()
-        for b in committed:
-            bdir = f"{delta_dir}/batch_id={b}"
-            for st in fs.listStatus(fs_path(bdir)):
-                name = st.getPath().getName()
-                if name.startswith(f"{bucket_col}="):
-                    touched.add(int(name.split("=", 1)[1]))
-        if touched:
-            from pyspark.sql.window import Window as W
+    touched = sorted(
+        {
+            t
+            for b in batches
+            if b > watermark
+            for t in store.child_ids(
+                spark, f"{delta_dir}/batch_id={b}", bucket_col
+            )
+        }
+    )
+    if touched:
+        from pyspark.sql.window import Window as W
 
-            delta = (
-                spark.read.option("basePath", delta_dir)
-                .parquet(delta_dir)
-                .filter(
-                    (F.col("batch_id") > watermark)
-                    & (F.col("batch_id") <= upto_batch_id)
-                )
-                .select(
-                    *key_cols,
-                    *data_cols,
-                    bucket_col,
-                    F.col("batch_id").cast("long").alias("__src"),
-                )
+        delta = (
+            spark.read.option("basePath", delta_dir)
+            .parquet(delta_dir)
+            .filter(
+                (F.col("batch_id") > watermark)
+                & (F.col("batch_id") <= upto_batch_id)
             )
-            if fs.exists(fs_path(seed_dir)):
-                seed_touched = (
-                    spark.read.parquet(seed_dir)
-                    .select(*key_cols, *data_cols, bucket_col)
-                    # lands in PartitionFilters: only touched buckets read
-                    .filter(F.col(bucket_col).isin(sorted(touched)))
-                    .withColumn("__src", F.lit(-1).cast("long"))
-                )
-                delta = seed_touched.unionByName(delta)
-            wdd = W.partitionBy(*key_cols).orderBy(F.col("__src").desc())
-            merged = (
-                delta.withColumn("__rn", F.row_number().over(wdd))
-                .filter(F.col("__rn") == 1)
+            .select(
+                *key_cols,
+                *data_cols,
+                bucket_col,
+                F.col("batch_id").cast("long").alias("__src"),
+            )
+        )
+        if store.exists(spark, seed_dir):
+            seed_touched = (
+                spark.read.parquet(seed_dir)
                 .select(*key_cols, *data_cols, bucket_col)
+                # lands in PartitionFilters: only touched buckets read
+                .filter(F.col(bucket_col).isin(touched))
+                .withColumn("__src", F.lit(-1).cast("long"))
             )
-            fs.delete(fs_path(tmp), True)
-            merged.write.mode("overwrite").partitionBy(
-                bucket_col
-            ).parquet(tmp)
-            # a delta-only store (the ingest door's bootstrap) creates
-            # its seed dir at the first fold
-            fs.mkdirs(fs_path(seed_dir))
-            fs.mkdirs(fs_path(old_root))
-            for t in sorted(touched):
-                part = f"{bucket_col}={t}"
-                live_p = f"{seed_dir}/{part}"
-                old_p = f"{old_root}/{part}"
-                tmp_p = f"{tmp}/{part}"
-                if not fs.exists(fs_path(tmp_p)):
-                    continue  # defensive: all rows deduped away
-                if fs.exists(fs_path(live_p)):
-                    if not fs.rename(fs_path(live_p), fs_path(old_p)):
-                        raise IOError(
-                            f"compaction: rename {live_p} -> {old_p} failed"
-                        )
-                if not fs.rename(fs_path(tmp_p), fs_path(live_p)):
-                    # restore immediately: a bucket must never stay missing
-                    if fs.exists(fs_path(old_p)):
-                        fs.rename(fs_path(old_p), fs_path(live_p))
-                    raise IOError(
-                        f"compaction: rename {tmp_p} -> {live_p} failed"
-                    )
-            fs.delete(fs_path(old_root), True)
-            fs.delete(fs_path(tmp), True)
+            delta = seed_touched.unionByName(delta)
+        wdd = W.partitionBy(*key_cols).orderBy(F.col("__src").desc())
+        merged = (
+            delta.withColumn("__rn", F.row_number().over(wdd))
+            .filter(F.col("__rn") == 1)
+            .select(*key_cols, *data_cols, bucket_col)
+        )
+        store.delete(spark, tmp)
+        merged.write.mode("overwrite").partitionBy(bucket_col).parquet(tmp)
+        store.swap(
+            spark, seed_dir, tmp, old_root,
+            [f"{bucket_col}={t}" for t in touched],
+        )
+        store.delete(spark, old_root)
+        store.delete(spark, tmp)
     # delete folded (committed) and stale (<= watermark leftover) deltas
-    for b in batches:
-        fs.delete(fs_path(f"{delta_dir}/batch_id={b}"), True)
-    if fs.exists(fs_path(delta_dir)) and not any(
-        st.getPath().getName().startswith("batch_id=")
-        for st in fs.listStatus(fs_path(delta_dir))
-    ):
-        fs.delete(fs_path(delta_dir), True)
+    store.drop_children(spark, delta_dir, batches, "batch_id")
 
 
 def compact_bm25_index(
@@ -572,73 +490,54 @@ def compact_bm25_index(
     or below the seed's watermark, so nothing is ever double-counted —
     exactly-once even inside the crash window.
 
-    Crash-safe swap order (Hadoop FileSystem API, runs on HDFS/S3A):
+    Swap order (the swaps and their recovery are store.py's):
 
-    1. postings: merged touched buckets to ``.postings.tmp`` ->
-       per-partition rename swap -> delete folded delta partitions;
-    2. doclen: same recipe over ``doc_bucket``;
-    3. stats LAST: collapsed row to a temp -> whole-table swap (the
-       stats table is 1 row — model-sized) -> delete folded stats_delta
-       partitions -> delete the old copy.
+    1. postings: per-partition swap of the touched buckets through
+       ``.postings.tmp`` / ``.postings.old``, then delete the folded
+       delta partitions;
+    2. doclen: the same over ``doc_bucket``;
+    3. stats LAST: whole-table swap through ``.stats_tmp`` /
+       ``.stats_old`` (1 row, model-sized), then delete the folded
+       stats_delta partitions and the old copy.
 
-    A crash before any swap leaves only hidden temp dirs (overwritten
-    next run).  A crash MID-SWAP is repaired by the next call's
-    recovery pass (restore moved-out partitions whose live dir is
-    missing, drop stale copies).  A crash between (1)/(2) and (3)
-    leaves postings duplicated between seed and leftover deltas — the
-    probe's (doc_id, term) / (doc_id) dedup keeps results exact in that
-    window (rows are bit-identical), and the next fold converges the
-    store.  Returns the number of delta batch ids folded (the union
-    across the three sub-stores).
+    The ``.folding`` marker is open from before (1) until after (3).
+    A crash between (1)/(2) and (3) leaves postings duplicated between
+    seed and leftover deltas — the probe's (doc_id, term) / (doc_id)
+    dedup keeps results exact in that window (rows are bit-identical),
+    and the next fold converges the store.  Returns the number of delta
+    batch ids folded (the union across the three sub-stores).
     """
-    jvm = spark._jvm
-    conf = spark._jsc.hadoopConfiguration()
-
-    def fs_path(s):
-        return jvm.org.apache.hadoop.fs.Path(s)
-
-    fs = fs_path(path).getFileSystem(conf)
-
-    # stats recovery first (whole-table two-state swap): the watermark
-    # read below must see a live stats table
+    # stats recovery first (whole-table): the watermark read below must
+    # see a live stats table
     st_live, st_old = f"{path}/stats", f"{path}/.stats_old"
-    if fs.exists(fs_path(st_old)):
-        if not fs.exists(fs_path(st_live)):
-            if not fs.rename(fs_path(st_old), fs_path(st_live)):
-                raise IOError(
-                    f"compaction recovery: {st_old} -> {st_live} failed"
-                )
-        else:
-            fs.delete(fs_path(st_old), True)
+    store.recover(spark, st_live, st_old)
 
     w_mark = _folded_upto(spark, path)
-    folded_ids: set[int] = set()
-    for d in ("postings_delta", "doclen_delta", "stats_delta"):
-        folded_ids.update(
-            b
-            for b in _delta_batches(spark, f"{path}/{d}")
-            if w_mark < b <= upto_batch_id
+    listed = [
+        store.child_ids(spark, f"{path}/{d}", key)
+        for d, key in (
+            ("postings_delta", "batch_id"),
+            ("doclen_delta", "batch_id"),
+            ("stats_delta", "bpart"),
         )
-    stale_present = any(
-        b <= w_mark
-        for d in ("postings_delta", "doclen_delta", "stats_delta")
-        for b in _delta_batches(spark, f"{path}/{d}")
-    )
+    ]
+    folded_ids = {
+        b for ids in listed for b in ids if w_mark < b <= upto_batch_id
+    }
+    stale_present = any(b <= w_mark for ids in listed for b in ids)
     if not folded_ids and not stale_present:
         # still run swap recovery so a torn prior fold self-heals even
         # when no new deltas arrived since
-        _recover_partition_swap(
-            fs, fs_path, f"{path}/postings", f"{path}/.postings.old",
-            "term_bucket=",
+        store.recover(
+            spark, f"{path}/postings", f"{path}/.postings.old", "term_bucket"
         )
-        _recover_partition_swap(
-            fs, fs_path, f"{path}/doclen", f"{path}/.doclen.old",
-            "doc_bucket=",
+        store.recover(
+            spark, f"{path}/doclen", f"{path}/.doclen.old", "doc_bucket"
         )
         # no committed-above-watermark deltas remain, so no seed/delta
         # duplication is possible: a leftover crash marker can be
         # retired and probes drop back to the dedup-free plan
-        fs.delete(fs_path(f"{path}/{FOLD_MARKER}"), True)
+        store.delete(spark, f"{path}/{FOLD_MARKER}")
         return 0
 
     # open the vulnerable window: from the first bucket swap until the
@@ -646,16 +545,16 @@ def compact_bm25_index(
     # BOTH the seed and a leftover delta batch above the watermark.
     # Readers (bm25_probe_topk, bm25_idf_drift) dedup exactly while
     # this marker exists — the clean steady state pays nothing.
-    fs.mkdirs(fs_path(f"{path}/{FOLD_MARKER}"))
+    store.touch(spark, f"{path}/{FOLD_MARKER}")
 
     _fold_bucketed(
-        spark, fs, fs_path,
+        spark,
         f"{path}/postings", f"{path}/postings_delta",
         "term_bucket", [id_col, "term"], ["tf"],
         w_mark, upto_batch_id,
     )
     _fold_bucketed(
-        spark, fs, fs_path,
+        spark,
         f"{path}/doclen", f"{path}/doclen_delta",
         "doc_bucket", [id_col], ["dl"],
         w_mark, upto_batch_id,
@@ -664,12 +563,12 @@ def compact_bm25_index(
     # stats collapse, LAST: sum the seed row with the committed delta
     # rows into one watermarked seed row, whole-table swap, then delete
     # the folded delta partitions (the watermark covers the crash window)
-    sbatches = _delta_batches(spark, f"{path}/stats_delta")
+    sbatches = listed[2]
     committed = [b for b in sbatches if w_mark < b <= upto_batch_id]
     if committed or any(b <= w_mark for b in sbatches):
         seed = (
             spark.read.parquet(st_live).select("n_docs", "sum_dl")
-            if fs.exists(fs_path(st_live))
+            if store.exists(spark, st_live)
             else None
         )
         if committed:
@@ -693,25 +592,17 @@ def compact_bm25_index(
         )
         tmp = f"{path}/.stats_tmp"
         new_seed.repartition(1).write.mode("overwrite").parquet(tmp)
-        had_seed = fs.exists(fs_path(st_live))
-        if had_seed and not fs.rename(fs_path(st_live), fs_path(st_old)):
-            raise IOError(f"compaction: rename {st_live} -> {st_old} failed")
-        if not fs.rename(fs_path(tmp), fs_path(st_live)):
-            if had_seed:
-                fs.rename(fs_path(st_old), fs_path(st_live))
-            raise IOError(f"compaction: rename {tmp} -> {st_live} failed")
-        for b in [x for x in sbatches if x <= upto_batch_id]:
-            fs.delete(fs_path(f"{path}/stats_delta/bpart={b}"), True)
-        sd = f"{path}/stats_delta"
-        if fs.exists(fs_path(sd)) and not any(
-            st.getPath().getName().startswith("bpart=")
-            for st in fs.listStatus(fs_path(sd))
-        ):
-            fs.delete(fs_path(sd), True)
-        fs.delete(fs_path(st_old), True)
+        store.swap(spark, st_live, tmp, st_old)
+        store.drop_children(
+            spark,
+            f"{path}/stats_delta",
+            [b for b in sbatches if b <= upto_batch_id],
+            "bpart",
+        )
+        store.delete(spark, st_old)
     # every folded delta partition is deleted and the watermark is live:
     # close the vulnerable window
-    fs.delete(fs_path(f"{path}/{FOLD_MARKER}"), True)
+    store.delete(spark, f"{path}/{FOLD_MARKER}")
     return len(folded_ids)
 
 
@@ -737,7 +628,7 @@ def bm25_idf_drift(
     from pyspark.sql.window import Window as W
 
     w_mark = _folded_upto(spark, path)
-    if not _delta_batches(spark, f"{path}/postings_delta"):
+    if not store.child_ids(spark, f"{path}/postings_delta", "batch_id"):
         return spark.createDataFrame(
             [],
             "term string, df_seed long, df_cur long, "
@@ -755,9 +646,8 @@ def bm25_idf_drift(
     # (a delta-only store — the door's bootstrap — has no seed epoch:
     # df_seed = 0, n_seed = 0, drift measured from the empty index)
     buckets = dterms.select("term_bucket").distinct()
-    fs, hseed = _fs_of(spark, f"{path}/postings")
     seed_post = None
-    if fs.exists(hseed):
+    if store.exists(spark, f"{path}/postings"):
         seed_post = (
             spark.read.parquet(f"{path}/postings")
             .join(F.broadcast(buckets), "term_bucket")
@@ -785,8 +675,7 @@ def bm25_idf_drift(
         F.countDistinct(id_col).alias("df_d")
     )
     # corpus sizes: seed epoch = the seed stats row; current = + deltas
-    fs2, hstats = _fs_of(spark, f"{path}/stats")
-    if fs2.exists(hstats):
+    if store.exists(spark, f"{path}/stats"):
         st_seed = spark.read.parquet(f"{path}/stats").agg(
             F.sum("n_docs").alias("n_seed")
         )
@@ -800,6 +689,7 @@ def bm25_idf_drift(
         f"{path}/stats_delta",
         ["n_docs"],
         w_mark,
+        key="bpart",
     ).agg(F.sum("n_docs").alias("n_cur"))
     idf_micro = lambda n, df: F.floor(  # noqa: E731
         F.log(
@@ -858,8 +748,7 @@ def bm25_bucket_skew(spark, path: str, id_col: str = "doc_id") -> DataFrame:
     Dense 0..N_BUCKETS-1 spine so silent empty buckets are visible.
     All integer micro math — replayable in the oracle."""
     w_mark = _folded_upto(spark, path)
-    fs, hseed = _fs_of(spark, f"{path}/postings")
-    if fs.exists(hseed):
+    if store.exists(spark, f"{path}/postings"):
         seed = (
             spark.read.parquet(f"{path}/postings")
             .groupBy("term_bucket")
@@ -867,7 +756,7 @@ def bm25_bucket_skew(spark, path: str, id_col: str = "doc_id") -> DataFrame:
         )
     else:  # delta-only store (the ingest door's bootstrap)
         seed = spark.createDataFrame([], "term_bucket int, seed_rows long")
-    if _delta_batches(spark, f"{path}/postings_delta"):
+    if store.child_ids(spark, f"{path}/postings_delta", "batch_id"):
         delta = (
             spark.read.option("basePath", f"{path}/postings_delta")
             .parquet(f"{path}/postings_delta")

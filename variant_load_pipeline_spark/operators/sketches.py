@@ -17,7 +17,7 @@ re-takes the per-source bottom-k holds EXACTLY the sketch a from-
 scratch build over the union of documents would produce (pinned by
 test, and by kmv_overlap_probe_only sharing the estimator SQL of the
 from-scratch computation).  Appends are idempotent per batch partition
-(dynamic overwrite — the append_ivf_batch recipe); duplicate hashes
+(``store.overwrite_partitions``); duplicate hashes
 across generations collapse in the reader's DISTINCT, so sketch reads
 need no crash-window caveats at all.
 
@@ -35,6 +35,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window as W
+
+from .. import store
 
 KMV_K = 128
 
@@ -94,21 +96,12 @@ def append_kmv_batch(
     Unlike the BM25/IVF appends there is no disjointness precondition:
     KMV tolerates arbitrary overlap between batches by construction
     (duplicate hashes collapse in the merge's DISTINCT)."""
-    spark = batch.sparkSession
     sk = _source_bottom_k(batch, k, text_col, src_col).withColumn(
         "batch_id", F.lit(batch_id)
     )
-    old = spark.conf.get("spark.sql.sources.partitionOverwriteMode", None)
-    spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-    try:
-        sk.write.mode("overwrite").partitionBy(
-            "batch_id", "source"
-        ).parquet(f"{path}/sketches_delta")
-    finally:
-        if old is not None:
-            spark.conf.set("spark.sql.sources.partitionOverwriteMode", old)
-        else:
-            spark.conf.unset("spark.sql.sources.partitionOverwriteMode")
+    store.overwrite_partitions(
+        sk, f"{path}/sketches_delta", ["batch_id", "source"]
+    )
 
 
 def read_kmv_sketches(spark, path: str, k: int = KMV_K) -> DataFrame:
@@ -120,19 +113,13 @@ def read_kmv_sketches(spark, path: str, k: int = KMV_K) -> DataFrame:
     — the LSM-style bootstrap every other store supports) serves from
     the delta union alone; the first fold creates the seed."""
     seed_dir = f"{path}/sketches"
-    hseed = spark._jvm.org.apache.hadoop.fs.Path(seed_dir)
-    fs = hseed.getFileSystem(spark._jsc.hadoopConfiguration())
     sk = (
         spark.read.parquet(seed_dir).select("source", "h")
-        if fs.exists(hseed)
+        if store.exists(spark, seed_dir)
         else None
     )
     delta_dir = f"{path}/sketches_delta"
-    hpath = spark._jvm.org.apache.hadoop.fs.Path(delta_dir)
-    if fs.exists(hpath) and any(
-        st.getPath().getName().startswith("batch_id=")
-        for st in fs.listStatus(hpath)
-    ):
+    if store.child_ids(spark, delta_dir, "batch_id"):
         # explicit basePath: partition inference must never guess a
         # common root from the leaf listing (a fold deleting one batch
         # dir between two reads in a session otherwise trips
@@ -164,43 +151,24 @@ def compact_kmv_sketches(spark, path: str, upto_batch_id: int, k: int = KMV_K) -
     whole job is O(sources × k × generations) rows, never a corpus
     scan.  Uncommitted batches (> ``upto_batch_id``) stay in place.
 
-    Crash-safe (temp write -> rename swap -> delete folded partitions
-    last): a delete-crash leaves folded rows in both the seed and a
-    leftover delta — harmless, the reader's DISTINCT collapses them
-    and the next fold removes the leftovers.  Same checkpoint contract
+    Crash-safe by the store.py protocol (whole-table swap through
+    ``.sketches_tmp`` / ``.sketches_old``): a delete-crash leaves folded
+    rows in both the seed and a leftover delta — harmless, the reader's
+    DISTINCT collapses them and the next fold removes the leftovers.  Same checkpoint contract
     as every other fold: only fold batch ids the stream has committed.
     Returns the number of batch partitions folded."""
-    jvm = spark._jvm
-    conf = spark._jsc.hadoopConfiguration()
-
-    def fs_path(s):
-        return jvm.org.apache.hadoop.fs.Path(s)
-
-    fs = fs_path(path).getFileSystem(conf)
     live, old = f"{path}/sketches", f"{path}/.sketches_old"
-    # two-state recovery (whole-table swap: the store is model-sized)
-    if fs.exists(fs_path(old)):
-        if not fs.exists(fs_path(live)):
-            if not fs.rename(fs_path(old), fs_path(live)):
-                raise IOError(
-                    f"kmv compaction recovery: {old} -> {live} failed"
-                )
-        else:
-            fs.delete(fs_path(old), True)
+    store.recover(spark, live, old)
     delta_dir = f"{path}/sketches_delta"
-    if not fs.exists(fs_path(delta_dir)):
-        return 0
-    batches = sorted(
-        int(st.getPath().getName().split("=", 1)[1])
-        for st in fs.listStatus(fs_path(delta_dir))
-        if st.getPath().getName().startswith("batch_id=")
-    )
-    committed = [b for b in batches if b <= upto_batch_id]
+    committed = [
+        b
+        for b in store.child_ids(spark, delta_dir, "batch_id")
+        if b <= upto_batch_id
+    ]
     if not committed:
         return 0
     # a delta-only store (the LSM bootstrap) has no seed yet: the first
     # fold creates it from the committed deltas alone
-    had_seed = fs.exists(fs_path(live))
     delta = (
         spark.read.option("basePath", delta_dir)
         .parquet(*[f"{delta_dir}/batch_id={b}" for b in committed])
@@ -208,7 +176,7 @@ def compact_kmv_sketches(spark, path: str, upto_batch_id: int, k: int = KMV_K) -
     )
     sk = (
         spark.read.parquet(live).select("source", "h").unionByName(delta)
-        if had_seed
+        if store.exists(spark, live)
         else delta
     ).distinct()
     wnd = W.partitionBy("source").orderBy("h")
@@ -218,22 +186,11 @@ def compact_kmv_sketches(spark, path: str, upto_batch_id: int, k: int = KMV_K) -
         .select("source", "h")
     )
     tmp = f"{path}/.sketches_tmp"
-    fs.delete(fs_path(tmp), True)
+    store.delete(spark, tmp)
     merged.write.mode("overwrite").partitionBy("source").parquet(tmp)
-    if had_seed and not fs.rename(fs_path(live), fs_path(old)):
-        raise IOError(f"kmv compaction: rename {live} -> {old} failed")
-    if not fs.rename(fs_path(tmp), fs_path(live)):
-        if had_seed:
-            fs.rename(fs_path(old), fs_path(live))
-        raise IOError(f"kmv compaction: rename {tmp} -> {live} failed")
-    for b in committed:
-        fs.delete(fs_path(f"{delta_dir}/batch_id={b}"), True)
-    if not any(
-        st.getPath().getName().startswith("batch_id=")
-        for st in fs.listStatus(fs_path(delta_dir))
-    ):
-        fs.delete(fs_path(delta_dir), True)
-    fs.delete(fs_path(old), True)
+    store.swap(spark, live, tmp, old)
+    store.drop_children(spark, delta_dir, committed, "batch_id")
+    store.delete(spark, old)
     return len(committed)
 
 

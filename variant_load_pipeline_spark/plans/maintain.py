@@ -3,12 +3,13 @@
 At 100 TB the silent killer is file-count explosion — thousands of
 micro-batch appends or over-partitioned writes leave millions of sub-MB
 parquet files, and every downstream scan pays per-file open/footer cost.
-Compaction is the standing maintenance job: read the fragmented table,
-coalesce to size-targeted files, atomically swap.
+Compaction is the standing maintenance job: read the fragmented table
+and rewrite it to size-targeted files at a new path (``compact``); the
+caller audits the copy with ``fragment_stats`` and switches paths.
 
-These helpers run on any Hadoop-visible path; file enumeration uses the
-JVM FileSystem API (not os.listdir), so the same code works on HDFS/S3A
-in cluster mode.
+These helpers run on any Hadoop-visible path; file enumeration goes
+through store.files (the Hadoop FileSystem API, not os.listdir), so the
+same code works on HDFS/S3A in cluster mode.
 """
 
 from __future__ import annotations
@@ -17,6 +18,8 @@ import math
 from dataclasses import dataclass
 
 from pyspark.sql import DataFrame, SparkSession
+
+from .. import store
 
 
 @dataclass
@@ -30,30 +33,14 @@ class FragmentStats:
         return self.total_bytes / self.n_files if self.n_files else 0.0
 
 
-def _list_parquet_files(spark: SparkSession, path: str):
-    """(path, length) for every data file under `path`, via the Hadoop
-    FileSystem API (portable to HDFS/S3A, unlike os.walk)."""
-    jvm = spark._jvm
-    conf = spark._jsc.hadoopConfiguration()
-    p = jvm.org.apache.hadoop.fs.Path(path)
-    fs = p.getFileSystem(conf)
-    out = []
-    it = fs.listFiles(p, True)
-    while it.hasNext():
-        st = it.next()
-        name = st.getPath().getName()
-        if name.endswith(".parquet"):
-            out.append((st.getPath().toString(), st.getLen()))
-    return out
-
-
 def fragment_stats(spark: SparkSession, path: str) -> FragmentStats:
-    files = _list_parquet_files(spark, path)
-    n_rows = spark.read.parquet(path).count()
+    sizes = [
+        n for f, n, _ in store.files(spark, path) if f.endswith(".parquet")
+    ]
     return FragmentStats(
-        n_files=len(files),
-        total_bytes=sum(b for _, b in files),
-        n_rows=n_rows,
+        n_files=len(sizes),
+        total_bytes=sum(sizes),
+        n_rows=spark.read.parquet(path).count(),
     )
 
 

@@ -292,10 +292,11 @@ def _annotate_with_prep(
 def _jvm_loc_near(fcol, vs_, ve_, nc_y):
     """JVM replica of processFeatures' location_name / near_splice_site
     algebra (:256-291, :310-396, :337-358) over the sorted feature array:
-    returns (loc_arr, near, in_exon) Columns.  Shared by the broadcast
-    and chunked kernels so both paths compute byte-identical strings.
-    ``vs_``/``ve_`` may be plain Columns (per-pair rows) or lambda
-    variables (per-variant structs inside a transform over ``vars``)."""
+    returns (loc_arr, near, in_exon) Columns.  Only the broadcast path
+    (annotate_variants) calls it; the chunked kernel computes the same
+    strings in Python through annotate_pair.  ``vs_``/``ve_`` may be
+    plain Columns (per-pair rows) or lambda variables (per-variant
+    structs inside a transform over ``vars``)."""
 
     def _contains(f):
         return (f["start_pos"] <= vs_) & (f["stop_pos"] >= ve_)

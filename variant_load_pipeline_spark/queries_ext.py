@@ -2460,18 +2460,12 @@ def _data_fingerprint(spark, sf_dir: str, table: str) -> str:
     same code fingerprints HDFS/S3A stores."""
     import hashlib
 
-    jvm = spark._jvm
-    root = jvm.org.apache.hadoop.fs.Path(f"{sf_dir}/{table}.parquet")
-    fs = root.getFileSystem(spark._jsc.hadoopConfiguration())
-    entries = []
-    it = fs.listFiles(root, True)
-    while it.hasNext():
-        st = it.next()
-        p = st.getPath().toString()
-        entries.append(
-            f"{p.rsplit('/' + table + '.parquet/', 1)[-1]}|"
-            f"{st.getLen()}|{st.getModificationTime()}"
-        )
+    from .store import files
+
+    entries = [
+        f"{p.rsplit('/' + table + '.parquet/', 1)[-1]}|{n}|{mtime}"
+        for p, n, mtime in files(spark, f"{sf_dir}/{table}.parquet")
+    ]
     return hashlib.md5("\n".join(sorted(entries)).encode()).hexdigest()[:10]
 
 

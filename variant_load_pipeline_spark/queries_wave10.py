@@ -30,6 +30,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window as W
 
+from . import store
 from .queries import _REGISTRY, load, register
 
 
@@ -45,11 +46,6 @@ def _salted_ivf_path(spark, sf_dir: str, tag: str, extra: str = "") -> str:
         ).encode()
     ).hexdigest()[:10]
     return _scan_path(sf_dir, f"{tag}_{salt}")
-
-
-def _fs(spark, path: str):
-    hpath = spark._jvm.org.apache.hadoop.fs.Path(path)
-    return hpath.getFileSystem(spark._jsc.hadoopConfiguration()), hpath
 
 
 # ===========================================================================
@@ -89,9 +85,8 @@ def contrastive_triplets_probe_only(
         spark, sf_dir, "ivf_index_trip_ro", f"nprobe={_TRIPLET_NPROBE}"
     )
     # centroids writes LAST in write_ivf_index, so its _SUCCESS marker
-    # gates against a half-written index (Hadoop FS: works on HDFS/S3A)
-    fs, marker = _fs(spark, f"{path}/centroids/_SUCCESS")
-    if not fs.exists(marker):
+    # gates against a half-written index
+    if not store.exists(spark, f"{path}/centroids/_SUCCESS"):
         write_ivf_index(e, path)
     # the timed path: probe + own-list union + mine, exactly the
     # contrastive_triplets_ivf body (cited there; reference semantics
@@ -198,15 +193,14 @@ def ivf_compact_probe_only(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     # the _FOLDED marker is written only after the whole build-append-
     # fold chain completed, so a crash mid-build rebuilds from scratch
-    fs, marker = _fs(spark, f"{path}/_FOLDED")
-    if not fs.exists(marker):
+    if not store.exists(spark, f"{path}/_FOLDED"):
         shutil.rmtree(path, ignore_errors=True)
         write_ivf_index(e.filter(F.col("vec_id") % 4 != 3), path)
         append_ivf_batch(
             e.filter(F.col("vec_id") % 4 == 3), path, batch_id=1
         )
         compact_ivf_index(spark, path, upto_batch_id=1)
-        fs.create(marker, True).close()
+        store.touch(spark, f"{path}/_FOLDED")
     # the timed path: a batch probe against the folded on-disk index
     anchors = e.filter(F.col("vec_id") % 100 == 0).select(
         F.col("vec_id").alias("qid"),

@@ -53,8 +53,9 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window as W
 
+from . import store
 from .queries import _NORM_SQL, _SHINGLES_SQL, _REGISTRY, load, register
-from .queries_wave10 import _fs, _salted_ivf_path
+from .queries_wave10 import _salted_ivf_path
 
 # ===========================================================================
 # RHO-loss data selection
@@ -227,8 +228,7 @@ def ann_filtered_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     # centroids writes LAST in write_ivf_index: its _SUCCESS gates
     # against serving a half-written index
-    fs, marker = _fs(spark, f"{path}/centroids/_SUCCESS")
-    if not fs.exists(marker):
+    if not store.exists(spark, f"{path}/centroids/_SUCCESS"):
         write_ivf_index(e, path)
     anchors = e.filter(F.col("vec_id") % 100 == 1).select(
         F.col("vec_id").alias("qid"),
@@ -815,8 +815,7 @@ def maxsim_rerank_ivf(spark: SparkSession, sf_dir: str) -> DataFrame:
     path = _salted_ivf_path(
         spark, sf_dir, "ivf_msr", extra=f"g={_MS_GROUP}|np={_MSR_NPROBE}"
     )
-    fs, marker = _fs(spark, f"{path}/centroids/_SUCCESS")
-    if not fs.exists(marker):
+    if not store.exists(spark, f"{path}/centroids/_SUCCESS"):
         write_ivf_index(
             reps, path, list_col="label", id_col="gdoc", vec_col="rv"
         )
@@ -912,8 +911,7 @@ def bm25_persisted_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     path = _scan_path(sf_dir, f"bm25_index_{salt}")
     # stats writes LAST in write_bm25_index: its _SUCCESS gates against
     # serving a half-written index
-    fs, marker = _fs(spark, f"{path}/stats/_SUCCESS")
-    if not fs.exists(marker):
+    if not store.exists(spark, f"{path}/stats/_SUCCESS"):
         lx.write_bm25_index(load(spark, sf_dir, "documents"), path)
     return lx.bm25_probe_topk(spark, path, _BM25_TERMS, k=20)
 
@@ -951,8 +949,7 @@ def rho_persisted_selection(spark: SparkSession, sf_dir: str) -> DataFrame:
     path = _scan_path(sf_dir, f"rho_model_{salt}")
     # consts writes LAST in write_rho_model: its _SUCCESS gates against
     # serving a half-written model
-    fs, marker = _fs(spark, f"{path}/consts/_SUCCESS")
-    if not fs.exists(marker):
+    if not store.exists(spark, f"{path}/consts/_SUCCESS"):
         ing.write_rho_model(d, path)
     sc = ing.rho_score_persisted(spark, path, d)
     wnd = W.partitionBy("source").orderBy(

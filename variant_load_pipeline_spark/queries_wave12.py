@@ -63,8 +63,9 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window as W
 
+from . import store
 from .queries import _NORM_SQL, _SHINGLES_SQL, _REGISTRY, load, register
-from .queries_wave10 import _fs, _salted_ivf_path
+from .queries_wave10 import _salted_ivf_path
 
 # ===========================================================================
 # Persisted-BM25 maintenance: fold + monitors
@@ -99,8 +100,7 @@ def _build_split_bm25(spark, sf_dir: str, tag: str, recipe_src: str,
     from .operators import lexical as lx
 
     path = _salted_lex_path(spark, sf_dir, tag, recipe_src)
-    fs, marker = _fs(spark, f"{path}/_READY")
-    if not fs.exists(marker):
+    if not store.exists(spark, f"{path}/_READY"):
         shutil.rmtree(path, ignore_errors=True)
         d = load(spark, sf_dir, "documents")
         lx.write_bm25_index(d.filter(F.col("doc_id") % 2 == 0), path)
@@ -109,7 +109,7 @@ def _build_split_bm25(spark, sf_dir: str, tag: str, recipe_src: str,
         )
         if fold:
             lx.compact_bm25_index(spark, path, upto_batch_id=0)
-        fs.create(marker, True).close()
+        store.touch(spark, f"{path}/_READY")
     return path
 
 
@@ -380,8 +380,7 @@ def kmv_overlap_probe_only(spark: SparkSession, sf_dir: str) -> DataFrame:
         ).encode()
     ).hexdigest()[:10]
     path = _scan_path(sf_dir, f"kmv_store_{salt}")
-    fs, marker = _fs(spark, f"{path}/_READY")
-    if not fs.exists(marker):
+    if not store.exists(spark, f"{path}/_READY"):
         shutil.rmtree(path, ignore_errors=True)
         d = load(spark, sf_dir, "documents")
         sx.write_kmv_sketches(
@@ -390,7 +389,7 @@ def kmv_overlap_probe_only(spark: SparkSession, sf_dir: str) -> DataFrame:
         sx.append_kmv_batch(
             d.filter(F.col("doc_id") % 2 == 1), path, batch_id=0, k=_KMV_K
         )
-        fs.create(marker, True).close()
+        store.touch(spark, f"{path}/_READY")
     sk = sx.read_kmv_sketches(spark, path, k=_KMV_K)
     return sx.kmv_pair_estimates(sk, k=_KMV_K)
 
@@ -516,8 +515,7 @@ def ann_filtered_auto_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
             inspect.getsource(ann_filtered_auto_topk).encode()
         ).hexdigest()[:10],
     )
-    fs, marker = _fs(spark, f"{path}/centroids/_SUCCESS")
-    if not fs.exists(marker):
+    if not store.exists(spark, f"{path}/centroids/_SUCCESS"):
         write_ivf_index(e, path)
     pred = F.col("vec_id") % _FA_MOD == 0
     strategy, nprobe = choose_filtered_probe(
@@ -650,8 +648,7 @@ def bm25_filtered_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
         ).encode()
     ).hexdigest()[:10]
     path = _scan_path(sf_dir, f"bm25_index_{salt}")
-    fs, marker = _fs(spark, f"{path}/stats/_SUCCESS")
-    if not fs.exists(marker):
+    if not store.exists(spark, f"{path}/stats/_SUCCESS"):
         lx.write_bm25_index(load(spark, sf_dir, "documents"), path)
     return lx.bm25_probe_topk(
         spark,
@@ -715,8 +712,7 @@ def maxsim_rerank_persisted(spark: SparkSession, sf_dir: str) -> DataFrame:
     rep_path = _salted_ivf_path(
         spark, sf_dir, "ivf_msr", extra=f"g={_MS_GROUP}|np={_MSR_NPROBE}"
     )
-    fs, marker = _fs(spark, f"{rep_path}/centroids/_SUCCESS")
-    if not fs.exists(marker):
+    if not store.exists(spark, f"{rep_path}/centroids/_SUCCESS"):
         min_tok = (
             t.groupBy("gdoc")
             .agg(F.min("tok_id").alias("mt"))
@@ -746,15 +742,14 @@ def maxsim_rerank_persisted(spark: SparkSession, sf_dir: str) -> DataFrame:
         ).encode()
     ).hexdigest()[:10]
     tok_path = _scan_path(sf_dir, f"msr_tokens_{tsalt}")
-    fs2, marker2 = _fs(spark, f"{tok_path}/_READY")
-    if not fs2.exists(marker2):
+    if not store.exists(spark, f"{tok_path}/_READY"):
         t.withColumn(
             "gbucket",
             F.pmod(F.col("gdoc"), F.lit(_TOK_BUCKETS)).cast("int"),
         ).write.mode("overwrite").partitionBy("gbucket").parquet(
             f"{tok_path}/tokens"
         )
-        fs2.create(marker2, True).close()
+        store.touch(spark, f"{tok_path}/_READY")
     tok = spark.read.parquet(f"{tok_path}/tokens")
     # first stage: probe the rep index (maxsim_rerank_ivf verbatim)
     reps_all = read_ivf_lists(spark, rep_path, id_col="gdoc", vec_col="rv")
@@ -960,8 +955,7 @@ def rrf_hybrid_filtered_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
         ).encode()
     ).hexdigest()[:10]
     lex_path = _scan_path(sf_dir, f"bm25_index_{salt}")
-    fs, marker = _fs(spark, f"{lex_path}/stats/_SUCCESS")
-    if not fs.exists(marker):
+    if not store.exists(spark, f"{lex_path}/stats/_SUCCESS"):
         lx.write_bm25_index(load(spark, sf_dir, "documents"), lex_path)
     s20 = lx.bm25_probe_topk(
         spark, lex_path, _BM25_TERMS, k=_RRF_TOPN, predicate=pred_doc
@@ -972,8 +966,7 @@ def rrf_hybrid_filtered_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     ivf_path = _salted_ivf_path(
         spark, sf_dir, "ivf_filt", extra=f"nprobe={_FILT_NPROBE}"
     )
-    fs2, marker2 = _fs(spark, f"{ivf_path}/centroids/_SUCCESS")
-    if not fs2.exists(marker2):
+    if not store.exists(spark, f"{ivf_path}/centroids/_SUCCESS"):
         write_ivf_index(e, ivf_path)
     qv = [
         float(x)

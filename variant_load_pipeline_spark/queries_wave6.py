@@ -43,6 +43,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window as W
 
+from . import store
 from .functions import text as T
 from .queries import load, register, spread
 
@@ -1034,10 +1035,7 @@ def keeplist_delta_refresh_only(
     path = _scan_path(sf_dir, f"keeplist_snapshot_ro_{salt}")
     # build-once: only the FIRST run (cold snapshot) pays the snapshot
     # chain + write; _SUCCESS gates against a half-written snapshot.
-    # Hadoop FS existence check so the same code sees an HDFS/S3A store.
-    marker = spark._jvm.org.apache.hadoop.fs.Path(f"{path}/_SUCCESS")
-    fs = marker.getFileSystem(spark._jsc.hadoopConfiguration())
-    if not fs.exists(marker):
+    if not store.exists(spark, f"{path}/_SUCCESS"):
         write_keeplist(
             corpus_keeplist(
                 d.filter(F.col("doc_id") < 250), threshold=0.8

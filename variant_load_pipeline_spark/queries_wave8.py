@@ -46,6 +46,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window as W
 
+from . import store
 from .queries import load, register, spread
 from .queries_wave7 import _COS6
 
@@ -773,11 +774,7 @@ def lsh_match_probe_only(spark: SparkSession, sf_dir: str) -> DataFrame:
         ).encode()
     ).hexdigest()[:10]
     path = _scan_path(sf_dir, f"lsh_index_ro_{salt}")
-    marker = spark._jvm.org.apache.hadoop.fs.Path(
-        f"{path}/shingles/_SUCCESS"
-    )
-    fs = marker.getFileSystem(spark._jsc.hadoopConfiguration())
-    if not fs.exists(marker):
+    if not store.exists(spark, f"{path}/shingles/_SUCCESS"):
         write_lsh_index(d.filter(F.col("doc_id") % 10 != 0), path)
     # the timed path: the batch probes ONLY the on-disk index
     out = match_lsh_index(

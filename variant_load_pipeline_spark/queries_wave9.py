@@ -23,6 +23,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window as W
 
+from . import store
 from .queries import load, register
 from .queries_wave7 import _COS6
 
@@ -335,12 +336,8 @@ def ann_hard_negatives_probe_only(
     ).hexdigest()[:10]
     path = _scan_path(sf_dir, f"ivf_index_hn_ro_{salt}")
     # centroids writes LAST in write_ivf_index, so its _SUCCESS marker
-    # gates against a half-written index (Hadoop FS: works on HDFS/S3A)
-    marker = spark._jvm.org.apache.hadoop.fs.Path(
-        f"{path}/centroids/_SUCCESS"
-    )
-    fs = marker.getFileSystem(spark._jsc.hadoopConfiguration())
-    if not fs.exists(marker):
+    # gates against a half-written index
+    if not store.exists(spark, f"{path}/centroids/_SUCCESS"):
         write_ivf_index(e, path)
     # the timed path: anchors probe ONLY the on-disk index
     anchors = e.filter(F.col("vec_id") % 50 == 0).select(

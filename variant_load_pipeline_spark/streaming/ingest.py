@@ -19,8 +19,8 @@ and every store's maintenance job.
   ``compact_lsh_index`` / ``compact_kept`` / ``compact_epoch_manifest``
   (training order preserved bit-for-bit) / ``compact_quality_counts`` /
   ``compact_drift_counts`` (origin-batch dedup, never double-counts) —
-  each with ``mode='tier'`` for O(delta) folds (LSM tiering) and
-  crash-safe temp-write/rename/delete-last swaps.
+  each with ``mode='tier'`` for O(delta) folds (LSM tiering), swapped
+  in by the store.py protocol.
 
 The founding gate, dedup-at-ingest: each arriving micro-batch of
 documents is matched against a PERSISTED LSH index, non-duplicates
@@ -49,6 +49,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from .. import store
 from ..operators.dedup import (
     _banded_from_hashes,
     _shingle_hash_table,
@@ -216,17 +217,12 @@ def read_kept_asof(
     """
     if fold < 1:
         raise ValueError(f"fold must be >= 1, got {fold}")
-    hpath = spark._jvm.org.apache.hadoop.fs.Path(kept_path)
-    fs = hpath.getFileSystem(spark._jsc.hadoopConfiguration())
-    gens = sorted(
-        (
-            int(st.getPath().getName().split("=", 1)[1])
-            for st in fs.listStatus(hpath)
-            if st.getPath().getName().startswith("ingest_batch=")
-            and int(st.getPath().getName().split("=", 1)[1]) < 0
-        ),
-        reverse=True,  # creation order: ids strictly decrease over time
-    )
+    # creation order: generation ids strictly decrease over time
+    gens = [
+        g
+        for g in reversed(store.child_ids(spark, kept_path, "ingest_batch"))
+        if g < 0
+    ]
     if fold > len(gens):
         raise ValueError(
             f"store has {len(gens)} generations, asked for fold {fold}"
@@ -1105,25 +1101,17 @@ def compact_lsh_index(
     on a redelivery — only batches the checkpoint guarantees will never
     be redelivered are safe to fold.
 
-    Crash-recoverable swap order (no window ever MISSES index rows;
-    duplicate rows are harmless — candidates are de-duplicated and
-    Jaccard is computed per pair):
-
-    1. write the merged rows to a dot-prefixed temp dir (invisible to
-       partition discovery);
-    2. rename it to a NEW seed generation ``ingest_batch=<g>`` where
-       ``g`` = (most negative existing generation) - 1 — from this
-       instant the index is complete-with-duplicates;
-    3. delete the folded partitions last.
-
-    A crash before (2) leaves only hidden temp files (overwritten by the
-    next run); a crash during (3) leaves duplicates that the next
-    compaction folds (readers stay correct throughout).  Generations are
-    any ``ingest_batch<0``: lsh_ingest_sink's ``!= batch_id`` exclusion
-    (batch ids are >= 0) always keeps them in the match.
+    The merged rows go through ``.compact_tmp`` and are swapped in
+    (store.py) as a NEW seed generation ``ingest_batch=<g>``, ``g`` =
+    (most negative existing generation) - 1; the folded partitions are
+    deleted last.  No window ever MISSES index rows: a crash before the
+    deletes leaves duplicates, which are harmless (candidates are
+    de-duplicated and Jaccard is computed per pair) and which the next
+    compaction folds.  Generations are any ``ingest_batch<0``:
+    lsh_ingest_sink's ``!= batch_id`` exclusion (batch ids are >= 0)
+    always keeps them in the match.
 
     Returns the number of batch (non-generation) partitions folded.
-    Uses the Hadoop FileSystem API so the same code runs on HDFS/S3A.
     """
     folded = 0
     for sub in ("bands", "shingles"):
@@ -1137,29 +1125,22 @@ def compact_lsh_index(
 
 
 def _list_ingest_partitions(
-    fs, fs_path, root: str, upto_batch_id: int, mode: str
-) -> tuple[list[str], list[int], list[int]]:
+    spark, root: str, upto_batch_id: int, mode: str
+) -> tuple[list[int], list[int]]:
     """Shared partition listing for every generation fold: returns
-    (foldable partition names, their batch ids, ALL generation ids —
-    including the ones a tier fold leaves untouched).  Validates
-    ``mode`` here so every fold rejects a typo loudly instead of
-    silently running the expensive full path."""
+    (the ``ingest_batch`` ids to fold, ALL generation ids — including
+    the ones a tier fold leaves untouched).  Validates ``mode`` here so
+    every fold rejects a typo loudly instead of silently running the
+    expensive full path."""
     if mode not in ("full", "tier"):
         raise ValueError(f"mode must be 'full' or 'tier', got {mode!r}")
-    parts, bids, all_gens = [], [], []
-    for st in fs.listStatus(fs_path(root)):
-        name = st.getPath().getName()
-        if not name.startswith("ingest_batch="):
-            continue
-        bid = int(name.split("=", 1)[1])
-        if bid < 0:
-            all_gens.append(bid)
-        if mode == "tier" and bid < 0:
-            continue  # tier: existing generations stay byte-identical
-        if bid < 0 or bid <= upto_batch_id:
-            parts.append(name)
-            bids.append(bid)
-    return parts, bids, all_gens
+    ids = store.child_ids(spark, root, "ingest_batch")
+    all_gens = [b for b in ids if b < 0]
+    # tier: existing generations stay byte-identical
+    bids = [
+        b for b in ids if 0 <= b <= upto_batch_id or (b < 0 and mode == "full")
+    ]
+    return bids, all_gens
 
 
 def _fold_ingest_partitions(
@@ -1169,15 +1150,16 @@ def _fold_ingest_partitions(
     dedup_cols: list[str] | None = None,
     mode: str = "full",
 ) -> int:
-    """The generation-fold shared by compact_lsh_index and compact_kept:
-    merge every ``ingest_batch=<bid>`` partition under ``root`` with
-    bid < 0 (generations) or bid <= upto_batch_id (committed batches)
-    into one fresh generation, crash-safe (write temp, rename, delete
-    sources last; abort if the rename reports failure).  With
-    ``dedup_cols``, the merged rows dropDuplicates on those columns —
-    required when duplicates in the folded store are NOT harmless (the
-    kept corpus), making the fold idempotent across a crash during the
-    delete phase.  Returns the number of batch partitions folded.
+    """The generation-fold shared by compact_lsh_index, compact_kept and
+    the count stores: merge every ``ingest_batch=<bid>`` partition under
+    ``root`` with bid < 0 (generations) or bid <= upto_batch_id
+    (committed batches) into one fresh generation (temp write, then
+    ``store.swap`` to the new generation name, then the sources are
+    deleted).  With ``dedup_cols``, the merged rows dropDuplicates on
+    those columns — required when duplicates in the folded store are
+    NOT harmless (the kept corpus), making the fold idempotent across a
+    crash during the delete phase.  Returns the number of batch
+    partitions folded.
 
     ``mode='tier'`` folds ONLY committed BATCH partitions (bid >= 0)
     into the new generation and leaves existing generations' files
@@ -1187,26 +1169,20 @@ def _fold_ingest_partitions(
     same bounded-staleness window as compact_ivf_index's delete-crash
     case, so readers needing exactly-once rows in that window
     dropDuplicates themselves (the compact_kept contract verbatim)."""
-    jvm = spark._jvm
-    conf = spark._jsc.hadoopConfiguration()
-
-    def fs_path(s):
-        return jvm.org.apache.hadoop.fs.Path(s)
-
-    fs = fs_path(root).getFileSystem(conf)
-    parts, bids, all_gens = _list_ingest_partitions(
-        fs, fs_path, root, upto_batch_id, mode
+    bids, all_gens = _list_ingest_partitions(
+        spark, root, upto_batch_id, mode
     )
-    if not parts:
+    if not bids:
         return 0
-    if len(parts) == 1 and bids[0] < 0:
+    if len(bids) == 1 and bids[0] < 0:
         return 0  # a lone generation is already compact; a lone BATCH
         # partition still folds (it must become a generation, or the
         # redelivery exclusion guard keeps applying to committed rows)
     # the new generation id must clear EVERY existing generation, even
     # the ones a tier fold leaves out of the merge
     new_gen = min([-1] + all_gens) - 1
-    merged = spark.read.parquet(*[f"{root}/{p}" for p in parts])
+    parts = [f"{root}/ingest_batch={b}" for b in bids]
+    merged = spark.read.parquet(*parts)
     if dedup_cols:
         merged = merged.dropDuplicates(dedup_cols)
     tmp = f"{root}/.compact_tmp"
@@ -1217,25 +1193,15 @@ def _fold_ingest_partitions(
     n_files = sum(
         1
         for p in parts
-        for f in fs.listStatus(fs_path(f"{root}/{p}"))
-        if f.getPath().getName().endswith(".parquet")
+        for f, _, _ in store.files(spark, p)
+        if f.endswith(".parquet")
     )
     n_out = max(
         1, min(n_files // 4 + 1, spark.sparkContext.defaultParallelism)
     )
     merged.coalesce(n_out).write.mode("overwrite").parquet(tmp)
-    # Hadoop FileSystem.rename signals failure by returning false, not
-    # by throwing; falling through to the deletes would destroy the
-    # only copy of the folded partitions.  Abort BEFORE any delete —
-    # the temp dir is dot-prefixed, so readers never see a half state.
-    if not fs.rename(fs_path(tmp), fs_path(f"{root}/ingest_batch={new_gen}")):
-        raise IOError(
-            f"compaction: rename {tmp} -> "
-            f"{root}/ingest_batch={new_gen} failed; aborting before "
-            "deleting source partitions"
-        )
-    for p in parts:
-        fs.delete(fs_path(f"{root}/{p}"), True)
+    store.swap(spark, f"{root}/ingest_batch={new_gen}", tmp)
+    store.drop_children(spark, root, bids, "ingest_batch")
     return len([b for b in bids if b >= 0])
 
 
@@ -1369,22 +1335,14 @@ def compact_epoch_manifest(
     readers needing exactly-once rows in that window dropDuplicates
     (epoch, shard, doc_id), the compact_kept contract.
 
-    Crash-safe: temp write (dot-prefixed) -> rename to the new
-    generation -> delete folded partitions last; rename failure aborts
-    before any delete (the _fold_ingest_partitions recipe).  Returns
-    the number of batch (non-generation) partitions folded.
+    Swapped in through ``.compact_tmp`` by the store.py protocol, as
+    _fold_ingest_partitions does.  Returns the number of batch
+    (non-generation) partitions folded.
     """
-    jvm = spark._jvm
-    conf = spark._jsc.hadoopConfiguration()
-
-    def fs_path(s):
-        return jvm.org.apache.hadoop.fs.Path(s)
-
-    fs = fs_path(manifest_path).getFileSystem(conf)
-    parts, bids, all_gens = _list_ingest_partitions(
-        fs, fs_path, manifest_path, upto_batch_id, mode
+    bids, all_gens = _list_ingest_partitions(
+        spark, manifest_path, upto_batch_id, mode
     )
-    if not parts or (len(parts) == 1 and bids[0] < 0):
+    if not bids or (len(bids) == 1 and bids[0] < 0):
         return 0
     # allocate + validate the destination id BEFORE the fold job runs:
     # an exhausted tier range must fail in milliseconds, not after the
@@ -1413,7 +1371,7 @@ def compact_epoch_manifest(
         )
     merged = (
         spark.read.option("basePath", manifest_path)
-        .parquet(*[f"{manifest_path}/{p}" for p in parts])
+        .parquet(*[f"{manifest_path}/ingest_batch={b}" for b in bids])
         .groupBy("epoch", "shard", "doc_id", "hv")
         # crash-leftover duplicates collapse to the SMALLEST src_batch,
         # so re-folds converge to one deterministic order
@@ -1428,14 +1386,8 @@ def compact_epoch_manifest(
         .partitionBy("epoch", "shard")
         .parquet(tmp)
     )
-    dest = f"{manifest_path}/ingest_batch={new_gen}"
-    if not fs.rename(fs_path(tmp), fs_path(dest)):
-        raise IOError(
-            f"manifest compaction: rename {tmp} -> {dest} failed; "
-            "aborting before deleting source partitions"
-        )
-    for p in parts:
-        fs.delete(fs_path(f"{manifest_path}/{p}"), True)
+    store.swap(spark, f"{manifest_path}/ingest_batch={new_gen}", tmp)
+    store.drop_children(spark, manifest_path, bids, "ingest_batch")
     return len([b for b in bids if b >= 0])
 
 

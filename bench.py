@@ -87,7 +87,6 @@ HEADLINE_V2 = [
     "doc_chunking",
     "sequence_packing",
     "emb_hashing_topk",
-    "mm_jpeg_decode",
     "gopher_quality_filter",
     "paragraph_dedup",
     "dup_span_detect",
@@ -113,7 +112,6 @@ HEADLINE_V2 = [
     "bloom_prejoin_filter",
     "zorder_layout_stats",
     "pagerank_cosupply",
-    "q18_large_orders",
     "events_type_pivot",
     "edit_distance_dup_pairs",
     "containment_pairs",
@@ -122,14 +120,9 @@ HEADLINE_V2 = [
     "events_interval_join",
     "events_props_parse",
     "sql_interface_rollup",
-    "q4_priority_exists",
-    "q14_promo_revenue_share",
     "events_resample_ffill",
     "dq_validation_report",
-    "mm_image_dhash_pairs",
-    "mm_audio_ahash_pairs",
     "rollup_incremental_refresh",
-    "null_semantics_suite",
     "bucketed_join_revenue",
     "per_group_linreg",
     "source_kl_divergence",
@@ -147,8 +140,6 @@ HEADLINE_V2 = [
     "hll_distinct_merge",
     "event_pattern_mining",
     "jl_projection_recall",
-    "window_functions_suite",
-    "set_operations_suite",
 ]
 
 # third, versioned group: round-6 additions (index-persistence
@@ -161,14 +152,6 @@ HEADLINE_V3 = [
     "lsh_incremental_match",
     "bpe_apply_fixed",
     "leakage_safe_split",
-    # wave-6 TPC-H completion (one per heavy join family; the light
-    # single-agg shapes are covered by the existing q6/q14 rows)
-    "q2_min_cost_supplier",
-    "q7_volume_shipping",
-    "q8_market_share",
-    "q9_product_profit",
-    "q10_returned_items",
-    "q21_waiting_suppliers",
     # wave-6 curation operators
     "dsir_importance_weights",
     "unimax_allocation",
@@ -185,12 +168,8 @@ HEADLINE_V3 = [
     "quality_lr_train",
     "quality_lr_score",
     "a_grouping_sets_counts",
-    "datetime_functions_suite",
-    "array_functions_suite",
-    "string_functions_suite",
     "user_event_sequences",
     "negative_sampling_topk",
-    "join_types_suite",
     "mixing_schedule_anneal",
     "span_corruption_preview",
     "lm_persisted_surprisal",

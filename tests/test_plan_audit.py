@@ -224,7 +224,7 @@ def test_zygosity_stays_in_codegen(spark):
 def test_no_python_udf_in_query_paths(spark, name):
     # BatchEvalPython = row-at-a-time Python UDF; ArrowEvalPython = pandas
     # UDF.  Neither belongs in these query paths — Arrow-batched kernels are
-    # reserved for the CDS-assembly/multimodal/vectorized-ANN paths
+    # reserved for the CDS-assembly/vectorized-ANN paths
     # (ann_cosine_topk intentionally uses mapInPandas + numpy matmul).
     plan = plan_of(spark, name)
     assert "BatchEvalPython" not in plan
@@ -236,9 +236,9 @@ def test_no_python_udf_in_query_paths(spark, name):
     ["w6_first_match_wins", "j16_consume_first_match", "j4_dedup_upsert_ids",
      "w1_sorted_export_rank", "j6_j8_transcript_features",
      # wave-6 order-sensitive additions: deterministic shard order,
-     # sequence order, top-k ties, PMI rank ties, GD train reproducibility
+     # sequence order, PMI rank ties, GD train reproducibility
      "training_shard_assignment", "user_event_sequences",
-     "q10_returned_items", "colloc_pmi_topk", "quality_lr_train"],
+     "colloc_pmi_topk", "quality_lr_train"],
 )
 def test_order_sensitive_queries_partitioning_invariant(spark, name):
     """The order-dependent operators (first-match-wins, consume-first-match
@@ -490,11 +490,6 @@ def test_interval_join_is_not_nested_loop(spark):
     assert "CartesianProduct" not in plan
 
 
-def test_q18_broadcasts_customer_dim(spark):
-    plan = plan_of(spark, "q18_large_orders")
-    assert "BroadcastHashJoin" in plan
-
-
 def test_zorder_and_salted_stay_jvm_side(spark):
     for name in ("zorder_layout_stats", "j_salted_skew_join"):
         plan = plan_of(spark, name)
@@ -521,15 +516,12 @@ _ALLOWED_UNBOUNDED_JOINS = {
     "ann_lsh_recall",        # recall gate re-runs the exact baseline
     "emb_hashing_topk",      # hash-embed -> exact-baseline comparison
     "mmr_diverse_topk",      # pool ranking seeds from the exact baseline
-    "mm_image_dhash_pairs",  # bounded demo pair join (banding at scale)
-    "mm_audio_ahash_pairs",  # bounded demo pair join (banding at scale)
     "ann_pq_adc_topk",       # broadcast per-query ADC tables x codes
     "ann_pq_persisted_topk",  # same ADC query shape, reloaded index
     "distinct_ngram_estimate",  # 1-row constants broadcast
     "unigram_surprisal",     # 1-row (N, V) constants broadcast
     "bigram_backoff_surprisal",  # 1-row constants broadcast
     "source_kl_divergence",  # 1-row corpus totals broadcast
-    "q14_promo_revenue_share",  # single global ratio, 1-row join
     "dq_validation_report",  # 1-row metrics frame exploded
     "quality_percentile_filter",  # per-lang cutoffs broadcast
     "histogram_quantile_estimate",  # tiny quantile spec cross join
@@ -556,9 +548,6 @@ _ALLOWED_UNBOUNDED_JOINS = {
     "knn_label_predict",     # broadcast held-out query block x corpus
     "nb_lang_classifier",    # broadcast class/vocab model constants
     "jl_projection_recall",  # broadcast query block x corpus (exact baseline)
-    "q11_important_stock",   # 1-row national-total scalar join
-    "q15_top_supplier",      # 1-row max-revenue scalar join
-    "q22_global_sales_opportunity",  # 1-row avg-balance scalar join
     "temperature_mixing_weights",  # 1-row weight-total scalar join
     "colloc_pmi_topk",       # 1-row corpus-total constants
     "ann_hard_negatives",    # broadcast query block x corpus (exact baseline)

@@ -179,10 +179,9 @@ def test_annotate_variants_plan(spark):
     assert by_vid[102]["ref_aa"] is None
 
 
-def test_annotate_variants_chunked_matches_broadcast(spark):
-    """fasta_strategy='chunked' (bucketed sequence table, rebased kernel)
-    produces identical rows to the broadcast path — chunk size forced small
-    so transcripts genuinely span multiple chunks."""
+def _one_transcript(spark):
+    """Variants 101 (exon, C->A) and 102 (intron) on transcript 70 of gene
+    7: two coding exons (1,6)+(9,14) on chromosome 1."""
     variants = spark.createDataFrame(
         [(101, "1", 10, 11, "C", "A"), (102, "1", 7, 8, "G", "A")],
         ["rgd_id", "chromosome", "start_pos", "end_pos", "ref_nuc", "var_nuc"],
@@ -203,6 +202,14 @@ def test_annotate_variants_chunked_matches_broadcast(spark):
          "start_pos", "stop_pos", "map_key"],
     )
     fasta = spark.createDataFrame([("1", SEQ)], ["chromosome", "seq"])
+    return variants, genes, transcripts, features, fasta
+
+
+def test_annotate_variants_chunked_matches_broadcast(spark):
+    """fasta_strategy='chunked' (bucketed sequence table, rebased kernel)
+    produces identical rows to the broadcast path — chunk size forced small
+    so transcripts genuinely span multiple chunks."""
+    variants, genes, transcripts, features, fasta = _one_transcript(spark)
 
     def rows(strategy, chunk):
         out = annotate_variants(
@@ -287,6 +294,49 @@ def test_annotate_variants_chunked_multichrom(spark):
         assert out[k]["var_aa"] == bro[k]["var_aa"]
     # chromosome 2's all-G sequence translates ref to glycine
     assert bro[(202, 80)]["ref_aa"] == "G"
+
+
+def test_existing_pairs_are_dropped_before_the_kernel(spark, monkeypatch):
+    """An incremental load passes the stored VARIANT_TRANSCRIPT keys: the
+    stored pair is missing from the result, and the anti-join sits below
+    the mapInPandas kernel, so that pair never crosses into Python."""
+    variants, genes, transcripts, features, fasta = _one_transcript(spark)
+    existing_vt = spark.createDataFrame(
+        [(101, 70)], ["variant_rgd_id", "transcript_rgd_id"]
+    )
+    import variant_load_pipeline_spark.plans.postprocess as pp
+
+    kernel_pairs = []
+    real_chunked = pp._annotate_chunked
+
+    def spy(pairs, *a, **kw):
+        kernel_pairs.extend(
+            (r["variant_rgd_id"], r["transcript_rgd_id"])
+            for r in pairs.collect()
+        )
+        return real_chunked(pairs, *a, **kw)
+
+    def annotate(strategy):
+        return annotate_variants(
+            variants, genes, transcripts, features, fasta,
+            existing_vt=existing_vt, map_key=1, fasta_strategy=strategy,
+            chunk_size=5,
+        )
+
+    out = annotate("broadcast")
+    monkeypatch.setattr(pp, "_annotate_chunked", spy)
+    for rows in (out.collect(), annotate("chunked").collect()):
+        assert [(r["variant_rgd_id"], r["transcript_rgd_id"]) for r in rows] == [
+            (102, 70)
+        ]
+        assert rows[0]["location_name"] == "INTRON"
+    # chunked: the kernel's input pairs already lack the stored pair (its
+    # plan below the kernel is a checkpoint, so no plan string shows it)
+    assert kernel_pairs == [(102, 70)]
+    plan = out._jdf.queryExecution().optimizedPlan().toString()
+    kernel = plan.index("MapInPandas")
+    assert "Join LeftAnti" in plan[kernel:], plan
+    assert "Join LeftAnti" not in plan[:kernel], plan
 
 
 def test_annotate_indels_chunked_matches_broadcast(spark):

@@ -1,5 +1,5 @@
-"""Wave-6 semantic properties: TPC-H completion queries and the curation
-operators (DSIR / UniMax / CDC / PMI / hard negatives / mixing weights).
+"""Wave-6 semantic properties: the curation operators (DSIR / UniMax / CDC /
+PMI / hard negatives / mixing weights).
 
 The oracle gate (tools/check.py) proves Spark==DuckDB; these tests prove
 the MATH — invariants that both engines could get identically wrong.
@@ -194,80 +194,6 @@ def test_temperature_mixing_monotone_and_normalized(spark):
 
 
 # ---------------------------------------------------------------------------
-# TPC-H wave: internal consistency checks
-# ---------------------------------------------------------------------------
-def test_q21_sole_late_supplier_logic(spark):
-    sf = "/root/testdata/sf0.01"
-    res = {r.sname: r.numwait for r in _run(spark, "q21_waiting_suppliers", sf).collect()}
-    assert res
-    # recompute one supplier's count imperatively
-    o = Q.load(spark, sf, "orders").filter(F.col("o_orderstatus") == "F")
-    li = Q.load(spark, sf, "lineitem")
-    j = li.join(o, li.l_orderkey == o.o_orderkey).select(
-        "l_orderkey", "l_suppkey",
-        (
-            F.col("l_shipdate")
-            > F.col("o_orderdate") + F.expr("INTERVAL 60 DAYS")
-        ).alias("late"),
-    )
-    per_order = {}
-    for r in j.collect():
-        supps, lates = per_order.setdefault(r.l_orderkey, (set(), set()))
-        supps.add(r.l_suppkey)
-        if r.late:
-            lates.add(r.l_suppkey)
-    expected: dict = {}
-    for supps, lates in per_order.values():
-        if len(supps) > 1 and len(lates) == 1:
-            (sk,) = lates
-            expected[sk] = expected.get(sk, 0) + 1
-    s = {
-        r.s_suppkey: r.s_name
-        for r in Q.load(spark, sf, "supplier").collect()
-    }
-    expected_by_name: dict = {}
-    for sk, n in expected.items():
-        expected_by_name[s[sk]] = expected_by_name.get(s[sk], 0) + n
-    assert res == expected_by_name
-
-
-def test_q15_returns_the_true_max(spark):
-    sf = "/root/testdata/sf0.01"
-    res = _run(spark, "q15_top_supplier", sf).collect()
-    assert len(res) >= 1
-    li = Q.load(spark, sf, "lineitem").filter(
-        (F.col("l_shipdate") >= F.lit("1996-01-01").cast("date"))
-        & (F.col("l_shipdate") < F.lit("1996-04-01").cast("date"))
-    )
-    best = (
-        li.groupBy("l_suppkey")
-        .agg(
-            F.sum(
-                (F.col("l_extendedprice") * (1 - F.col("l_discount"))).cast(
-                    "decimal(18,6)"
-                )
-            ).alias("t")
-        )
-        .orderBy(F.col("t").desc())
-        .limit(1)
-        .collect()[0]
-    )
-    assert res[0].suppkey == best.l_suppkey
-    assert res[0].total_revenue == pytest.approx(float(best.t), abs=1e-6)
-
-
-def test_q2_picks_minimum_cost_rows_only(spark):
-    sf = "/root/testdata/sf0.01"
-    rows = _run(spark, "q2_min_cost_supplier", sf).collect()
-    assert rows
-    best: dict = {}
-    for r in rows:
-        best.setdefault(r.partkey, set()).add(r.cost_micro)
-    # all surviving rows for a part carry the identical (minimal) cost
-    assert all(len(v) == 1 for v in best.values())
-
-
-# ---------------------------------------------------------------------------
 # Shard assignment: deterministic, dense positions, balanced-ish
 # ---------------------------------------------------------------------------
 def test_shard_assignment_is_stable_and_dense(spark):
@@ -400,55 +326,6 @@ def test_quality_lr_score_consistency(spark):
         assert 0 < r.score_micro < 1_000_000
         assert r.pred == (1 if r.score_micro >= 500_000 else 0)
         assert r.label in (0, 1)
-
-
-# ---------------------------------------------------------------------------
-# Datetime suite: spot-check against python datetime on a sample
-# ---------------------------------------------------------------------------
-def test_datetime_suite_matches_python(spark):
-    res = {r.event_id: r for r in _run(spark, "datetime_functions_suite").collect()}
-    ev = Q.load(spark, SF, "events").select("event_id", "ts").limit(200).collect()
-    import datetime as dt
-
-    for e in ev:
-        r = res[e.event_id]
-        t = e.ts
-        assert r.y == t.year and r.mo == t.month and r.d == t.day
-        assert r.doy == t.timetuple().tm_yday
-        assert r.hh == t.hour
-        # Spark dayofweek: Sunday=1 .. Saturday=7
-        assert r.dow == (t.weekday() + 1) % 7 + 1
-        assert r.epoch_days == (t.date() - dt.date(1970, 1, 1)).days
-        assert r.epoch_s == int(
-            t.replace(tzinfo=dt.timezone.utc).timestamp()
-        )
-        monday = t.date() - dt.timedelta(days=t.weekday())
-        assert r.week_start == monday.isoformat()
-        assert r.plus_90d == (t + dt.timedelta(days=90)).strftime(
-            "%Y-%m-%d %H:%M:%S"
-        )
-
-
-# ---------------------------------------------------------------------------
-# Array suite: spot-check against python on a sample
-# ---------------------------------------------------------------------------
-def test_array_suite_matches_python(spark):
-    import re
-
-    res = {r.doc_id: r for r in _run(spark, "array_functions_suite").collect()}
-    docs = Q.load(spark, SF, "documents").select("doc_id", "text").collect()
-    for d in docs[:200]:
-        ws = [w for w in re.sub(r"[^a-z0-9]+", " ", d.text.lower()).split() if w]
-        r = res[d.doc_id]
-        assert r.n == len(ws)
-        assert r.nd == len(set(ws))
-        assert r.first3 == " ".join(ws[:3])
-        assert r.min_word == (min(ws) if ws else "")
-        assert r.max_word == (max(ws) if ws else "")
-        assert r.has_the == ("T" if "the" in ws else "F")
-        assert r.last_word == (ws[-1] if ws else "")
-        assert r.n_long == sum(1 for w in ws if len(w) >= 5)
-        assert r.short_set == ",".join(sorted({w for w in ws if len(w) <= 3}))
 
 
 # ---------------------------------------------------------------------------

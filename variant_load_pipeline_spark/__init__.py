@@ -18,7 +18,6 @@ Layout:
     plans/      - end-to-end pipelines: convert, load, annotate
                   (SURVEY.md §3)
     streaming/  - Structured Streaming equivalents over event streams
-    multimodal/ - binary-column (image/audio) plumbing
 """
 
 __version__ = "0.1.0"

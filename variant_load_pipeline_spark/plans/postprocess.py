@@ -4,9 +4,10 @@ gene model -> VARIANT_TRANSCRIPT consequence rows.
 Relational skeleton (all Catalyst-planned):
     variants -> point-in-gene probe (binned interval join, J1/J2)
              -> x transcripts of the gene (broadcast, J6)
+             -> anti-join existing (J9)
              -> + per-transcript feature array (sorted, W3) and exon count (J8)
              -> mapInPandas kernel (the one genuinely imperative step)
-             -> dropDuplicates (W5) -> anti-join existing (J9)
+             -> dropDuplicates (W5)
 
 The kernel is a pure-Python function (`annotate_pair`) replicating
 VariantPostProcessing.java:225-660 EXACTLY, including its quirks:
@@ -466,6 +467,14 @@ def annotate_variants(
         "transcript_rgd_id", "gene_rgd_id", "is_non_coding_ind"
     )
     pairs = pairs.join(F.broadcast(tr), "gene_rgd_id")
+    if existing_vt is not None:
+        # J9: drop already-stored (variant, transcript) pairs before the
+        # kernel, which carries these two keys unchanged to its output
+        pairs = pairs.join(
+            existing_vt.select("variant_rgd_id", "transcript_rgd_id"),
+            ["variant_rgd_id", "transcript_rgd_id"],
+            "left_anti",
+        )
 
     # per-transcript sorted feature array (W3 order) + exon count (J8);
     # features are per (transcript, chromosome, map_key) in the reference —
@@ -497,7 +506,7 @@ def annotate_variants(
         # cardinality side only.  Pairs lacking a feature row die at the
         # final inner join exactly as the old pre-join filtered them.
         out = _annotate_chunked(pairs, grouped, fasta, chunk_size, mk)
-        return _dedup_and_finish(out, existing_vt)
+        return _dedup(out)
 
     pairs = pairs.join(
         F.broadcast(grouped),
@@ -635,32 +644,21 @@ def annotate_variants(
 
     out = kin.mapInPandas(run, schema=VT_OUT_SCHEMA)
 
-    # W5: one row per (variant, transcript), deterministic survivor
-    return _dedup_and_finish(out, existing_vt)
+    return _dedup(out)
 
 
-def _dedup_and_finish(
-    out: DataFrame, existing_vt: DataFrame | None
-) -> DataFrame:
-    """Shared tail: W5 in-batch dedup (deterministic survivor) + J9
-    anti-join against already-stored (variant, transcript) pairs."""
+def _dedup(out: DataFrame) -> DataFrame:
+    """W5: one row per (variant, transcript), deterministic survivor."""
     from pyspark.sql.window import Window as W
 
     w = W.partitionBy("variant_rgd_id", "transcript_rgd_id").orderBy(
         F.col("location_name").asc_nulls_last()
     )
-    out = (
+    return (
         out.withColumn("__rn", F.row_number().over(w))
         .filter(F.col("__rn") == 1)
         .drop("__rn")
     )
-    if existing_vt is not None:
-        out = out.join(
-            existing_vt.select("variant_rgd_id", "transcript_rgd_id"),
-            ["variant_rgd_id", "transcript_rgd_id"],
-            "left_anti",
-        )
-    return out
 
 
 def _annotate_chunked(

@@ -2302,7 +2302,6 @@ def c21_vcf_render(spark: SparkSession, sf_dir: str) -> DataFrame:
 from . import queries_ext  # noqa: E402,F401
 from . import queries_corpus  # noqa: E402,F401
 from . import queries_events  # noqa: E402,F401
-from . import queries_tpch  # noqa: E402,F401
 from . import queries_wave6  # noqa: E402,F401
 from . import queries_wave7  # noqa: E402,F401
 from . import queries_wave8  # noqa: E402,F401

@@ -786,111 +786,6 @@ def unigram_surprisal_q(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# Multimodal pipeline chain: tar shards -> sample grouping -> PNG decode
-# ---------------------------------------------------------------------------
-@register(
-    "mm_tar_png_pipeline",
-    """
-    WITH g AS (
-        SELECT CAST(p_partkey AS BIGINT) AS media_id,
-               CAST(4 + p_partkey % 13 AS INT) AS width,
-               CAST(4 + p_partkey % 11 AS INT) AS height
-        FROM part WHERE p_partkey % 40 = 2
-        ORDER BY p_partkey LIMIT 20000
-    )
-    SELECT g.media_id, g.width, g.height, 3 AS n_channels,
-           ROUND(AVG(CAST((g.media_id + 3 * x.x + 5 * y.y + 11 * ch.ch)
-                          % 256 AS DOUBLE)), 6) AS mean_intensity,
-           CAST(g.media_id % 7 AS INT) AS cls
-    FROM g
-    CROSS JOIN LATERAL (SELECT unnest(range(0, g.width)) AS x) x
-    CROSS JOIN LATERAL (SELECT unnest(range(0, g.height)) AS y) y
-    CROSS JOIN (SELECT unnest(range(0, 3)) AS ch) ch
-    GROUP BY g.media_id, g.width, g.height
-    """,
-    doc="The full multimodal ingest chain, end-to-end: deterministic RGB "
-    "images (pixel = (id + 3x + 5y + 11c) mod 256) are PNG-encoded and "
-    "packed into 2 real WebDataset tar shards as <id>.png + <id>.cls "
-    "samples, re-read through binaryFile + the ustar parser, grouped on "
-    "the sample key, and the .png member decoded by the pure-stdlib PNG "
-    "codec inside mapInPandas — tar scan, sample grouping, and real "
-    "image decode composed in one plan; the oracle computes geometry, "
-    "exact pixel mean, and the label in SQL",
-)
-def mm_tar_png_pipeline_q(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import io
-    import tarfile
-
-    import numpy as np
-
-    from .multimodal.binary_ops import decode_images
-    from .multimodal.png import encode_png
-    from .queries_ext import _scan_path
-    from .sources.tarshard import group_samples, read_tar_shards
-
-    rows = (
-        load(spark, sf_dir, "part")
-        .filter(F.col("p_partkey") % 40 == 2)
-        .select(
-            F.col("p_partkey").cast("long").alias("media_id"),
-            (4 + F.col("p_partkey") % 13).cast("int").alias("width"),
-            (4 + F.col("p_partkey") % 11).cast("int").alias("height"),
-        )
-        .orderBy("media_id")
-        .limit(_TAR_CAP)
-        .collect()
-    )
-    n_shards = 2
-    paths = [
-        _scan_path(sf_dir, f"imgshard-{i}.tar") for i in range(n_shards)
-    ]
-    tars = [tarfile.open(p, "w") for p in paths]
-    try:
-        for r in rows:
-            mid, w, h = r["media_id"], r["width"], r["height"]
-            y, x, c = np.meshgrid(
-                np.arange(h), np.arange(w), np.arange(3), indexing="ij"
-            )
-            img = ((mid + 3 * x + 5 * y + 11 * c) % 256).astype("uint8")
-            tf = tars[mid % n_shards]
-            for ext, data in (
-                ("png", encode_png(img)),
-                ("cls", str(mid % 7).encode("ascii")),
-            ):
-                info = tarfile.TarInfo(name=f"{mid:012d}.{ext}")
-                info.size = len(data)
-                info.mtime = 0
-                tf.addfile(info, io.BytesIO(data))
-    finally:
-        for tf in tars:
-            tf.close()
-
-    samples = group_samples(
-        read_tar_shards(spark, _scan_path(sf_dir, "imgshard-*.tar"))
-    )
-    media = samples.select(
-        F.col("key").cast("long").alias("media_id"),
-        F.col("parts")["png"].alias("payload"),
-        F.col("parts")["cls"].cast("string").cast("int").alias("cls"),
-    )
-    # decode_images projects to its own schema; the parsed label rejoins
-    # on the sample id (both sides partitioned by it already)
-    labels = media.select("media_id", "cls")
-    return (
-        decode_images(media.select("media_id", "payload"), codec="png")
-        .join(labels, "media_id")
-        .select(
-            "media_id",
-            "width",
-            "height",
-            "n_channels",
-            "mean_intensity",
-            "cls",
-        )
-    )
-
-
-# ---------------------------------------------------------------------------
 # Product Quantization ANN [Jégou, Douze & Schmid TPAMI 2011 — public]
 # ---------------------------------------------------------------------------
 _PQ_M = 8
@@ -2485,230 +2380,6 @@ def bpe_apply_fixed_q(spark: SparkSession, sf_dir: str) -> DataFrame:
             .cast("long")
             .alias("n_bpe_tokens"),
         )
-    )
-
-
-# ---------------------------------------------------------------------------
-# Perceptual image dHash + image near-dup pairs (multimodal x dedup)
-# ---------------------------------------------------------------------------
-_DH_CAP = 20000
-_DH_HAM = 10
-# generator pixel: (m + 3x + 5y + 11c) % 256; integer-mean grayscale
-_DH_G = (
-    "((({m} + 3*({x}) + 5*({y})) % 256)"
-    " + (({m} + 3*({x}) + 5*({y}) + 11) % 256)"
-    " + (({m} + 3*({x}) + 5*({y}) + 22) % 256)) // 3"
-)
-
-
-@register(
-    "mm_image_dhash_pairs",
-    f"""
-    WITH g AS (
-        SELECT CAST(p_partkey AS BIGINT) AS m,
-               CAST(4 + p_partkey % 13 AS INT) AS w,
-               CAST(4 + p_partkey % 11 AS INT) AS h
-        FROM part WHERE p_partkey % 40 = 2
-        ORDER BY p_partkey LIMIT {_DH_CAP}
-    ),
-    bits AS (
-        SELECT g.m, j.j, i.i,
-               CASE WHEN
-                   ({_DH_G.format(m='g.m', x='((i.i+1)*g.w)//9', y='(j.j*g.h)//8')})
-                 > ({_DH_G.format(m='g.m', x='(i.i*g.w)//9', y='(j.j*g.h)//8')})
-               THEN 1 ELSE 0 END AS bit
-        FROM g
-        CROSS JOIN (SELECT unnest(range(8)) AS j) j
-        CROSS JOIN (SELECT unnest(range(8)) AS i) i
-    ),
-    hs AS (
-        SELECT m, SUM(CAST(bit AS HUGEINT)
-                      * (CAST(1 AS HUGEINT) << CAST(j*8 + i AS INT))) AS hu
-        FROM bits GROUP BY m
-    ),
-    hashes AS (
-        SELECT m, CAST(hu - CASE WHEN hu >= (CAST(1 AS HUGEINT) << 63)
-                                 THEN (CAST(1 AS HUGEINT) << 64)
-                                 ELSE CAST(0 AS HUGEINT) END AS BIGINT)
-                   AS dhash
-        FROM hs
-    )
-    SELECT CAST(a.m AS BIGINT) AS id_a, CAST(b.m AS BIGINT) AS id_b,
-           CAST(bit_count(xor(a.dhash, b.dhash)) AS INT) AS hamming
-    FROM hashes a JOIN hashes b ON a.m < b.m
-    WHERE bit_count(xor(a.dhash, b.dhash)) <= {_DH_HAM}
-    """,
-    doc="Perceptual image dedup end-to-end: deterministic RGB images are "
-    "PNG-encoded, decoded by the REAL pure-stdlib codec inside "
-    "mapInPandas, dHashed (9x8 nearest-grid gradient bits -> 64-bit "
-    "signature, the image-side SimHash), and paired by hamming "
-    f"distance <= {_DH_HAM} via bit_count(xor).  The oracle recomputes "
-    "every grayscale sample, every gradient bit, and the two's-"
-    "complement packing from the pixel generator — the decode+hash "
-    "pipeline is verified bit-for-bit.  At corpus scale the pair step "
-    "is the banded/multi-index join of the SimHash family, not this "
-    "exhaustive demo join",
-)
-def mm_image_dhash_pairs_q(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import numpy as np
-
-    from .multimodal.binary_ops import image_dhash
-    from .multimodal.png import encode_png
-
-    rows = (
-        load(spark, sf_dir, "part")
-        .filter(F.col("p_partkey") % 40 == 2)
-        .select(
-            F.col("p_partkey").cast("long").alias("media_id"),
-            (4 + F.col("p_partkey") % 13).cast("int").alias("width"),
-            (4 + F.col("p_partkey") % 11).cast("int").alias("height"),
-        )
-        .orderBy("media_id")
-        .limit(_DH_CAP)
-        .collect()
-    )
-    payloads = []
-    for r in rows:
-        mid, w, h = r["media_id"], r["width"], r["height"]
-        y, x, c = np.meshgrid(
-            np.arange(h), np.arange(w), np.arange(3), indexing="ij"
-        )
-        img = ((mid + 3 * x + 5 * y + 11 * c) % 256).astype("uint8")
-        payloads.append((mid, bytearray(encode_png(img))))
-    media = spark.createDataFrame(payloads, "media_id long, payload binary")
-    hashes = image_dhash(media)
-    a = hashes.select(
-        F.col("media_id").alias("id_a"), F.col("dhash").alias("ha")
-    )
-    b = hashes.select(
-        F.col("media_id").alias("id_b"), F.col("dhash").alias("hb")
-    )
-    return (
-        a.crossJoin(b)
-        .filter(F.col("id_a") < F.col("id_b"))
-        .select(
-            "id_a",
-            "id_b",
-            F.bit_count(
-                F.col("ha").bitwiseXOR(F.col("hb"))
-            ).cast("int").alias("hamming"),
-        )
-        .filter(F.col("hamming") <= _DH_HAM)
-    )
-
-
-# ---------------------------------------------------------------------------
-# Audio energy-fingerprint near-dup pairs (multimodal x dedup, audio leg)
-# ---------------------------------------------------------------------------
-_AH_FRAMES = 65
-_AH_HAM = 10
-_AH_CAP = 20000
-
-
-@register(
-    "mm_audio_ahash_pairs",
-    f"""
-    WITH g AS (
-        SELECT CAST(p_partkey AS BIGINT) AS m,
-               CAST(p_partkey % 5 AS BIGINT) AS grp,
-               CAST(p_partkey % 3 AS BIGINT) AS jit,
-               CAST(4000 + (p_partkey % 5) * 500 AS INT) AS n
-        FROM part WHERE p_partkey % 40 = 7
-        ORDER BY p_partkey LIMIT {_AH_CAP}
-    ),
-    sm AS (
-        SELECT g.m, g.n, t.t,
-               abs(((g.grp * 991 + t.t * t.t
-                     + CASE WHEN t.t % 131 = 0 THEN g.jit * 1500
-                            ELSE 0 END) % 4001) - 2000) AS a
-        FROM g, LATERAL (SELECT unnest(range(g.n)) AS t) t
-        WHERE t.t < (g.n // {_AH_FRAMES}) * {_AH_FRAMES}
-    ),
-    fe AS (
-        SELECT m, CAST(t // (n // {_AH_FRAMES}) AS INT) AS fr,
-               SUM(a) AS e
-        FROM sm GROUP BY m, CAST(t // (n // {_AH_FRAMES}) AS INT)
-    ),
-    bits AS (
-        SELECT m, fr,
-               CASE WHEN LEAD(e) OVER (PARTITION BY m ORDER BY fr) > e
-                    THEN 1 ELSE 0 END AS bit
-        FROM fe
-    ),
-    hs AS (
-        SELECT m, SUM(CAST(bit AS HUGEINT)
-                      * (CAST(1 AS HUGEINT) << fr)) AS hu
-        FROM bits WHERE fr < {_AH_FRAMES - 1} GROUP BY m
-    ),
-    hashes AS (
-        SELECT m, CAST(hu - CASE WHEN hu >= (CAST(1 AS HUGEINT) << 63)
-                                 THEN (CAST(1 AS HUGEINT) << 64)
-                                 ELSE CAST(0 AS HUGEINT) END AS BIGINT)
-                   AS ahash
-        FROM hs
-    )
-    SELECT CAST(a.m AS BIGINT) AS id_a, CAST(b.m AS BIGINT) AS id_b,
-           CAST(bit_count(xor(a.ahash, b.ahash)) AS INT) AS hamming
-    FROM hashes a JOIN hashes b ON a.m < b.m
-    WHERE bit_count(xor(a.ahash, b.ahash)) <= {_AH_HAM}
-    """,
-    doc="Audio near-dup fingerprinting end-to-end: deterministic 16-bit "
-    "PCM clips are WAV-encoded, decoded by the REAL stdlib decoder "
-    "inside mapInPandas, energy-hashed (64 frame-loudness gradient bits "
-    "— the audio dHash; FFT-free so it stays exactly integer) and "
-    f"paired at hamming <= {_AH_HAM}.  The oracle recomputes every "
-    "|sample|, every frame energy, and the bit packing from the signal "
-    "generator — decode + fingerprint verified sample-exactly.  At "
-    "corpus scale pairing goes through the multi-index banding of the "
-    "SimHash family, not this exhaustive demo join",
-)
-def mm_audio_ahash_pairs_q(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import numpy as np
-
-    from .multimodal.binary_ops import audio_energy_hash
-    from .multimodal.wav import encode_wav
-
-    rows = (
-        load(spark, sf_dir, "part")
-        .filter(F.col("p_partkey") % 40 == 7)
-        .select(
-            F.col("p_partkey").cast("long").alias("media_id"),
-            (F.col("p_partkey") % 5).cast("long").alias("grp"),
-            (F.col("p_partkey") % 3).cast("long").alias("jit"),
-            (4000 + (F.col("p_partkey") % 5) * 500).cast("int").alias("n"),
-        )
-        .orderBy("media_id")
-        .limit(_AH_CAP)
-        .collect()
-    )
-    payloads = []
-    for r in rows:
-        mid, n = r["media_id"], r["n"]
-        t = np.arange(n, dtype=np.int64)
-        # same group -> same envelope; jitter nudges sparse samples so
-        # same-group clips land NEAR each other, not identical
-        jitter = np.where(t % 131 == 0, r["jit"] * 1500, 0)
-        s = ((r["grp"] * 991 + t * t + jitter) % 4001 - 2000).astype("<i2")
-        payloads.append((mid, bytearray(encode_wav(s, 16000))))
-    media = spark.createDataFrame(payloads, "media_id long, payload binary")
-    hashes = audio_energy_hash(media, n_frames=_AH_FRAMES)
-    a = hashes.select(
-        F.col("media_id").alias("id_a"), F.col("ahash").alias("ha")
-    )
-    b = hashes.select(
-        F.col("media_id").alias("id_b"), F.col("ahash").alias("hb")
-    )
-    return (
-        a.crossJoin(b)
-        .filter(F.col("id_a") < F.col("id_b"))
-        .select(
-            "id_a",
-            "id_b",
-            F.bit_count(
-                F.col("ha").bitwiseXOR(F.col("hb"))
-            ).cast("int").alias("hamming"),
-        )
-        .filter(F.col("hamming") <= _AH_HAM)
     )
 
 

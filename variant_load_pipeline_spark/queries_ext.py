@@ -1492,7 +1492,7 @@ def j19_seq_store_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ===========================================================================
-# Analytic widening: top-k with deterministic LIMIT, filter-agg, HAVING
+# Analytic widening: top-k with deterministic LIMIT, filter-agg
 # (no reference analog — SURVEY §2.6 notes the reference has no LIMIT/top-k;
 # these close that capability gap for engine-switchers)
 # ===========================================================================
@@ -1591,33 +1591,6 @@ def q6_forecast_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
                 6,
             ).alias("revenue"),
             F.count(F.lit(1)).alias("n"),
-        )
-    )
-
-
-@register(
-    "q18_large_orders_having",
-    """
-    SELECT o_orderkey AS okey,
-           CAST(ROUND(SUM(l_quantity), 6) AS DOUBLE) AS total_qty
-    FROM orders JOIN lineitem ON o_orderkey = l_orderkey
-    GROUP BY o_orderkey
-    HAVING SUM(l_quantity) > 150
-    """,
-    doc="TPC-H Q18-style HAVING: post-aggregation filter — Catalyst keeps "
-    "the aggregate partial and applies the predicate after the final merge",
-)
-def q18_large_orders_having(spark: SparkSession, sf_dir: str) -> DataFrame:
-    o = load(spark, sf_dir, "orders").select("o_orderkey")
-    li = load(spark, sf_dir, "lineitem").select("l_orderkey", "l_quantity")
-    return (
-        li.join(o, li.l_orderkey == o.o_orderkey)
-        .groupBy("o_orderkey")
-        .agg(F.sum("l_quantity").alias("__tq"))
-        .filter(F.col("__tq") > 150)
-        .select(
-            F.col("o_orderkey").alias("okey"),
-            F.round(F.col("__tq"), 6).alias("total_qty"),
         )
     )
 
@@ -1753,68 +1726,6 @@ def sketch_distinct_users(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.when(rel_err <= 0.05, F.lit("T")).otherwise(F.lit("F")).alias(
             "within_bounds"
         ),
-    )
-
-
-@register(
-    "q4_order_priority_exists",
-    """
-    SELECT o_orderpriority, CAST(COUNT(*) AS BIGINT) AS n
-    FROM orders
-    WHERE o_orderdate >= DATE '1996-07-01'
-      AND o_orderdate < DATE '1996-10-01'
-      AND EXISTS (
-          SELECT 1 FROM lineitem
-          WHERE l_orderkey = o_orderkey AND l_returnflag = 'R'
-      )
-    GROUP BY o_orderpriority
-    """,
-    doc="TPC-H Q4-style EXISTS: correlated subquery -> left semi join "
-    "(Catalyst rewrites NOT EXISTS/EXISTS to anti/semi, SURVEY §4)",
-)
-def q4_order_priority_exists(spark: SparkSession, sf_dir: str) -> DataFrame:
-    o = load(spark, sf_dir, "orders").filter(
-        (F.col("o_orderdate") >= F.lit("1996-07-01").cast("date"))
-        & (F.col("o_orderdate") < F.lit("1996-10-01").cast("date"))
-    )
-    late = load(spark, sf_dir, "lineitem").filter(
-        F.col("l_returnflag") == "R"
-    ).select("l_orderkey")
-    return (
-        o.join(late, o.o_orderkey == late.l_orderkey, "left_semi")
-        .groupBy("o_orderpriority")
-        .agg(F.count(F.lit(1)).alias("n"))
-    )
-
-
-@register(
-    "q13_customer_distribution",
-    """
-    WITH per_cust AS (
-        SELECT c_custkey, CAST(COUNT(o_orderkey) AS BIGINT) AS n_orders
-        FROM customer LEFT JOIN orders
-          ON c_custkey = o_custkey AND o_orderpriority <> '1-URGENT'
-        GROUP BY c_custkey
-    )
-    SELECT n_orders, CAST(COUNT(*) AS BIGINT) AS n_custs
-    FROM per_cust GROUP BY n_orders
-    """,
-    doc="TPC-H Q13-style distribution: LEFT OUTER join with a join-side "
-    "predicate, count(nullable) semantics (zero-order customers kept), "
-    "double aggregation",
-)
-def q13_customer_distribution(spark: SparkSession, sf_dir: str) -> DataFrame:
-    c = load(spark, sf_dir, "customer").select("c_custkey")
-    o = load(spark, sf_dir, "orders").filter(
-        F.col("o_orderpriority") != "1-URGENT"
-    ).select("o_custkey", "o_orderkey")
-    per_cust = (
-        c.join(o, c.c_custkey == o.o_custkey, "left")
-        .groupBy("c_custkey")
-        .agg(F.count("o_orderkey").alias("n_orders"))
-    )
-    return per_cust.groupBy("n_orders").agg(
-        F.count(F.lit(1)).alias("n_custs")
     )
 
 
@@ -3102,182 +3013,6 @@ def ann_lsh_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ===========================================================================
-# Multimodal: real PNG decode, oracle-checked
-# ===========================================================================
-@register(
-    "mm_png_decode",
-    """
-    WITH g AS (
-        SELECT CAST(p_partkey AS BIGINT) AS media_id,
-               CAST(4 + p_partkey % 13 AS INT) AS width,
-               CAST(4 + p_partkey % 11 AS INT) AS height
-        FROM part WHERE p_partkey % 40 = 0
-    )
-    SELECT g.media_id, g.width, g.height, 3 AS n_channels,
-           ROUND(AVG(CAST((g.media_id + 3 * x.x + 5 * y.y + 11 * ch.ch)
-                          % 256 AS DOUBLE)), 6) AS mean_intensity
-    FROM g
-    CROSS JOIN LATERAL (SELECT unnest(range(0, g.width)) AS x) x
-    CROSS JOIN LATERAL (SELECT unnest(range(0, g.height)) AS y) y
-    CROSS JOIN (SELECT unnest(range(0, 3)) AS ch) ch
-    GROUP BY g.media_id, g.width, g.height
-    """,
-    doc="Multimodal: REAL PNG decode end-to-end — deterministic RGB images "
-    "(pixel = (id + 3x + 5y + 11c) mod 256) are encoded with the pure-"
-    "stdlib PNG codec and decoded back through decode_images(codec='png') "
-    "(chunk parse, inflate, scanline unfilter) inside mapInPandas; the "
-    "oracle computes the expected geometry and exact pixel mean in SQL",
-)
-def mm_png_decode(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from pyspark.sql import types as T
-
-    from .multimodal.binary_ops import decode_images
-
-    p = load(spark, sf_dir, "part").filter(F.col("p_partkey") % 40 == 0)
-    gen = p.select(
-        F.col("p_partkey").cast("long").alias("media_id"),
-        (4 + F.col("p_partkey") % 13).cast("int").alias("width"),
-        (4 + F.col("p_partkey") % 11).cast("int").alias("height"),
-    )
-
-    out_schema = T.StructType(
-        [
-            T.StructField("media_id", T.LongType()),
-            T.StructField("payload", T.BinaryType()),
-        ]
-    )
-
-    def render(batches):
-        import numpy as np
-        import pandas as pd
-
-        from .multimodal.png import encode_png
-
-        for pdf in batches:
-            payloads = []
-            for mid, w, h in zip(
-                pdf["media_id"], pdf["width"], pdf["height"]
-            ):
-                y, x, c = np.meshgrid(
-                    np.arange(int(h)), np.arange(int(w)), np.arange(3),
-                    indexing="ij",
-                )
-                img = ((int(mid) + 3 * x + 5 * y + 11 * c) % 256).astype(
-                    "uint8"
-                )
-                payloads.append(encode_png(img))
-            yield pd.DataFrame(
-                {"media_id": pdf["media_id"], "payload": payloads}
-            )
-
-    media = gen.mapInPandas(render, schema=out_schema)
-    return decode_images(media, codec="png").select(
-        "media_id",
-        "width",
-        "height",
-        "n_channels",
-        "mean_intensity",
-    )
-
-
-@register(
-    "mm_jpeg_decode",
-    """
-    SELECT CAST(p_partkey AS BIGINT) AS media_id,
-           CAST(8 + p_partkey % 9 AS INT) AS width,
-           CAST(8 + p_partkey % 7 AS INT) AS height,
-           CAST(CASE WHEN p_partkey % 2 = 0 THEN 1 ELSE 3 END AS INT)
-               AS n_channels,
-           'T' AS err_ok
-    FROM part WHERE p_partkey % 40 = 1
-    """,
-    doc="Multimodal: REAL baseline JPEG decode end-to-end — deterministic "
-    "smooth-gradient images (grayscale for even ids, 4:4:4 RGB for odd) "
-    "are encoded with the pure-stdlib JPEG codec and decoded back through "
-    "decode_images(codec='jpeg') (marker parse, Huffman decode, "
-    "dequantize, IDCT, YCbCr->RGB) inside mapInPandas.  JPEG is lossy, so "
-    "the oracle gates exact geometry + channel count plus a bounded-"
-    "reconstruction-error flag (|decoded mean - true mean| <= 1.0) — both "
-    "codec directions are deterministic, so the flag is reproducible",
-)
-def mm_jpeg_decode(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from pyspark.sql import types as T
-
-    from .multimodal.binary_ops import decode_images
-
-    p = load(spark, sf_dir, "part").filter(F.col("p_partkey") % 40 == 1)
-    gen = p.select(
-        F.col("p_partkey").cast("long").alias("media_id"),
-        (8 + F.col("p_partkey") % 9).cast("int").alias("width"),
-        (8 + F.col("p_partkey") % 7).cast("int").alias("height"),
-        F.when(F.col("p_partkey") % 2 == 0, F.lit(1))
-        .otherwise(F.lit(3))
-        .cast("int")
-        .alias("n_channels"),
-        (20 + F.col("p_partkey") % 50).cast("int").alias("base"),
-    )
-
-    out_schema = T.StructType(
-        [
-            T.StructField("media_id", T.LongType()),
-            T.StructField("payload", T.BinaryType()),
-        ]
-    )
-
-    def render(batches):
-        import numpy as np
-        import pandas as pd
-
-        from .multimodal.jpeg import encode_jpeg
-
-        for pdf in batches:
-            payloads = []
-            for mid, w, h, nc, base in zip(
-                pdf["media_id"], pdf["width"], pdf["height"],
-                pdf["n_channels"], pdf["base"],
-            ):
-                y, x, c = np.meshgrid(
-                    np.arange(int(h)), np.arange(int(w)),
-                    np.arange(int(nc)), indexing="ij",
-                )
-                # smooth ramp, values < 255 by construction (no clipping)
-                img = (int(base) + 2 * x + 3 * y + 10 * c).astype("uint8")
-                if int(nc) == 1:
-                    img = img[:, :, 0]
-                payloads.append(encode_jpeg(img, quality=90))
-            yield pd.DataFrame(
-                {"media_id": pdf["media_id"], "payload": payloads}
-            )
-
-    media = gen.mapInPandas(render, schema=out_schema)
-    feats = decode_images(media, codec="jpeg")
-    # expected mean of the linear ramp, closed-form (no clipping by
-    # construction): base + (w-1) + 1.5(h-1) + 5(nc-1) — so the expected
-    # side reads `gen`, not a second pass through the JPEG render
-    exp = gen.select(
-        "media_id",
-        (
-            F.col("base")
-            + (F.col("width") - 1)
-            + 1.5 * (F.col("height") - 1)
-            + 5.0 * (F.col("n_channels") - 1)
-        ).alias("exp_mean"),
-    )
-    return feats.join(F.broadcast(exp), "media_id").select(
-        "media_id",
-        "width",
-        "height",
-        "n_channels",
-        F.when(
-            F.abs(F.col("mean_intensity") - F.col("exp_mean")) <= 1.0,
-            F.lit("T"),
-        )
-        .otherwise(F.lit("F"))
-        .alias("err_ok"),
-    )
-
-
-# ===========================================================================
 # The FULL VcfConverter2 pipeline, oracle-checked end-to-end
 # (F2 + F5 + S3 + F6 + F10 + AD/DP policy + C5 + C6/C7/C8 + C17 + E2/F7
 #  + F11 — one hard-signal row for the whole conversion)
@@ -3768,134 +3503,8 @@ def merge_full_upsert(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ===========================================================================
-# Analytic widening, wave 2: ratio aggregate, correlated-min subquery,
-# distinct-count with composite anti pattern
+# Event dedup: first arrival per id (batch twin of the streaming dedup)
 # ===========================================================================
-@register(
-    "q14_promo_revenue_ratio",
-    """
-    SELECT CAST(ROUND(
-        100.0 * CAST(SUM(CASE WHEN p_type LIKE 'PROMO%'
-            THEN CAST(l_extendedprice * (1 - l_discount) AS DECIMAL(18,6))
-            ELSE CAST(0 AS DECIMAL(18,6)) END) AS DOUBLE)
-        / CAST(SUM(CAST(l_extendedprice * (1 - l_discount)
-            AS DECIMAL(18,6))) AS DOUBLE), 6) AS DOUBLE) AS promo_pct,
-        CAST(COUNT(*) AS BIGINT) AS n
-    FROM lineitem JOIN part ON l_partkey = p_partkey
-    WHERE l_shipdate >= DATE '1995-09-01' AND l_shipdate < DATE '1995-10-01'
-    """,
-    doc="TPC-H Q14-style conditional-aggregate ratio: date-pruned scan, "
-    "dimension broadcast on partkey, decimal-exact conditional sums (order-"
-    "independent across partitionings), one ratio row out",
-)
-def q14_promo_revenue_ratio(spark: SparkSession, sf_dir: str) -> DataFrame:
-    li = load(spark, sf_dir, "lineitem").filter(
-        (F.col("l_shipdate") >= F.lit("1995-09-01").cast("date"))
-        & (F.col("l_shipdate") < F.lit("1995-10-01").cast("date"))
-    ).select("l_partkey", "l_extendedprice", "l_discount")
-    p = load(spark, sf_dir, "part").select("p_partkey", "p_type")
-    rev = (F.col("l_extendedprice") * (1 - F.col("l_discount"))).cast(
-        "decimal(18,6)"
-    )
-    j = li.join(F.broadcast(p), F.col("l_partkey") == F.col("p_partkey"))
-    return j.agg(
-        F.round(
-            F.lit(100.0)
-            * F.sum(
-                F.when(F.col("p_type").startswith("PROMO"), rev).otherwise(
-                    F.lit(0).cast("decimal(18,6)")
-                )
-            ).cast("double")
-            / F.sum(rev).cast("double"),
-            6,
-        ).alias("promo_pct"),
-        F.count(F.lit(1)).alias("n"),
-    )
-
-
-@register(
-    "q17_small_quantity_avg",
-    """
-    WITH avg_qty AS (
-        SELECT l_partkey AS ap, 0.2 * AVG(l_quantity) AS threshold
-        FROM lineitem GROUP BY l_partkey
-    )
-    SELECT CAST(ROUND(CAST(SUM(CAST(l_extendedprice AS DECIMAL(18,6)))
-               AS DOUBLE) / 7.0, 6) AS DOUBLE) AS avg_yearly,
-           CAST(COUNT(*) AS BIGINT) AS n
-    FROM lineitem JOIN avg_qty ON l_partkey = ap
-    WHERE l_quantity < threshold
-    """,
-    doc="TPC-H Q17-style correlated-average subquery decorrelated into an "
-    "aggregate + self-join on partkey: both sides shuffle once on the SAME "
-    "key (no repeated correlated probes), threshold applied post-join",
-)
-def q17_small_quantity_avg(spark: SparkSession, sf_dir: str) -> DataFrame:
-    li = load(spark, sf_dir, "lineitem").select(
-        "l_partkey", "l_quantity", "l_extendedprice"
-    )
-    # threshold math pinned to double end-to-end so the strict < boundary
-    # compares bit-identical values in both engines
-    avg_qty = li.groupBy(F.col("l_partkey").alias("ap")).agg(
-        (F.lit(0.2) * F.avg(F.col("l_quantity").cast("double"))).alias(
-            "threshold"
-        )
-    )
-    j = li.join(avg_qty, F.col("l_partkey") == F.col("ap")).filter(
-        F.col("l_quantity") < F.col("threshold")
-    )
-    return j.agg(
-        F.round(
-            F.sum(F.col("l_extendedprice").cast("decimal(18,6)")).cast(
-                "double"
-            )
-            / 7.0,
-            6,
-        ).alias("avg_yearly"),
-        F.count(F.lit(1)).alias("n"),
-    )
-
-
-@register(
-    "q16_supplier_part_counts",
-    """
-    SELECT p_type, CAST(p_size AS INT) AS p_size,
-           CAST(COUNT(DISTINCT ps_suppkey) AS BIGINT) AS supplier_cnt
-    FROM (
-        SELECT p.p_type, p.p_size, l.l_suppkey AS ps_suppkey
-        FROM part p JOIN lineitem l ON p.p_partkey = l.l_partkey
-        WHERE p.p_size IN (1, 4, 7) AND p.p_type NOT LIKE 'MEDIUM%'
-          AND l.l_suppkey NOT IN (
-              SELECT DISTINCT l2.l_suppkey FROM lineitem l2
-              WHERE l2.l_returnflag = 'R' AND l2.l_suppkey % 97 = 0
-          )
-    )
-    GROUP BY p_type, p_size
-    """,
-    doc="TPC-H Q16-style: filtered dim join, NOT IN -> left_anti against a "
-    "deduped exclusion set, COUNT(DISTINCT) grouped on two part attributes",
-)
-def q16_supplier_part_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
-    p = load(spark, sf_dir, "part").filter(
-        F.col("p_size").isin(1, 4, 7)
-        & ~F.col("p_type").startswith("MEDIUM")
-    ).select("p_partkey", "p_type", "p_size")
-    li = load(spark, sf_dir, "lineitem").select("l_partkey", "l_suppkey")
-    excl = (
-        load(spark, sf_dir, "lineitem")
-        .filter((F.col("l_returnflag") == "R") & (F.col("l_suppkey") % 97 == 0))
-        .select("l_suppkey")
-        .distinct()
-    )
-    j = (
-        li.join(excl, "l_suppkey", "left_anti")
-        .join(F.broadcast(p), F.col("l_partkey") == F.col("p_partkey"))
-    )
-    return j.groupBy("p_type", F.col("p_size").cast("int").alias("p_size")).agg(
-        F.countDistinct("l_suppkey").alias("supplier_cnt")
-    )
-
-
 @register(
     "events_dedup_first",
     """
@@ -4075,79 +3684,6 @@ def variantload_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("score").cast("int").alias("var_freq"),
         "genic_status",
     )
-
-
-@register(
-    "mm_wav_decode",
-    """
-    WITH g AS (
-        SELECT CAST(p_partkey AS BIGINT) AS media_id,
-               CAST(500 + p_partkey % 300 AS INT) AS n_frames,
-               CAST(1 + p_partkey % 2 AS INT) AS n_channels,
-               CAST(8000 + (p_partkey % 3) * 4000 AS INT) AS sample_rate
-        FROM part WHERE p_partkey % 40 = 0
-    )
-    SELECT g.media_id, g.n_frames, g.n_channels, g.sample_rate,
-        CAST(g.n_frames * 1000 // g.sample_rate AS INT) AS duration_ms,
-        ROUND(AVG(ABS(CAST((g.media_id * 31 + j.j * 7) % 2000 - 1000
-                           AS DOUBLE))), 6) AS mean_abs_amplitude
-    FROM g
-    CROSS JOIN LATERAL (
-        SELECT unnest(range(0, g.n_frames * g.n_channels)) AS j
-    ) j
-    GROUP BY g.media_id, g.n_frames, g.n_channels, g.sample_rate
-    """,
-    doc="Multimodal: REAL PCM WAV decode end-to-end — deterministic int16 "
-    "sample streams (sample j = (id*31 + j*7) mod 2000 - 1000) are encoded "
-    "with the stdlib WAV writer and decoded back through decode_audio "
-    "(codec='wav') inside mapInPandas; the oracle computes geometry, "
-    "integer-division duration, and the exact mean absolute amplitude",
-)
-def mm_wav_decode(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from pyspark.sql import types as T
-
-    from .multimodal.binary_ops import decode_audio
-
-    p = load(spark, sf_dir, "part").filter(F.col("p_partkey") % 40 == 0)
-    gen = p.select(
-        F.col("p_partkey").cast("long").alias("media_id"),
-        (500 + F.col("p_partkey") % 300).cast("int").alias("n_frames"),
-        (1 + F.col("p_partkey") % 2).cast("int").alias("n_channels"),
-        (8000 + (F.col("p_partkey") % 3) * 4000).cast("int").alias(
-            "sample_rate"
-        ),
-    )
-
-    out_schema = T.StructType(
-        [
-            T.StructField("media_id", T.LongType()),
-            T.StructField("payload", T.BinaryType()),
-        ]
-    )
-
-    def render(batches):
-        import numpy as np
-        import pandas as pd
-
-        from .multimodal.wav import encode_wav
-
-        for pdf in batches:
-            payloads = []
-            for mid, nf, nc, sr in zip(
-                pdf["media_id"], pdf["n_frames"], pdf["n_channels"],
-                pdf["sample_rate"],
-            ):
-                j = np.arange(int(nf) * int(nc), dtype=np.int64)
-                flat = (int(mid) * 31 + j * 7) % 2000 - 1000
-                payloads.append(
-                    encode_wav(flat.reshape(-1, int(nc)), int(sr))
-                )
-            yield pd.DataFrame(
-                {"media_id": pdf["media_id"], "payload": payloads}
-            )
-
-    media = gen.mapInPandas(render, schema=out_schema)
-    return decode_audio(media, codec="wav")
 
 
 @register(
@@ -4499,189 +4035,6 @@ def stratified_sample_caps(spark: SparkSession, sf_dir: str) -> DataFrame:
     return stratified_sample(
         d, "stratum", per_stratum=20, key_col="doc_id", salt="cap"
     ).select("doc_id", "stratum")
-
-
-@register(
-    "mm_mp4_meta",
-    """
-    SELECT CAST(p_partkey AS BIGINT) AS media_id,
-           CAST(1000 + (p_partkey * 37) % 600000 AS INT) AS duration_ms,
-           CAST(CASE WHEN p_partkey % 3 = 0 THEN 2 ELSE 1 END AS INT)
-               AS n_tracks,
-           CAST(CASE WHEN p_partkey % 3 = 1 THEN 0
-                ELSE 320 + (p_partkey % 5) * 320 END AS INT) AS width,
-           CAST(CASE WHEN p_partkey % 3 = 1 THEN 0
-                ELSE 180 + (p_partkey % 5) * 180 END AS INT) AS height,
-           CASE WHEN p_partkey % 3 = 1 THEN ''
-                WHEN p_partkey % 2 = 0 THEN 'avc1' ELSE 'hvc1' END
-               AS video_codec,
-           CASE WHEN p_partkey % 3 = 1 THEN 'F' ELSE 'T' END AS has_video,
-           CASE WHEN p_partkey % 3 <> 2 THEN 'T' ELSE 'F' END AS has_audio,
-           'T' AS clean_eof
-    FROM part WHERE p_partkey % 40 = 3
-    """,
-    doc="Multimodal: REAL ISO BMFF (MP4) container metadata — synthetic "
-    "box trees (video/audio/both track layouts, avc1/hvc1 codecs, five "
-    "resolutions, durations to 10 min) walked through video_metadata "
-    "(multimodal/mp4.py, ISO 14496-12 box parse: mvhd duration, trak "
-    "count, tkhd geometry, hdlr types, stsd fourcc) inside mapInPandas; "
-    "the oracle re-derives every field closed-form from the generator "
-    "parameters",
-)
-def mm_mp4_meta(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from pyspark.sql import types as T
-
-    from .multimodal.binary_ops import video_metadata
-
-    p = load(spark, sf_dir, "part").filter(F.col("p_partkey") % 40 == 3)
-    gen = p.select(
-        F.col("p_partkey").cast("long").alias("media_id"),
-        (1000 + (F.col("p_partkey") * 37) % 600000)
-        .cast("int")
-        .alias("dur"),
-        (F.col("p_partkey") % 3).cast("int").alias("layout"),
-        (320 + (F.col("p_partkey") % 5) * 320).cast("int").alias("w"),
-        (180 + (F.col("p_partkey") % 5) * 180).cast("int").alias("h"),
-        F.when(F.col("p_partkey") % 2 == 0, F.lit("avc1"))
-        .otherwise(F.lit("hvc1"))
-        .alias("codec"),
-    )
-
-    out_schema = T.StructType(
-        [
-            T.StructField("media_id", T.LongType()),
-            T.StructField("payload", T.BinaryType()),
-        ]
-    )
-
-    def render(batches):
-        import pandas as pd
-
-        from .multimodal.mp4 import make_mp4
-
-        for pdf in batches:
-            payloads = []
-            for dur, layout, w, h, codec in zip(
-                pdf["dur"], pdf["layout"], pdf["w"], pdf["h"], pdf["codec"]
-            ):
-                # layout 0: video+audio, 1: audio only, 2: video only
-                payloads.append(
-                    make_mp4(
-                        int(dur),
-                        video=int(layout) != 1,
-                        audio=int(layout) != 2,
-                        width=int(w),
-                        height=int(h),
-                        codec=codec.encode(),
-                    )
-                )
-            yield pd.DataFrame(
-                {"media_id": pdf["media_id"], "payload": payloads}
-            )
-
-    media = gen.mapInPandas(render, schema=out_schema)
-    return video_metadata(media, container="mp4")
-
-
-def _mp3_meta_oracle_sql() -> str:
-    """Closed-form re-derivation of the MP3 frame-header walk for the
-    synthetic streams: the bitrate CASE is generated from the SAME
-    ISO table the parser uses (multimodal/mp3.py — one source of truth)."""
-    from .multimodal.mp3 import _BITRATES
-
-    br = _BITRATES[(1, 3)]
-    br_case = (
-        "CASE CAST(1 + p_partkey % 14 AS INT) "
-        + " ".join(f"WHEN {i} THEN {br[i]}" for i in range(1, 15))
-        + " END"
-    )
-    return f"""
-    SELECT CAST(p_partkey AS BIGINT) AS media_id,
-           CAST(10 + p_partkey % 40 AS INT) AS n_frames,
-           CAST(CASE WHEN p_partkey % 2 = 1 THEN 1 ELSE 2 END AS INT)
-               AS n_channels,
-           CAST(CASE p_partkey % 3 WHEN 0 THEN 44100 WHEN 1 THEN 48000
-                ELSE 32000 END AS INT) AS sample_rate,
-           CAST((10 + p_partkey % 40) * 1152 * 1000
-                // (CASE p_partkey % 3 WHEN 0 THEN 44100 WHEN 1 THEN 48000
-                    ELSE 32000 END) AS INT) AS duration_ms,
-           CAST({br_case} AS INT) AS bitrate_kbps,
-           'T' AS clean_eof
-    FROM part WHERE p_partkey % 40 = 2
-    """
-
-
-@register(
-    "mm_mp3_meta",
-    _mp3_meta_oracle_sql(),
-    doc="Multimodal: REAL MPEG audio frame-header metadata — synthetic "
-    "MP3 streams (valid MPEG1 Layer III headers across all 14 bitrate "
-    "indices, 3 sample rates, mono/stereo, some behind ID3v2 tags) walked "
-    "frame-by-frame through audio_metadata (multimodal/mp3.py, public "
-    "ISO 11172-3 tables) inside mapInPandas; the oracle re-derives frame "
-    "count, duration, bitrate, and integrity closed-form from the same "
-    "rate tables",
-)
-def mm_mp3_meta(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from pyspark.sql import types as T
-
-    from .multimodal.binary_ops import audio_metadata
-
-    p = load(spark, sf_dir, "part").filter(F.col("p_partkey") % 40 == 2)
-    gen = p.select(
-        F.col("p_partkey").cast("long").alias("media_id"),
-        (10 + F.col("p_partkey") % 40).cast("int").alias("nf"),
-        (1 + F.col("p_partkey") % 14).cast("int").alias("bri"),
-        (F.col("p_partkey") % 3).cast("int").alias("sri"),
-        (F.col("p_partkey") % 2 == 1).alias("mono"),
-        # ID3v2 tag on every 3rd stream (modulus coprime with the %40
-        # partkey filter, so the branch actually fires); tag size is
-        # metadata-invariant so the oracle needs no matching column
-        F.when(F.col("p_partkey") % 3 == 0, 64 + F.col("p_partkey") % 100)
-        .otherwise(0)
-        .cast("int")
-        .alias("id3"),
-    )
-
-    out_schema = T.StructType(
-        [
-            T.StructField("media_id", T.LongType()),
-            T.StructField("payload", T.BinaryType()),
-        ]
-    )
-
-    def render(batches):
-        import pandas as pd
-
-        from .multimodal.mp3 import make_frames
-
-        for pdf in batches:
-            payloads = [
-                make_frames(
-                    int(nf),
-                    bitrate_index=int(bri),
-                    sample_rate_index=int(sri),
-                    mono=bool(mono),
-                    id3v2_bytes=int(id3),
-                )
-                for nf, bri, sri, mono, id3 in zip(
-                    pdf["nf"], pdf["bri"], pdf["sri"], pdf["mono"], pdf["id3"]
-                )
-            ]
-            yield pd.DataFrame(
-                {"media_id": pdf["media_id"], "payload": payloads}
-            )
-
-    media = gen.mapInPandas(render, schema=out_schema)
-    return audio_metadata(media, codec="mp3").select(
-        "media_id",
-        "n_frames",
-        "n_channels",
-        "sample_rate",
-        "duration_ms",
-        "bitrate_kbps",
-        "clean_eof",
-    )
 
 
 @register(
@@ -5238,57 +4591,8 @@ def pagerank_cosupply_q(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ===========================================================================
-# Large-order HAVING query (TPC-H Q18 shape) + event-type pivot
+# Event-type pivot
 # ===========================================================================
-_Q18_QTY = 120
-
-
-@register(
-    "q18_large_orders",
-    f"""
-    WITH big AS (
-        SELECT l_orderkey, SUM(l_quantity) AS sum_qty
-        FROM lineitem GROUP BY l_orderkey
-        HAVING SUM(l_quantity) > {_Q18_QTY}
-    )
-    SELECT CAST(c.c_custkey AS BIGINT) AS c_custkey, c.c_name,
-           CAST(o.o_orderkey AS BIGINT) AS o_orderkey,
-           strftime(o.o_orderdate, '%Y-%m-%d') AS o_orderdate,
-           CAST(ROUND(o.o_totalprice, 2) AS DOUBLE) AS o_totalprice,
-           CAST(ROUND(big.sum_qty, 2) AS DOUBLE) AS sum_qty
-    FROM big
-    JOIN orders o ON o.o_orderkey = big.l_orderkey
-    JOIN customer c ON c.c_custkey = o.o_custkey
-    """,
-    doc="TPC-H Q18 shape (large-volume customers): HAVING over a "
-    "map-side-combinable sum picks the big orders FIRST — the filtered "
-    "key set is what joins to orders/customer, so the expensive "
-    "lineitem aggregation happens once, pre-join, and the join probes "
-    "shrink to the qualifying keys.  Customer is the broadcast dim",
-)
-def q18_large_orders_q(spark: SparkSession, sf_dir: str) -> DataFrame:
-    big = (
-        load(spark, sf_dir, "lineitem")
-        .groupBy("l_orderkey")
-        .agg(F.sum("l_quantity").alias("sum_qty"))
-        .filter(F.col("sum_qty") > _Q18_QTY)
-    )
-    o = load(spark, sf_dir, "orders")
-    c = load(spark, sf_dir, "customer")
-    return (
-        big.join(o, big.l_orderkey == o.o_orderkey)
-        .join(F.broadcast(c), o.o_custkey == c.c_custkey)
-        .select(
-            F.col("c_custkey").cast("long").alias("c_custkey"),
-            "c_name",
-            F.col("o_orderkey").cast("long").alias("o_orderkey"),
-            F.date_format("o_orderdate", "yyyy-MM-dd").alias("o_orderdate"),
-            F.round("o_totalprice", 2).alias("o_totalprice"),
-            F.round("sum_qty", 2).alias("sum_qty"),
-        )
-    )
-
-
 _PIVOT_TYPES = ["click", "error", "purchase", "signup", "view"]
 
 
@@ -5391,76 +4695,6 @@ def schema_evolution_scan_q(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ===========================================================================
-# TPC-H shapes q4 (EXISTS semi-join priority counts) and q14 (conditional
-# revenue share), adapted to this dataset's columns
-# ===========================================================================
-@register(
-    "q4_priority_exists",
-    """
-    SELECT o.o_orderpriority,
-           CAST(COUNT(*) AS BIGINT) AS order_count
-    FROM orders o
-    WHERE EXISTS (
-        SELECT 1 FROM lineitem l
-        WHERE l.l_orderkey = o.o_orderkey
-          AND l.l_shipdate > o.o_orderdate + INTERVAL 60 DAYS
-    )
-    GROUP BY o.o_orderpriority
-    """,
-    doc="TPC-H Q4 shape: orders having at least one late-shipping line "
-    "(EXISTS -> left-semi join, so each order counts ONCE no matter how "
-    "many lines qualify), counted per priority.  The semi join keys on "
-    "o_orderkey with the date comparison as a residual — a hash join, "
-    "and the aggregation is partial-aggregable",
-)
-def q4_priority_exists_q(spark: SparkSession, sf_dir: str) -> DataFrame:
-    o = load(spark, sf_dir, "orders")
-    li = load(spark, sf_dir, "lineitem").select("l_orderkey", "l_shipdate")
-    semi = o.join(
-        li,
-        (o.o_orderkey == li.l_orderkey)
-        & (li.l_shipdate > F.col("o_orderdate") + F.expr("INTERVAL 60 DAYS")),
-        "left_semi",
-    )
-    return semi.groupBy("o_orderpriority").agg(
-        F.count(F.lit(1)).alias("order_count")
-    )
-
-
-@register(
-    "q14_promo_revenue_share",
-    """
-    SELECT CAST(ROUND(100.00 * SUM(CASE WHEN p.p_type = 'PROMO'
-                    THEN l.l_extendedprice * (1 - l.l_discount)
-                    ELSE 0 END) / SUM(l.l_extendedprice * (1 - l.l_discount)),
-               4) AS DOUBLE) AS promo_share_pct,
-           CAST(COUNT(*) AS BIGINT) AS n_lines
-    FROM lineitem l JOIN part p ON l.l_partkey = p.p_partkey
-    """,
-    doc="TPC-H Q14 shape: promo revenue share — conditional aggregation "
-    "over the lineitem-part join with part BROADCAST (the dimension "
-    "side).  Single global ratio; both sums run in one partial-"
-    "aggregable pass.  (Float sums agree because both engines reduce "
-    "the same per-partition partials — pinned by the partitioning-"
-    "invariance test class, and rounded to 4 dp.)",
-)
-def q14_promo_revenue_share_q(spark: SparkSession, sf_dir: str) -> DataFrame:
-    li = load(spark, sf_dir, "lineitem")
-    p = load(spark, sf_dir, "part").select("p_partkey", "p_type")
-    rev = F.col("l_extendedprice") * (1 - F.col("l_discount"))
-    j = li.join(F.broadcast(p), li.l_partkey == p.p_partkey)
-    return j.agg(
-        F.round(
-            100.0
-            * F.sum(F.when(F.col("p_type") == "PROMO", rev).otherwise(0.0))
-            / F.sum(rev),
-            4,
-        ).alias("promo_share_pct"),
-        F.count(F.lit(1)).alias("n_lines"),
-    )
-
-
-# ===========================================================================
 # Data-quality validation report (deequ-style expectations, one pass)
 # ===========================================================================
 @register(
@@ -5553,59 +4787,6 @@ def dq_validation_report_q(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.when(F.col("metric") <= F.col("threshold"), F.lit("T"))
         .otherwise(F.lit("F"))
         .alias("pass"),
-    )
-
-
-# ===========================================================================
-# NULL-semantics suite: the ANSI null rules a migrating user relies on
-# ===========================================================================
-@register(
-    "null_semantics_suite",
-    """
-    WITH d AS (
-        SELECT o_orderkey AS k,
-               CASE WHEN o_orderkey % 7 = 0 THEN NULL
-                    ELSE o_totalprice END AS price,
-               CASE WHEN o_orderkey % 11 = 0 THEN NULL
-                    ELSE o_orderpriority END AS prio
-        FROM orders
-    )
-    SELECT COALESCE(prio, '<null>') AS prio,
-           CAST(COUNT(*) AS BIGINT) AS n_rows,
-           CAST(COUNT(price) AS BIGINT) AS n_price,
-           CAST(ROUND(SUM(price), 2) AS DOUBLE) AS sum_price,
-           CAST(ROUND(AVG(price), 6) AS DOUBLE) AS avg_price,
-           CAST(COUNT(DISTINCT price) AS BIGINT) AS n_distinct_price,
-           CAST(SUM(CASE WHEN price IS NULL THEN 1 ELSE 0 END) AS BIGINT)
-               AS n_null_price
-    FROM d GROUP BY COALESCE(prio, '<null>')
-    """,
-    doc="NULL-semantics parity suite: COUNT(*) vs COUNT(col), SUM/AVG "
-    "ignoring NULLs, COUNT(DISTINCT) excluding NULLs, and NULL group "
-    "keys grouping together — the ANSI rules a user migrating hand-"
-    "written SQL relies on, pinned across both engines in one query",
-)
-def null_semantics_suite_q(spark: SparkSession, sf_dir: str) -> DataFrame:
-    o = load(spark, sf_dir, "orders")
-    d = o.select(
-        F.when(F.col("o_orderkey") % 7 == 0, F.lit(None)).otherwise(
-            F.col("o_totalprice")
-        ).alias("price"),
-        F.when(F.col("o_orderkey") % 11 == 0, F.lit(None)).otherwise(
-            F.col("o_orderpriority")
-        ).alias("prio"),
-    )
-    return d.groupBy(
-        F.coalesce("prio", F.lit("<null>")).alias("prio")
-    ).agg(
-        F.count(F.lit(1)).alias("n_rows"),
-        F.count("price").alias("n_price"),
-        F.round(F.sum("price"), 2).alias("sum_price"),
-        F.round(F.avg("price"), 6).alias("avg_price"),
-        F.count_distinct("price").alias("n_distinct_price"),
-        F.sum(F.when(F.col("price").isNull(), 1).otherwise(0)).alias(
-            "n_null_price"
-        ),
     )
 
 
@@ -5826,138 +5007,4 @@ def triangle_count_cosupply_q(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .orderBy(F.col("n_tri").desc(), "node")
         .limit(20)
-    )
-
-
-# ===========================================================================
-# Window-function parity suite: the whole ranked-window surface at once
-# ===========================================================================
-@register(
-    "window_functions_suite",
-    """
-    SELECT CAST(o_orderkey AS BIGINT) AS okey,
-           o_orderpriority AS prio,
-           CAST(ROW_NUMBER() OVER w AS BIGINT) AS rn,
-           CAST(RANK() OVER w AS BIGINT) AS rnk,
-           CAST(DENSE_RANK() OVER w AS BIGINT) AS drnk,
-           CAST(NTILE(4) OVER w AS INT) AS quartile,
-           CAST(ROUND(PERCENT_RANK() OVER w, 6) AS DOUBLE) AS pct_rank,
-           CAST(ROUND(CUME_DIST() OVER w, 6) AS DOUBLE) AS cume,
-           CAST(LAG(o_orderkey, 2) OVER w AS BIGINT) AS lag2,
-           CAST(LEAD(o_orderkey, 3) OVER w AS BIGINT) AS lead3,
-           CAST(FIRST_VALUE(o_orderkey) OVER w AS BIGINT) AS first_k,
-           CAST(NTH_VALUE(o_orderkey, 5) OVER
-                (PARTITION BY o_orderpriority
-                 ORDER BY ROUND(o_totalprice, 2) DESC, o_orderkey
-                 ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)
-                AS BIGINT) AS nth5,
-           CAST(ROUND(SUM(o_totalprice) OVER
-                (PARTITION BY o_orderpriority
-                 ORDER BY ROUND(o_totalprice, 2) DESC, o_orderkey
-                 ROWS BETWEEN 2 PRECEDING AND 1 FOLLOWING), 2)
-                AS DOUBLE) AS sliding_sum
-    FROM orders
-    WHERE o_orderkey % 100 < 3
-    WINDOW w AS (PARTITION BY o_orderpriority
-                 ORDER BY ROUND(o_totalprice, 2) DESC, o_orderkey)
-    """,
-    doc="Window-function parity suite: row_number / rank / dense_rank / "
-    "ntile / percent_rank / cume_dist / lag / lead / first_value / "
-    "nth_value / sliding ROWS frame, all over one deterministic ordering "
-    "(rounded price, id tie-break) — the entire ranked-window surface a "
-    "migrating SQL user relies on, pinned in a single query against the "
-    "oracle",
-)
-def window_functions_suite_q(spark: SparkSession, sf_dir: str) -> DataFrame:
-    o = load(spark, sf_dir, "orders").filter(F.col("o_orderkey") % 100 < 3)
-    order_cols = [F.round("o_totalprice", 2).desc(), F.col("o_orderkey")]
-    w = W.partitionBy("o_orderpriority").orderBy(*order_cols)
-    wf = w.rowsBetween(W.unboundedPreceding, W.currentRow)
-    ws = w.rowsBetween(-2, 1)
-    return o.select(
-        F.col("o_orderkey").cast("long").alias("okey"),
-        F.col("o_orderpriority").alias("prio"),
-        F.row_number().over(w).cast("long").alias("rn"),
-        F.rank().over(w).cast("long").alias("rnk"),
-        F.dense_rank().over(w).cast("long").alias("drnk"),
-        F.ntile(4).over(w).cast("int").alias("quartile"),
-        F.round(F.percent_rank().over(w), 6).alias("pct_rank"),
-        F.round(F.cume_dist().over(w), 6).alias("cume"),
-        F.lag("o_orderkey", 2).over(w).cast("long").alias("lag2"),
-        F.lead("o_orderkey", 3).over(w).cast("long").alias("lead3"),
-        F.first("o_orderkey").over(w).cast("long").alias("first_k"),
-        F.nth_value("o_orderkey", 5).over(wf).cast("long").alias("nth5"),
-        F.round(F.sum("o_totalprice").over(ws), 2).alias("sliding_sum"),
-    )
-
-
-# ===========================================================================
-# Set-operation parity suite: INTERSECT/EXCEPT/UNION, ALL vs DISTINCT
-# ===========================================================================
-@register(
-    "set_operations_suite",
-    """
-    WITH a AS (
-        SELECT o_orderkey % 1000 AS k FROM orders WHERE o_orderkey % 3 = 0
-    ),
-    b AS (
-        SELECT o_orderkey % 1000 AS k FROM orders WHERE o_orderkey % 4 = 0
-    ),
-    parts AS (
-        SELECT 'intersect' AS op, k FROM (SELECT k FROM a INTERSECT
-                                          SELECT k FROM b)
-        UNION ALL
-        SELECT 'intersect_all', k FROM (SELECT k FROM a INTERSECT ALL
-                                        SELECT k FROM b)
-        UNION ALL
-        SELECT 'except', k FROM (SELECT k FROM a EXCEPT SELECT k FROM b)
-        UNION ALL
-        SELECT 'except_all', k FROM (SELECT k FROM a EXCEPT ALL
-                                     SELECT k FROM b)
-        UNION ALL
-        SELECT 'union_distinct', k FROM (SELECT k FROM a UNION
-                                         SELECT k FROM b)
-    )
-    SELECT op, CAST(COUNT(*) AS BIGINT) AS n_rows,
-           CAST(COUNT(DISTINCT k) AS BIGINT) AS n_distinct,
-           CAST(SUM(k) AS BIGINT) AS sum_k
-    FROM parts GROUP BY op
-    """,
-    doc="Set-operation parity suite: INTERSECT vs INTERSECT ALL "
-    "(multiplicity = min of the two sides), EXCEPT vs EXCEPT ALL "
-    "(multiplicity subtraction), UNION-distinct — the bag-vs-set "
-    "semantics every migrated SQL workload leans on, checksummed per "
-    "operator in one query",
-)
-def set_operations_suite_q(spark: SparkSession, sf_dir: str) -> DataFrame:
-    o = load(spark, sf_dir, "orders")
-    a = o.filter(F.col("o_orderkey") % 3 == 0).select(
-        (F.col("o_orderkey") % 1000).alias("k")
-    )
-    b = o.filter(F.col("o_orderkey") % 4 == 0).select(
-        (F.col("o_orderkey") % 1000).alias("k")
-    )
-    parts = (
-        a.intersect(b).select(F.lit("intersect").alias("op"), "k")
-        .unionByName(
-            a.intersectAll(b).select(F.lit("intersect_all").alias("op"), "k")
-        )
-        .unionByName(
-            a.exceptAll(b).select(F.lit("except_all").alias("op"), "k")
-        )
-        .unionByName(
-            a.distinct()
-            .exceptAll(b.distinct())
-            .select(F.lit("except").alias("op"), "k")
-        )
-        .unionByName(
-            a.union(b).distinct().select(
-                F.lit("union_distinct").alias("op"), "k"
-            )
-        )
-    )
-    return parts.groupBy("op").agg(
-        F.count(F.lit(1)).alias("n_rows"),
-        F.count_distinct("k").alias("n_distinct"),
-        F.sum("k").cast("long").alias("sum_k"),
     )

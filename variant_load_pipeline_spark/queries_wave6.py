@@ -28,9 +28,7 @@ DuckDB oracle.
                               (bit-reproducible distributed GD)
   user_event_sequences        behavior-sequence extraction
   negative_sampling_topk      deterministic never-interacted negatives
-  + engine parity: the 12 remaining TPC-H patterns live in
-  queries_tpch.py; GROUPING SETS and the datetime/array/string function
-  suites are here.
+  a_grouping_sets_counts      GROUPING SETS + grouping_id over lineitem
 
 Float discipline follows the repo-wide micro-unit idiom: any per-term
 float (log, power, ratio) is rounded to BIGINT micro-units BEFORE
@@ -1330,193 +1328,6 @@ def a_grouping_sets_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ===========================================================================
-# Datetime-function parity suite (engine-switcher coverage)
-# ===========================================================================
-@register(
-    "datetime_functions_suite",
-    """
-    SELECT event_id,
-           CAST(EXTRACT(YEAR FROM ts) AS INTEGER) AS y,
-           CAST(quarter(ts) AS INTEGER) AS q,
-           CAST(EXTRACT(MONTH FROM ts) AS INTEGER) AS mo,
-           CAST(EXTRACT(DAY FROM ts) AS INTEGER) AS d,
-           CAST(dayofyear(ts) AS INTEGER) AS doy,
-           CAST(EXTRACT(HOUR FROM ts) AS INTEGER) AS hh,
-           CAST(dayofweek(ts) + 1 AS INTEGER) AS dow,
-           strftime(date_trunc('week', ts), '%Y-%m-%d') AS week_start,
-           strftime(last_day(ts), '%Y-%m-%d') AS month_end,
-           CAST(date_diff('day', DATE '1970-01-01', CAST(ts AS DATE))
-               AS BIGINT) AS epoch_days,
-           CAST(FLOOR(epoch(ts)) AS BIGINT) AS epoch_s,
-           strftime(ts + INTERVAL 90 DAY, '%Y-%m-%d %H:%M:%S') AS plus_90d,
-           strftime(ts, '%Y-%m-%d %H') AS fmt_hour
-    FROM events
-    """,
-    doc="Datetime-function parity suite: extract fields, quarter, "
-    "day-of-year, day-of-week (DuckDB is 0-based Sunday, Spark 1-based — "
-    "the oracle shifts), Monday week truncation, month end, epoch days/"
-    "seconds (session TZ pinned UTC on both engines), interval "
-    "arithmetic, and strftime-style formatting.  Pure per-row column "
-    "expressions — zero shuffles; what an engine-switcher hits first in "
-    "any time-series workload.",
-)
-def datetime_functions_suite(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from .queries import load_events
-
-    ev = load_events(spark, sf_dir)
-    ts = F.col("ts")
-    return ev.select(
-        "event_id",
-        F.year(ts).cast("int").alias("y"),
-        F.quarter(ts).cast("int").alias("q"),
-        F.month(ts).cast("int").alias("mo"),
-        F.dayofmonth(ts).cast("int").alias("d"),
-        F.dayofyear(ts).cast("int").alias("doy"),
-        F.hour(ts).cast("int").alias("hh"),
-        F.dayofweek(ts).cast("int").alias("dow"),
-        F.date_format(F.date_trunc("week", ts), "yyyy-MM-dd")
-        .alias("week_start"),
-        F.date_format(F.last_day(ts), "yyyy-MM-dd").alias("month_end"),
-        F.datediff(F.to_date(ts), F.lit("1970-01-01").cast("date"))
-        .cast("long")
-        .alias("epoch_days"),
-        F.unix_timestamp(ts).cast("long").alias("epoch_s"),
-        F.date_format(ts + F.expr("INTERVAL 90 DAYS"), "yyyy-MM-dd HH:mm:ss")
-        .alias("plus_90d"),
-        F.date_format(ts, "yyyy-MM-dd HH").alias("fmt_hour"),
-    )
-
-
-# ===========================================================================
-# Array-function parity suite (engine-switcher coverage)
-# ===========================================================================
-@register(
-    "array_functions_suite",
-    """
-    WITH w AS (
-        SELECT doc_id,
-               CASE WHEN trim(regexp_replace(lower(coalesce(text, '')),
-                         '[^a-z0-9]+', ' ', 'g')) = ''
-                    THEN CAST([] AS VARCHAR[])
-                    ELSE regexp_split_to_array(trim(regexp_replace(
-                         lower(coalesce(text, '')), '[^a-z0-9]+', ' ', 'g')),
-                         ' ') END AS ws
-        FROM documents
-    )
-    SELECT doc_id,
-           CAST(len(ws) AS INTEGER) AS n,
-           CAST(len(list_distinct(ws)) AS INTEGER) AS nd,
-           COALESCE(array_to_string(list_slice(ws, 1, 3), ' '), '')
-               AS first3,
-           CASE WHEN len(ws) > 0 THEN list_sort(ws)[1] ELSE '' END
-               AS min_word,
-           CASE WHEN len(ws) > 0
-                THEN list_aggregate(ws, 'max') ELSE '' END AS max_word,
-           CASE WHEN list_contains(ws, 'the') THEN 'T' ELSE 'F' END
-               AS has_the,
-           CASE WHEN len(ws) > 0 THEN ws[len(ws)] ELSE '' END AS last_word,
-           CAST(len(list_filter(ws, x -> len(x) >= 5)) AS INTEGER)
-               AS n_long,
-           COALESCE(array_to_string(list_sort(list_distinct(
-               list_filter(ws, x -> len(x) <= 3))), ','), '') AS short_set
-    FROM w
-    """,
-    doc="Array-function parity suite over the per-doc word array: size, "
-    "distinct size, slicing + joining, min/max element, membership, "
-    "last element, lambda filter counting, and a sorted-distinct-filter "
-    "composition — the higher-order-function surface (transform/filter/"
-    "aggregate) an engine-switcher uses for nested data, all JVM-side "
-    "expressions with zero shuffles.",
-)
-def array_functions_suite(spark: SparkSession, sf_dir: str) -> DataFrame:
-    d = load(spark, sf_dir, "documents")
-    w = d.select("doc_id", T.words(F.col("text")).alias("ws"))
-    has = F.array_contains("ws", "the")
-    nonempty = F.size("ws") > 0
-    return w.select(
-        "doc_id",
-        F.size("ws").cast("int").alias("n"),
-        F.size(F.array_distinct("ws")).cast("int").alias("nd"),
-        F.array_join(F.slice("ws", 1, 3), " ").alias("first3"),
-        F.when(nonempty, F.element_at(F.array_sort("ws"), 1))
-        .otherwise(F.lit(""))
-        .alias("min_word"),
-        F.when(nonempty, F.array_max("ws")).otherwise(F.lit(""))
-        .alias("max_word"),
-        F.when(has, F.lit("T")).otherwise(F.lit("F")).alias("has_the"),
-        F.when(nonempty, F.element_at("ws", -1)).otherwise(F.lit(""))
-        .alias("last_word"),
-        F.size(F.filter("ws", lambda x: F.length(x) >= 5))
-        .cast("int")
-        .alias("n_long"),
-        F.array_join(
-            F.array_sort(
-                F.array_distinct(F.filter("ws", lambda x: F.length(x) <= 3))
-            ),
-            ",",
-        ).alias("short_set"),
-    )
-
-
-# ===========================================================================
-# String-function parity suite (engine-switcher coverage)
-# ===========================================================================
-@register(
-    "string_functions_suite",
-    """
-    SELECT p_partkey,
-           CAST(length(p_name) AS INTEGER) AS ln,
-           upper(p_name) AS up,
-           substr(p_name, 2, 5) AS sub25,
-           replace(p_name, ' ', '_') AS repl,
-           split_part(p_name, ' ', 1) AS first_word,
-           split_part(p_name, ' ', -1) AS last_word,
-           CAST(strpos(p_name, 'a') AS INTEGER) AS pos_a,
-           lpad(p_brand, 12, '.') AS padded,
-           repeat(left(p_name, 2), 3) AS rep2x3,
-           reverse(p_name) AS rev,
-           translate(p_name, 'aeiou', 'AEIOU') AS vowels_up,
-           CAST(levenshtein(p_name, p_brand) AS INTEGER) AS lev,
-           concat_ws('|', p_brand, p_type, CAST(p_size AS VARCHAR)) AS joined,
-           CASE WHEN p_name LIKE 'small%' THEN 'T' ELSE 'F' END AS is_small,
-           regexp_extract(p_name, '([a-z]+)$', 1) AS last_token
-    FROM part
-    """,
-    doc="String-function parity suite over part names: length, case, "
-    "substring, replace, split_part (positive AND negative index), "
-    "strpos, padding, repeat, reverse, translate, levenshtein, "
-    "concat_ws, LIKE-prefix, and regexp group extraction — the scalar "
-    "string surface an engine-switcher exercises first.  Pure per-row "
-    "expressions, zero shuffles.",
-)
-def string_functions_suite(spark: SparkSession, sf_dir: str) -> DataFrame:
-    p = load(spark, sf_dir, "part")
-    nm = F.col("p_name")
-    return p.select(
-        "p_partkey",
-        F.length(nm).cast("int").alias("ln"),
-        F.upper(nm).alias("up"),
-        F.substring(nm, 2, 5).alias("sub25"),
-        F.replace(nm, F.lit(" "), F.lit("_")).alias("repl"),
-        F.split_part(nm, F.lit(" "), F.lit(1)).alias("first_word"),
-        F.split_part(nm, F.lit(" "), F.lit(-1)).alias("last_word"),
-        F.instr(nm, "a").cast("int").alias("pos_a"),
-        F.lpad(F.col("p_brand"), 12, ".").alias("padded"),
-        F.repeat(F.substring(nm, 1, 2), 3).alias("rep2x3"),
-        F.reverse(nm).alias("rev"),
-        F.translate(nm, "aeiou", "AEIOU").alias("vowels_up"),
-        F.levenshtein(nm, F.col("p_brand")).cast("int").alias("lev"),
-        F.concat_ws(
-            "|", F.col("p_brand"), F.col("p_type"),
-            F.col("p_size").cast("string"),
-        ).alias("joined"),
-        F.when(nm.like("small%"), F.lit("T")).otherwise(F.lit("F"))
-        .alias("is_small"),
-        F.regexp_extract(nm, "([a-z]+)$", 1).alias("last_token"),
-    )
-
-
-# ===========================================================================
 # Behavior-sequence extraction: ordered per-user event-type sequences
 # ===========================================================================
 @register(
@@ -1660,117 +1471,6 @@ def negative_sampling_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
         .filter(F.col("rk") <= 5)
         .select("user_id", "item_id", F.col("rk").cast("long").alias("rk"))
     )
-
-
-# ===========================================================================
-# Join-type parity suite: all six join types over null-bearing keys
-# ===========================================================================
-_JT_SQL = """
-    a AS (
-        SELECT c_custkey AS id,
-               CASE WHEN c_custkey % 11 = 0 THEN NULL
-                    ELSE c_custkey % 7 END AS k
-        FROM customer WHERE c_custkey <= 200
-    ),
-    b AS (
-        SELECT s_suppkey AS sid,
-               CASE WHEN s_suppkey % 5 = 0 THEN NULL
-                    ELSE s_suppkey % 7 END AS k
-        FROM supplier
-    )
-"""
-
-
-@register(
-    "join_types_suite",
-    f"""
-    WITH {_JT_SQL}
-    SELECT 'inner' AS join_type,
-           CAST(COUNT(*) AS BIGINT) AS n_rows,
-           CAST(SUM(CASE WHEN sid IS NULL THEN 1 ELSE 0 END) AS BIGINT)
-               AS n_unmatched
-    FROM a JOIN b USING (k)
-    UNION ALL
-    SELECT 'left', CAST(COUNT(*) AS BIGINT),
-           CAST(SUM(CASE WHEN sid IS NULL THEN 1 ELSE 0 END) AS BIGINT)
-    FROM a LEFT JOIN b USING (k)
-    UNION ALL
-    SELECT 'right', CAST(COUNT(*) AS BIGINT),
-           CAST(SUM(CASE WHEN id IS NULL THEN 1 ELSE 0 END) AS BIGINT)
-    FROM a RIGHT JOIN b USING (k)
-    UNION ALL
-    SELECT 'full', CAST(COUNT(*) AS BIGINT),
-           CAST(SUM(CASE WHEN id IS NULL OR sid IS NULL
-                    THEN 1 ELSE 0 END) AS BIGINT)
-    FROM a FULL JOIN b USING (k)
-    UNION ALL
-    SELECT 'semi', CAST(COUNT(*) AS BIGINT), CAST(0 AS BIGINT)
-    FROM a WHERE EXISTS (SELECT 1 FROM b WHERE b.k = a.k)
-    UNION ALL
-    SELECT 'anti', CAST(COUNT(*) AS BIGINT), CAST(0 AS BIGINT)
-    FROM a WHERE NOT EXISTS (SELECT 1 FROM b WHERE b.k = a.k)
-    """,
-    doc="Join-type parity suite: inner/left/right/full/semi/anti over "
-    "keys that are NULL on both sides (NULL never equi-matches; NULL-key "
-    "rows surface only through the outer sides and the anti join) — the "
-    "semantics every engine-switcher trips on once.  Six bounded "
-    "aggregates unioned; each join is a broadcast hash join on the "
-    "7-value key.",
-)
-def join_types_suite(spark: SparkSession, sf_dir: str) -> DataFrame:
-    c = load(spark, sf_dir, "customer").filter(F.col("c_custkey") <= 200)
-    a = c.select(
-        F.col("c_custkey").alias("id"),
-        F.when(F.col("c_custkey") % 11 == 0, F.lit(None)).otherwise(
-            F.col("c_custkey") % 7
-        ).alias("k"),
-    )
-    b = load(spark, sf_dir, "supplier").select(
-        F.col("s_suppkey").alias("sid"),
-        F.when(F.col("s_suppkey") % 5 == 0, F.lit(None)).otherwise(
-            F.col("s_suppkey") % 7
-        ).alias("k"),
-    )
-
-    def agg_row(df, jt, unmatched_col):
-        return df.agg(
-            F.lit(jt).alias("join_type"),
-            F.count(F.lit(1)).alias("n_rows"),
-            (
-                F.sum(
-                    F.when(F.col(unmatched_col).isNull(), 1).otherwise(0)
-                ).cast("long")
-                if unmatched_col
-                else F.lit(0).cast("long")
-            ).alias("n_unmatched"),
-        )
-
-    full_unmatched = (
-        F.sum(
-            F.when(
-                F.col("id").isNull() | F.col("sid").isNull(), 1
-            ).otherwise(0)
-        ).cast("long")
-    )
-    inner = agg_row(a.join(b, "k"), "inner", None).select(
-        "join_type", "n_rows", F.lit(0).cast("long").alias("n_unmatched")
-    )
-    left = agg_row(a.join(b, "k", "left"), "left", "sid")
-    right = agg_row(a.join(b, "k", "right"), "right", "id")
-    full = a.join(b, "k", "full").agg(
-        F.lit("full").alias("join_type"),
-        F.count(F.lit(1)).alias("n_rows"),
-        full_unmatched.alias("n_unmatched"),
-    )
-    semi = agg_row(a.join(b, "k", "leftsemi"), "semi", None).select(
-        "join_type", "n_rows", F.lit(0).cast("long").alias("n_unmatched")
-    )
-    anti = agg_row(a.join(b, "k", "leftanti"), "anti", None).select(
-        "join_type", "n_rows", F.lit(0).cast("long").alias("n_unmatched")
-    )
-    return inner.unionAll(left).unionAll(right).unionAll(full).unionAll(
-        semi
-    ).unionAll(anti)
 
 
 # ===========================================================================

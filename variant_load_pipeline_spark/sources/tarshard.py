@@ -12,9 +12,9 @@ groupBy on the (shard-local) sample key.
 
 At 100 TB: shard files never concatenate on one executor — each is an
 independent task; member payloads stream out as Arrow record batches,
-so executor memory holds one shard + one batch, not the corpus.  The
-decode of payload bytes (image/audio) belongs to the downstream
-multimodal operators (multimodal.binary_ops), not the scan.
+so executor memory holds one shard + one batch, not the corpus.  Payload
+bytes stay opaque binary: this module scans, it decodes no image or
+audio format.
 """
 
 from __future__ import annotations

@@ -1,119 +1,9 @@
-"""Multimodal binary-column tests: real PNG codec + Arrow plumbing."""
+"""Pure-stdlib PNG codec tests (multimodal/png.py): encode/decode round
+trip, every scanline filter, palette expansion, bad input."""
 
 from __future__ import annotations
 
-import pytest
-from pyspark.sql import functions as F
 
-from variant_load_pipeline_spark.multimodal import binary_ops as B
-
-
-def _media(spark):
-    rows = [
-        (1, "image", bytes(range(200))),
-        (2, "image", bytes(range(200))),   # exact dup of 1
-        (3, "image", b"\x01\x02\x03" * 1000),
-        (4, "image", b""),
-    ]
-    return spark.createDataFrame(rows, ["media_id", "media_type", "payload"])
-
-
-def test_metadata_and_exact_dedup(spark):
-    df = B.with_media_metadata(_media(spark))
-    rows = {r["media_id"]: r for r in df.collect()}
-    assert rows[1]["byte_len"] == 200
-    assert rows[1]["content_hash"] == rows[2]["content_hash"]
-    assert rows[1]["content_hash"] != rows[3]["content_hash"]
-
-    groups = B.exact_media_dedup(df).collect()
-    by_canon = {r["canonical_media_id"]: r["n_copies"] for r in groups}
-    assert by_canon[1] == 2 and by_canon[3] == 1
-
-
-def test_decode_images_fake_codec(spark):
-    df = _media(spark)
-    feats = {
-        r["media_id"]: r
-        for r in B.decode_images(df, codec="fake").collect()
-    }
-    assert len(feats) == 4
-    assert feats[1]["width"] == 1 + (200 % 64)
-    assert feats[1]["n_channels"] == 3
-    assert feats[1]["mean_intensity"] == feats[2]["mean_intensity"]
-    assert feats[4]["mean_intensity"] == 0.0
-
-
-def test_real_codec_raises(spark):
-    with pytest.raises(NotImplementedError):
-        B.decode_images(_media(spark), codec="pillow")
-
-
-def test_frame_sample_plan(spark):
-    df = B.with_media_metadata(_media(spark))
-    frames = B.frame_sample_plan(df, every_nth=1).collect()
-    per_media = {}
-    for r in frames:
-        per_media.setdefault(r["media_id"], []).append(r["frame_idx"])
-    # media 3 has 3000 bytes -> 3 frames
-    assert per_media[3] == [0, 1, 2]
-    assert per_media[4] == [0]
-
-
-def test_resize_images_batch_contract(spark):
-    from variant_load_pipeline_spark.multimodal import binary_ops as B
-
-    df = spark.createDataFrame(
-        [(1, bytearray(b"abc")), (2, bytearray(b""))],
-        "media_id long, payload binary",
-    )
-    out = {
-        r["media_id"]: r
-        for r in B.resize_images(df, 4, 4, codec="fake").collect()
-    }
-    assert len(out[1]["payload"]) == 4 * 4 * 3
-    assert out[1]["width"] == 4 and out[1]["height"] == 4
-    assert len(out[2]["payload"]) == 0 or len(out[2]["payload"]) == 4 * 4 * 3
-
-
-@pytest.mark.slow
-def test_extract_features_feeds_similarity(spark):
-    from pyspark.sql import functions as F
-
-    from variant_load_pipeline_spark.multimodal import binary_ops as B
-    from variant_load_pipeline_spark.operators.similarity import cosine
-
-    df = spark.createDataFrame(
-        [(1, bytearray(b"aaa")), (2, bytearray(b"aaa")), (3, bytearray(b"zzz"))],
-        "media_id long, payload binary",
-    )
-    emb = B.extract_features(df)
-    rows = {r["media_id"]: r["embedding"] for r in emb.collect()}
-    assert len(rows[1]) == B.EMBED_DIM
-    assert rows[1] == rows[2] != rows[3]  # deterministic, content-addressed
-    # the embedding column plugs straight into the cosine operators
-    a = emb.select(F.col("media_id").alias("ia"), F.col("embedding").alias("va"))
-    b = emb.select(F.col("media_id").alias("ib"), F.col("embedding").alias("vb"))
-    sims = a.crossJoin(b).filter(F.col("ia") < F.col("ib")).select(
-        "ia", "ib", F.round(cosine(F.col("va"), F.col("vb")), 6).alias("sim")
-    ).collect()
-    by_pair = {(r["ia"], r["ib"]): r["sim"] for r in sims}
-    assert by_pair[(1, 2)] == 1.0
-    assert by_pair[(1, 3)] < 1.0
-
-
-def test_extract_features_real_codec_raises(spark):
-    import pytest as _pytest
-
-    from variant_load_pipeline_spark.multimodal import binary_ops as B
-
-    df = spark.createDataFrame([(1, bytearray(b"x"))], "media_id long, payload binary")
-    with _pytest.raises(NotImplementedError):
-        B.extract_features(df, codec="onnx")
-
-
-# ---------------------------------------------------------------------------
-# real PNG codec (multimodal/png.py)
-# ---------------------------------------------------------------------------
 def _rand_img(shape, seed):
     import numpy as np
 
@@ -220,411 +110,3 @@ def test_png_decode_rejects_garbage():
     with _pytest.raises(ValueError):
         png.decode_png(b"not a png at all")
 
-
-def test_decode_images_real_png_codec(spark):
-    import numpy as np
-
-    from variant_load_pipeline_spark.multimodal import png
-
-    imgs = {
-        1: _rand_img((8, 12, 3), seed=1),
-        2: _rand_img((20, 5, 1), seed=2),
-        3: _rand_img((6, 6, 4), seed=3),
-    }
-    df = spark.createDataFrame(
-        [(k, bytearray(png.encode_png(v))) for k, v in imgs.items()],
-        "media_id long, payload binary",
-    )
-    feats = {r["media_id"]: r for r in B.decode_images(df, codec="png").collect()}
-    for k, v in imgs.items():
-        want = v if v.ndim == 3 else v[:, :, None]
-        assert feats[k]["height"] == want.shape[0]
-        assert feats[k]["width"] == want.shape[1]
-        assert feats[k]["n_channels"] == want.shape[2]
-        assert abs(feats[k]["mean_intensity"] - float(want.mean())) < 1e-4
-
-
-def test_resize_images_real_png_codec(spark):
-    import numpy as np
-
-    from variant_load_pipeline_spark.multimodal import png
-
-    img = _rand_img((16, 16, 3), seed=9)
-    df = spark.createDataFrame(
-        [(1, bytearray(png.encode_png(img)))], "media_id long, payload binary"
-    )
-    out = B.resize_images(df, width=4, height=8, codec="png").collect()[0]
-    got = png.decode_png(bytes(out["payload"]))
-    assert got.shape == (8, 4, 3)
-    assert np.array_equal(got, png.resize_nearest(img, 4, 8))
-
-
-# ---------------------------------------------------------------------------
-# real WAV codec (multimodal/wav.py)
-# ---------------------------------------------------------------------------
-def test_wav_roundtrip_widths():
-    import numpy as np
-
-    from variant_load_pipeline_spark.multimodal import wav
-
-    rng = np.random.default_rng(5)
-    for width, lo, hi in [(1, 0, 256), (2, -32768, 32768), (4, -2**31, 2**31)]:
-        a = rng.integers(lo, hi, size=(100, 2), dtype=np.int64)
-        data = wav.encode_wav(a, 16000, sampwidth=width)
-        back, rate = wav.decode_wav(data)
-        assert rate == 16000 and back.shape == (100, 2)
-        assert np.array_equal(back.astype(np.int64), a)
-
-
-def test_wav_features():
-    import numpy as np
-
-    from variant_load_pipeline_spark.multimodal import wav
-
-    a = np.array([[-100], [100], [0], [50]], dtype=np.int64)
-    f = wav.wav_features(wav.encode_wav(a, 8000))
-    assert f["n_frames"] == 4 and f["n_channels"] == 1
-    assert f["sample_rate"] == 8000 and f["duration_ms"] == 0
-    assert f["mean_abs_amplitude"] == 62.5
-
-
-def test_decode_audio_through_spark(spark):
-    import numpy as np
-
-    from variant_load_pipeline_spark.multimodal import binary_ops as B2
-    from variant_load_pipeline_spark.multimodal import wav
-
-    rng = np.random.default_rng(11)
-    rows = []
-    want = {}
-    for mid in (1, 2):
-        a = rng.integers(-1000, 1000, size=(320 * mid, mid), dtype=np.int64)
-        rows.append((mid, bytearray(wav.encode_wav(a, 16000))))
-        want[mid] = (320 * mid, mid, round(float(np.abs(a).mean()), 6))
-    df = spark.createDataFrame(rows, "media_id long, payload binary")
-    got = {r["media_id"]: r for r in B2.decode_audio(df).collect()}
-    for mid, (nf, nc, amp) in want.items():
-        assert got[mid]["n_frames"] == nf
-        assert got[mid]["n_channels"] == nc
-        assert abs(got[mid]["mean_abs_amplitude"] - amp) < 1e-6
-
-
-# ---------------------------------------------------------------------------
-# real baseline JPEG codec (multimodal/jpeg.py)
-# ---------------------------------------------------------------------------
-def _gradient_img(h, w, channels, base=40):
-    """Smooth linear ramp — low-frequency content whose JPEG error stays
-    within a couple of intensity levels at quality 90."""
-    import numpy as np
-
-    y, x, c = np.meshgrid(
-        np.arange(h), np.arange(w), np.arange(max(1, channels)), indexing="ij"
-    )
-    img = np.clip(base + 2 * x + 3 * y + 10 * c, 0, 255).astype("uint8")
-    return img[:, :, 0] if channels == 1 else img
-
-
-def test_jpeg_roundtrip_grayscale_and_rgb():
-    import numpy as np
-
-    from variant_load_pipeline_spark.multimodal import jpeg
-
-    for h, w, c in [(16, 12, 3), (8, 8, 1), (9, 13, 3), (1, 1, 1), (5, 3, 3)]:
-        img = _gradient_img(h, w, c)
-        back = jpeg.decode_jpeg(jpeg.encode_jpeg(img, quality=90))
-        assert back.shape == img.shape
-        err = np.abs(back.astype(np.int64) - img.astype(np.int64))
-        assert err.max() <= 3  # lossy but bounded on smooth content
-
-
-def test_jpeg_roundtrip_noise_bounded_error():
-    import numpy as np
-
-    from variant_load_pipeline_spark.multimodal import jpeg
-
-    rng = np.random.default_rng(7)
-    img = rng.integers(0, 256, size=(24, 17, 3), dtype=np.int64).astype("uint8")
-    back = jpeg.decode_jpeg(jpeg.encode_jpeg(img, quality=95))
-    assert back.shape == img.shape
-    err = np.abs(back.astype(np.float64) - img.astype(np.float64))
-    assert err.mean() < 8.0  # white noise is JPEG's worst case; mean bounded
-
-
-def test_jpeg_deterministic():
-    from variant_load_pipeline_spark.multimodal import jpeg
-
-    img = _gradient_img(16, 16, 3)
-    a = jpeg.encode_jpeg(img, quality=90)
-    b = jpeg.encode_jpeg(img, quality=90)
-    assert a == b  # both directions deterministic -> reproducible oracles
-
-
-def test_jpeg_rejects_progressive_subsampled_garbage():
-    import pytest as _pytest
-
-    from variant_load_pipeline_spark.multimodal import jpeg
-
-    with _pytest.raises(ValueError):
-        jpeg.decode_jpeg(b"not a jpeg")
-
-    data = bytearray(jpeg.encode_jpeg(_gradient_img(8, 8, 3)))
-    i = data.find(b"\xff\xc0")
-    prog = bytearray(data)
-    prog[i + 1] = 0xC2  # SOF0 -> SOF2 (progressive)
-    with _pytest.raises(ValueError, match="baseline"):
-        jpeg.decode_jpeg(bytes(prog))
-
-    sub = bytearray(data)
-    sub[i + 2 + 2 + 1 + 2 + 2 + 1 + 1] = 0x22  # 3-component 2x2 sampling
-    with _pytest.raises(ValueError, match="subsampling"):
-        jpeg.decode_jpeg(bytes(sub))
-
-
-def test_jpeg_grayscale_ignores_sampling_factors():
-    import numpy as np
-
-    from variant_load_pipeline_spark.multimodal import jpeg
-
-    data = bytearray(jpeg.encode_jpeg(_gradient_img(16, 12, 1)))
-    want = jpeg.decode_jpeg(bytes(data))
-    i = data.find(b"\xff\xc0")
-    data[i + 2 + 2 + 1 + 2 + 2 + 1 + 1] = 0x22  # odd factors, 1 component
-    assert np.array_equal(jpeg.decode_jpeg(bytes(data)), want)
-
-
-def test_decode_images_real_jpeg_codec(spark):
-    import numpy as np
-
-    from variant_load_pipeline_spark.multimodal import jpeg
-
-    imgs = {
-        1: _gradient_img(16, 12, 3),
-        2: _gradient_img(20, 5, 1),
-        3: _gradient_img(9, 13, 3, base=80),
-    }
-    df = spark.createDataFrame(
-        [(k, bytearray(jpeg.encode_jpeg(v))) for k, v in imgs.items()],
-        "media_id long, payload binary",
-    )
-    feats = {
-        r["media_id"]: r for r in B.decode_images(df, codec="jpeg").collect()
-    }
-    for k, v in imgs.items():
-        want = v if v.ndim == 3 else v[:, :, None]
-        assert feats[k]["height"] == want.shape[0]
-        assert feats[k]["width"] == want.shape[1]
-        assert feats[k]["n_channels"] == want.shape[2]
-        assert abs(feats[k]["mean_intensity"] - float(want.mean())) < 2.0
-
-
-def test_resize_images_real_jpeg_codec(spark):
-    import numpy as np
-
-    from variant_load_pipeline_spark.multimodal import jpeg, png
-
-    img = _gradient_img(16, 16, 3)
-    df = spark.createDataFrame(
-        [(1, bytearray(jpeg.encode_jpeg(img, quality=90)))],
-        "media_id long, payload binary",
-    )
-    out = B.resize_images(df, width=4, height=8, codec="jpeg").collect()[0]
-    got = jpeg.decode_jpeg(bytes(out["payload"]))
-    assert got.shape == (8, 4, 3)
-    want = png.resize_nearest(img, 4, 8).astype(np.float64)
-    assert np.abs(got.astype(np.float64) - want).mean() < 6.0
-
-
-# ---------------------------------------------------------------------------
-# MPEG audio frame-header metadata (multimodal/mp3.py)
-# ---------------------------------------------------------------------------
-def test_mp3_metadata_basic_stream():
-    from variant_load_pipeline_spark.multimodal import mp3
-
-    # MPEG1 Layer III, 128 kbps (idx 9), 44100 Hz (idx 0), stereo
-    data = mp3.make_frames(38, bitrate_index=9, sample_rate_index=0)
-    m = mp3.mp3_metadata(data)
-    assert m["n_frames"] == 38
-    assert m["sample_rate"] == 44100 and m["n_channels"] == 2
-    assert m["bitrate_kbps"] == 128
-    assert m["layer"] == 3 and m["version"] == "MPEG1"
-    assert m["duration_ms"] == 38 * 1152 * 1000 // 44100
-    assert m["clean_eof"] == "T"
-
-
-def test_mp3_metadata_id3v2_skip_and_mono_mpeg2():
-    from variant_load_pipeline_spark.multimodal import mp3
-
-    # MPEG2 Layer III (576 samples/frame), 64 kbps (idx 8), 22050 Hz,
-    # mono, behind a 200-byte ID3v2 tag
-    data = mp3.make_frames(
-        10, bitrate_index=8, sample_rate_index=0, version_bits=2,
-        mono=True, id3v2_bytes=200,
-    )
-    m = mp3.mp3_metadata(data)
-    assert m["n_frames"] == 10 and m["n_channels"] == 1
-    assert m["version"] == "MPEG2" and m["sample_rate"] == 22050
-    assert m["bitrate_kbps"] == 64
-    assert m["duration_ms"] == 10 * 576 * 1000 // 22050
-    assert m["clean_eof"] == "T"
-
-
-def test_mp3_metadata_layer1_and_layer2():
-    from variant_load_pipeline_spark.multimodal import mp3
-
-    m1 = mp3.mp3_metadata(
-        mp3.make_frames(5, bitrate_index=9, sample_rate_index=1, layer=1)
-    )
-    assert m1["layer"] == 1 and m1["n_frames"] == 5
-    assert m1["duration_ms"] == 5 * 384 * 1000 // 48000
-    m2 = mp3.mp3_metadata(
-        mp3.make_frames(5, bitrate_index=9, sample_rate_index=1, layer=2)
-    )
-    assert m2["layer"] == 2 and m2["duration_ms"] == 5 * 1152 * 1000 // 48000
-
-
-def test_mp3_metadata_corrupt_flags_not_raises():
-    from variant_load_pipeline_spark.multimodal import mp3
-
-    good = mp3.make_frames(4)
-    assert mp3.mp3_metadata(good + b"garbage!")["clean_eof"] == "F"
-    truncated = good[:-10]
-    m = mp3.mp3_metadata(truncated)
-    assert m["clean_eof"] == "F" and m["n_frames"] == 3
-    assert mp3.mp3_metadata(b"not audio at all")["clean_eof"] == "F"
-    # zero decodable frames is never clean: empty, tag-only, bad ID3 size
-    empty = mp3.mp3_metadata(b"")
-    assert empty["n_frames"] == 0 and empty["clean_eof"] == "F"
-    tag_only = mp3.make_frames(0, id3v2_bytes=64)
-    assert mp3.mp3_metadata(tag_only)["clean_eof"] == "F"
-    # ID3v1 trailer is a clean ending
-    assert mp3.mp3_metadata(good + b"TAG" + b"\x00" * 125)["clean_eof"] == "T"
-
-
-def test_audio_metadata_through_spark(spark):
-    from variant_load_pipeline_spark.multimodal import binary_ops as B3
-    from variant_load_pipeline_spark.multimodal import mp3
-
-    rows = [
-        (1, bytearray(mp3.make_frames(20))),
-        (2, bytearray(mp3.make_frames(7, bitrate_index=11))),
-        (3, bytearray(b"broken")),
-    ]
-    df = spark.createDataFrame(rows, "media_id long, payload binary")
-    got = {r["media_id"]: r for r in B3.audio_metadata(df).collect()}
-    assert got[1]["n_frames"] == 20 and got[1]["bitrate_kbps"] == 128
-    assert got[2]["n_frames"] == 7 and got[2]["bitrate_kbps"] == 192
-    assert got[3]["clean_eof"] == "F" and got[3]["n_frames"] == 0
-
-
-# ---------------------------------------------------------------------------
-# ISO BMFF (MP4) container metadata (multimodal/mp4.py)
-# ---------------------------------------------------------------------------
-def test_mp4_metadata_layouts():
-    from variant_load_pipeline_spark.multimodal import mp4
-
-    m = mp4.mp4_metadata(
-        mp4.make_mp4(90500, video=True, audio=True, width=1280, height=720,
-                     codec=b"hvc1")
-    )
-    assert m["duration_ms"] == 90500 and m["n_tracks"] == 2
-    assert (m["width"], m["height"]) == (1280, 720)
-    assert m["video_codec"] == "hvc1"
-    assert m["has_video"] == "T" and m["has_audio"] == "T"
-    assert m["clean_eof"] == "T"
-
-    a = mp4.mp4_metadata(mp4.make_mp4(1000, video=False, audio=True))
-    assert a["has_video"] == "F" and a["n_tracks"] == 1 and a["width"] == 0
-
-
-def test_mp4_metadata_corrupt_flags():
-    from variant_load_pipeline_spark.multimodal import mp4
-
-    good = mp4.make_mp4(5000)
-    assert mp4.mp4_metadata(b"not a video")["clean_eof"] == "F"
-    assert mp4.mp4_metadata(good[:40])["clean_eof"] == "F"
-    assert mp4.mp4_metadata(b"")["clean_eof"] == "F"
-
-
-def test_video_metadata_through_spark(spark):
-    from variant_load_pipeline_spark.multimodal import binary_ops as B4
-    from variant_load_pipeline_spark.multimodal import mp4
-
-    rows = [
-        (1, bytearray(mp4.make_mp4(60000, width=640, height=360))),
-        (2, bytearray(mp4.make_mp4(2500, video=False, audio=True))),
-        (3, bytearray(b"junk")),
-    ]
-    df = spark.createDataFrame(rows, "media_id long, payload binary")
-    got = {r["media_id"]: r for r in B4.video_metadata(df).collect()}
-    assert got[1]["duration_ms"] == 60000 and got[1]["video_codec"] == "avc1"
-    assert got[2]["has_audio"] == "T" and got[2]["has_video"] == "F"
-    assert got[3]["clean_eof"] == "F"
-
-
-def test_decode_images_on_error_null(spark):
-    from variant_load_pipeline_spark.multimodal import binary_ops as B5
-    from variant_load_pipeline_spark.multimodal import jpeg
-
-    rows = [
-        (1, bytearray(jpeg.encode_jpeg(_gradient_img(8, 8, 3)))),
-        (2, bytearray(b"not a jpeg")),
-        (3, None),
-    ]
-    df = spark.createDataFrame(rows, "media_id long, payload binary")
-    got = {
-        r["media_id"]: r
-        for r in B5.decode_images(df, codec="jpeg", on_error="null").collect()
-    }
-    assert got[1]["width"] == 8
-    assert got[2]["width"] is None and got[3]["width"] is None
-    # default mode still fails the job on a bad payload
-    import pytest as _pytest
-
-    with _pytest.raises(Exception):
-        B5.decode_images(df, codec="jpeg").collect()
-
-
-def test_mp4_metadata_nonftyp_leading_boxes():
-    import struct
-
-    from variant_load_pipeline_spark.multimodal import mp4
-
-    good = mp4.make_mp4(5000)
-    # a spec-valid file led by a free box instead of ftyp
-    free = struct.pack(">I4s", 16, b"free") + b"\x00" * 8
-    m = mp4.mp4_metadata(free + good[good.index(b"moov") - 4 :])
-    assert m["clean_eof"] == "T" and m["duration_ms"] == 5000
-    # plausible single box but no moov: not a stream
-    assert mp4.mp4_metadata(free)["clean_eof"] == "F"
-
-
-def test_image_dhash_invariances(spark):
-    import numpy as np
-
-    from variant_load_pipeline_spark.multimodal.binary_ops import image_dhash
-    from variant_load_pipeline_spark.multimodal.png import encode_png
-
-    y, x, c = np.meshgrid(
-        np.arange(16), np.arange(20), np.arange(3), indexing="ij"
-    )
-    base = ((7 + 3 * x + 5 * y + 11 * c) % 200).astype("uint8")
-    brighter = (base + 40).astype("uint8")       # uniform brightness shift
-    noisy = base.copy()
-    noisy[3, 4, :] += 5                          # one-pixel perturbation
-    inverted = (199 - base).astype("uint8")      # gradient flip
-    df = spark.createDataFrame(
-        [
-            (0, bytearray(encode_png(base))),
-            (1, bytearray(encode_png(brighter))),
-            (2, bytearray(encode_png(noisy))),
-            (3, bytearray(encode_png(inverted))),
-        ],
-        "media_id long, payload binary",
-    )
-    got = {r["media_id"]: r["dhash"] for r in image_dhash(df).collect()}
-    # dHash is gradient-based: uniform brightness shifts are invisible
-    assert got[0] == got[1]
-    # a tiny perturbation moves at most a few bits
-    assert bin((got[0] ^ got[2]) & (2**64 - 1)).count("1") <= 4
-    # inverting the image flips (nearly) every gradient
-    assert bin((got[0] ^ got[3]) & (2**64 - 1)).count("1") >= 48

@@ -1,1 +1,2 @@
-from . import binary_ops  # noqa: F401
+"""Pure-stdlib media codecs.  Only the PNG codec (`png`) is left; no query
+or chain tool calls it."""

@@ -8,14 +8,10 @@ scanline filters (None/Sub/Up/Average/Paeth) on decode.  The encoder
 writes filter-0 scanlines (always valid PNG; optimal compression is a
 non-goal for a feature-extraction pipeline).
 
-Scale stance: this module is the per-row kernel invoked inside Arrow
-batches (binary_ops.decode_images / resize_images with codec='png');
-everything around it — batching, byte-aware partitioning, fixed-schema
-outputs — is the Spark-side contract.  Sub-filter rows devectorize to a
-grouped cumsum; Average/Paeth rows are inherently sequential per byte
-(each output depends on the previous reconstructed byte) and run as
-per-row Python loops, which is the accepted cost of those filters
-without a C codec.
+Sub-filter rows devectorize to a grouped cumsum; Average/Paeth rows are
+inherently sequential per byte (each output depends on the previous
+reconstructed byte) and run as per-row Python loops, which is the
+accepted cost of those filters without a C codec.
 """
 
 from __future__ import annotations
@@ -151,10 +147,3 @@ def encode_png(arr: np.ndarray, compress_level: int = 6) -> bytes:
         + _chunk(b"IEND", b"")
     )
 
-
-def resize_nearest(img: np.ndarray, width: int, height: int) -> np.ndarray:
-    """Nearest-neighbor resize of (H, W[, C]) to (height, width[, C])."""
-    h, w = img.shape[:2]
-    ys = (np.arange(height, dtype=np.int64) * h) // height
-    xs = (np.arange(width, dtype=np.int64) * w) // width
-    return img[ys][:, xs]
